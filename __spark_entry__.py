@@ -1287,6 +1287,7 @@ def _q_embed_topk(spark, sf_dir):
     query vector's norm was re-folded per ROW inside
     cosine_similarity_col — hoist it into the broadcast side (same
     fold, same double), leaving dot + row-norm per row."""
+    from powerbi_ontology_extractor_spark.operators.dedup import _parallelism_floor
 
     def _norm(col):
         return F.sqrt(
@@ -1297,10 +1298,7 @@ def _q_embed_topk(spark, sf_dir):
             )
         )
 
-    e = _t(spark, sf_dir, "embeddings")
-    sc = spark.sparkContext
-    if e.rdd.getNumPartitions() < sc.defaultParallelism:
-        e = e.repartition(sc.defaultParallelism)
+    e = _parallelism_floor(_t(spark, sf_dir, "embeddings"))
     q = e.where(F.col("vec_id") == 0).select(
         F.col("embedding").cast("array<double>").alias("qv")
     )

@@ -67,9 +67,7 @@ from powerbi_ontology_extractor_spark.sources.corpus import corpus_df
 build_triples(corpus_df(spark, n_repos=4, num_partitions=4)).count()  # warm codegen
 corpus = spark.read.parquet(corpus_path)
 t0 = time.perf_counter()
-# barrier=True: the scaling corpus is far above BARRIER_MIN_MODELS, so
-# skip the auto-probe count job (pure serial cost at 1 executor)
-n = build_triples(corpus, barrier=True).count()
+n = build_triples(corpus).count()
 wall = time.perf_counter() - t0
 print(json.dumps({"executors": n_exec, "cores_per_exec": cores_per_exec,
                   "triples": n, "wall_sec": round(wall, 3),
@@ -117,8 +115,8 @@ def main() -> None:
     n_lo = int(os.environ.get("SPARK_GRAFT_SCALING_LO_EXEC", "1"))
     n_hi = int(os.environ.get("SPARK_GRAFT_SCALING_HI_EXEC", "4"))
     trials = int(os.environ.get("SPARK_GRAFT_SCALING_TRIALS", "3"))
-    if not os.path.exists(os.path.join(REPO, "dist", "pbi_kg.zip")):
-        subprocess.run(["sh", os.path.join(REPO, "make_pyfiles.sh")], check=True)
+    # rebuild the zip every run: a stale one would ship old engine code
+    subprocess.run(["sh", os.path.join(REPO, "make_pyfiles.sh")], check=True)
     corpus_path = _ensure_corpus(n_repos, partitions=32)
 
     lo_runs, hi_runs = [], []

@@ -416,9 +416,7 @@ def security_rules_df(models: DataFrame) -> DataFrame:
 
 
 def extract_all(
-    corpus: DataFrame,
-    materialize: bool = False,
-    family_barrier: bool = True,
+    corpus: DataFrame, materialize: bool = False
 ) -> dict[str, DataFrame]:
     """Run the whole extraction stage; returns the model DataFrames.
 
@@ -432,11 +430,6 @@ def extract_all(
     barrier each branch would re-scan the parsed-model cache (dozens of
     extra stages; at cluster scale this boundary is an Iceberg write,
     see plans/manifest).
-
-    ``family_barrier=False`` keeps the essential models checkpoint but
-    skips the flat-family round — the barriers carry a fixed ~1-2 s
-    driver/job cost that only pays for itself on large corpora (the
-    pipeline picks per corpus size, see pipeline.BARRIER_MIN_MODELS).
     """
     models = parse_models(corpus)
     if materialize:
@@ -459,7 +452,7 @@ def extract_all(
             ["repo", "dataset"]
         ),
     }
-    if materialize and family_barrier:
+    if materialize:
         # checkpoint the FLAT family frames in ONE concurrent round
         # (they all derive from the already-materialized models
         # checkpoint, so the round costs max(job latency), not sum).

@@ -148,49 +148,28 @@ def run_pipeline_resumable(
     run_dir: str,
     repo_buckets: int = 16,
 ) -> dict[str, DataFrame]:
-    """The full KG pipeline as resumable stages: extract → ontology →
-    triples → nodes/edges, each persisted with manifest records.
+    """The full KG pipeline as resumable stages: corrupt-row quarantine →
+    triples (``pipeline.build_triples``) → nodes/edges, each persisted
+    with manifest records.
 
     A rerun after a crash (or a no-op rerun) recomputes nothing whose
     output is intact for the same corpus fingerprint.
     """
-    from powerbi_ontology_extractor_spark.functions.layout import report_triples
-    from powerbi_ontology_extractor_spark.functions.mquery import (
-        m_datasource_triples,
-    )
-    from powerbi_ontology_extractor_spark.operators.extract import extract_all
-    from powerbi_ontology_extractor_spark.operators.ontology import (
-        generate_ontology,
-    )
-    from powerbi_ontology_extractor_spark.operators.triples import (
-        TRIPLE_COLS,
-        export_triples,
-    )
-    from powerbi_ontology_extractor_spark.pipeline import nodes_edges
+    from powerbi_ontology_extractor_spark.pipeline import build_triples, nodes_edges
+    from powerbi_ontology_extractor_spark.sources.corpus import verify_content_sha
 
     runner = ManifestRunner(spark, run_dir)
     fp = runner.corpus_fingerprint(corpus)
 
     # bad-row quarantine: rows failing the content-sha invariant are
     # excluded from every stage and surfaced in their own table
-    from powerbi_ontology_extractor_spark.sources.corpus import verify_content_sha
-
     bad = runner.run_stage("corrupt_rows", lambda: verify_content_sha(corpus), fp)
     good = corpus.join(
         bad.select("repo", "path"), ["repo", "path"], "left_anti"
     )
 
-    def stage_triples() -> DataFrame:
-        model_dfs = extract_all(good, materialize=True)
-        onto_dfs = generate_ontology(model_dfs, materialize=True)
-        t = export_triples(onto_dfs, model_dfs)
-        t = t.unionByName(
-            m_datasource_triples(good, model_dfs["datasets"])
-        ).unionByName(report_triples(good, model_dfs["datasets"]))
-        return t.dropDuplicates(TRIPLE_COLS)
-
     triples = runner.run_stage(
-        "triples", stage_triples, fp, partition_cols=["repo"],
+        "triples", lambda: build_triples(good), fp, partition_cols=["repo"],
         num_partitions=repo_buckets,
     )
     nodes = runner.run_stage(

@@ -1,8 +1,6 @@
 """Training-data operators: dedup (exact/minhash/simhash/embedding),
-similarity search, text analysis, multimodal plumbing — over the
-driver-generated documents/embeddings tables plus synthetic edge cases."""
-
-import os
+similarity search, text analysis — over the generated
+documents/embeddings test tables plus synthetic edge cases."""
 
 import numpy as np
 import pytest
@@ -11,7 +9,6 @@ from pyspark.sql import functions as F
 from powerbi_ontology_extractor_spark.operators import dedup as DD
 from powerbi_ontology_extractor_spark.operators import similarity as SIM
 from powerbi_ontology_extractor_spark.operators import text as TX
-from powerbi_ontology_extractor_spark.operators import multimodal as MM
 
 
 @pytest.fixture(scope="module")
@@ -71,6 +68,48 @@ def test_minhash_near_duplicates(spark):
     assert by_id["1"]["cluster_id"] == by_id["2"]["cluster_id"]
     assert by_id["1"]["keep"] and not by_id["2"]["keep"]
     assert by_id["3"]["keep"]
+
+
+def test_results_independent_of_shuffle_partitions(spark, docs):
+    """Dedup and canonicalization output must not depend on how the
+    shuffles are partitioned (every cap slices by sorted id).  AQE
+    coalescing is off so the two settings really run different
+    partition counts."""
+    from powerbi_ontology_extractor_spark.operators.canonicalize import (
+        entity_canonical_mapping,
+    )
+    from powerbi_ontology_extractor_spark.operators.extract import extract_all
+    from powerbi_ontology_extractor_spark.operators.ontology import (
+        generate_ontology,
+    )
+    from powerbi_ontology_extractor_spark.sources.corpus import corpus_df
+
+    md = extract_all(corpus_df(spark, n_repos=4), materialize=True)
+    od = generate_ontology(md, materialize=True)
+
+    def run():
+        return [
+            sorted(map(tuple, df.collect()))
+            for df in (
+                DD.exact_dedup(docs),
+                DD.minhash_near_duplicates(docs, jaccard_threshold=0.5),
+                entity_canonical_mapping(od["ontology_entities"], md["properties"]),
+            )
+        ]
+
+    keys = ["spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        out = []
+        for parts in ("3", "17"):
+            spark.conf.set(keys[0], parts)
+            spark.conf.set(keys[1], "false")
+            out.append(run())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert all(out[0])  # each operator produced rows
+    assert out[0] == out[1]
 
 
 def test_simhash_near_duplicates(spark):
@@ -203,635 +242,6 @@ def test_fingerprints_and_matches(spark):
     fp = TX.fingerprints(d)
     matches = TX.fingerprint_matches(fp, min_shared=3).collect()
     assert {(r["id1"], r["id2"]) for r in matches} == {(1, 2)}
-
-
-def test_multimodal_features_deterministic(spark):
-    media = MM.synth_media_df(spark, n=9)
-    feats = MM.extract_features(media, dim=8, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 9
-    assert all(len(r["features"]) == 8 for r in rows)
-    # deterministic: same payload → same features
-    again = {r["media_id"]: r["features"] for r in MM.extract_features(media, dim=8, fake=True).collect()}
-    for r in rows:
-        assert again[r["media_id"]] == r["features"]
-    assert all(0.0 <= x <= 1.0 for r in rows for x in r["features"])
-
-
-def test_multimodal_decode_stub_raises():
-    # containers with no pure-numpy decoder still refuse honestly
-    with pytest.raises(NotImplementedError):
-        MM.decode_media(b"bytes", "image", 8, fake=False)
-
-
-FIXTURES = os.path.join(os.path.dirname(os.path.dirname(__file__)), "fixtures")
-
-
-def test_ppm_fixture_pinned_and_decodes():
-    """Committed byte fixture == generator output; real (fake=False)
-    decode parses header+raster and yields in-range features."""
-    with open(os.path.join(FIXTURES, "sample.ppm"), "rb") as f:
-        payload = f.read()
-    assert payload == MM.synth_ppm_bytes()
-    img = MM.decode_ppm(payload)
-    assert img.shape == (16, 24, 3) and 0.0 <= img.min() <= img.max() <= 1.0
-    feats = MM.decode_media(payload, "image", 8, fake=False)
-    assert feats.shape == (8,) and all(0.0 <= x <= 1.0 for x in feats)
-
-
-def test_ppm_header_variants():
-    import numpy as np
-
-    # comments + 2-byte maxval raster (big-endian per netpbm spec)
-    p = b"P6\n# c1\n2 # inline\n2\n65535\n" + np.arange(
-        12, dtype=">u2"
-    ).tobytes()
-    img = MM.decode_ppm(p)
-    assert img.shape == (2, 2, 3)
-    assert abs(img[1, 1, 2] - 11 / 65535) < 1e-9
-
-
-def test_png_fixture_pinned_and_decodes():
-    """Committed PNG fixture == generator output; the stdlib-zlib
-    decoder reconstructs the raster EXACTLY through all five scanline
-    filters (the encoder cycles None/Sub/Up/Average/Paeth per row)."""
-    import numpy as np
-
-    with open(os.path.join(FIXTURES, "sample.png"), "rb") as f:
-        payload = f.read()
-    assert payload == MM.synth_png_bytes()
-    img = MM.decode_png(payload)
-    assert img.shape == (16, 24, 3) and 0.0 <= img.min() <= img.max() <= 1.0
-    rng = np.random.RandomState(11)
-    want = (
-        np.fromfunction(
-            lambda y, x, c: (x * 11 + y * 3 + c * 29) % 256, (16, 24, 3)
-        ).astype(np.uint8)
-        ^ rng.randint(0, 256, (16, 24, 3), dtype=np.uint8)
-    )
-    assert np.array_equal((img * 255).round().astype(np.uint8), want)
-    feats = MM.decode_media(payload, "image", 8, fake=False)
-    assert feats.shape == (8,) and all(0.0 <= x <= 1.0 for x in feats)
-
-
-def test_png_rgba_and_declared_gaps():
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    def chunk(t, body):
-        return (
-            len(body).to_bytes(4, "big") + t + body
-            + zlib.crc32(t + body).to_bytes(4, "big")
-        )
-
-    h, w = 3, 5
-    px = np.arange(h * w * 4, dtype=np.uint8).reshape(h, w, 4)
-    raw = b"".join(b"\x00" + px[y].tobytes() for y in range(h))
-    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 6, 0, 0, 0])
-    payload = (
-        MM._PNG_SIG + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    img = MM.decode_png(payload)
-    assert img.shape == (3, 5, 4)
-    assert np.array_equal((img * 255).round().astype(np.uint8), px)
-
-    # malformed inputs: palette without PLTE, 16-bit raster-size lie
-    ihdr_pal = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 3, 0, 0, 0])
-    bad = (
-        MM._PNG_SIG + chunk(b"IHDR", ihdr_pal)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="PLTE"):
-        MM.decode_png(bad)
-    ihdr16 = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([16, 2, 0, 0, 0])
-    bad16 = (
-        MM._PNG_SIG + chunk(b"IHDR", ihdr16)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="size mismatch"):
-        MM.decode_png(bad16)
-    # unknown interlace method (0 and 1 are the only spec values)
-    ihdr_i = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 6, 0, 0, 2])
-    inter = (
-        MM._PNG_SIG + chunk(b"IHDR", ihdr_i)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="interlace"):
-        MM.decode_png(inter)
-
-
-def test_png_adam7_roundtrip():
-    """Adam7-interlaced PNGs reconstruct exactly: per-pass independent
-    un-filtering, scatter into the full raster, empty passes carrying
-    zero bytes (1×1 and 3×3 leave most passes empty)."""
-    import numpy as np
-
-    for w, h in ((13, 10), (1, 1), (3, 3), (8, 9), (16, 2)):
-        payload, img = MM.synth_png_adam7_bytes(width=w, height=h)
-        got = MM.decode_png(payload)
-        assert got.shape == (h, w, 3)
-        assert np.array_equal((got * 255).round().astype(np.uint8), img)
-    feats = MM.decode_media(
-        MM.synth_png_adam7_bytes()[0], "image", 5, fake=False
-    )
-    assert feats.shape == (5,)
-
-
-def test_png_palette_roundtrip():
-    """Palette PNGs at every legal index depth reconstruct EXACTLY:
-    PLTE lookup, partial-tRNS alpha (absent entries default opaque),
-    sub-byte index unpacking, filters cycling through all five
-    branches at bpp=1."""
-    import numpy as np
-    import pytest
-
-    for depth in (1, 2, 4, 8):
-        payload, palette, idx = MM.synth_png_palette_bytes(
-            bit_depth=depth, with_trns=False
-        )
-        img = MM.decode_png(payload)
-        assert img.shape == (11, 21, 3)
-        want = palette[idx]
-        assert np.array_equal((img * 255).round().astype(np.uint8), want)
-
-    payload, palette, idx = MM.synth_png_palette_bytes(
-        bit_depth=4, with_trns=True
-    )
-    img = MM.decode_png(payload)
-    assert img.shape == (11, 21, 4)
-    n_trns = max(1, len(palette) // 2)
-    alpha = np.full(len(palette), 255, dtype=np.uint8)
-    alpha[:n_trns] = [(17 * (i + 3)) % 256 for i in range(n_trns)]
-    want = np.concatenate(
-        [palette[idx], alpha[idx][..., None]], axis=2
-    )
-    assert np.array_equal((img * 255).round().astype(np.uint8), want)
-
-    # out-of-range index must fail loudly, not wrap
-    tampered, palette, idx = MM.synth_png_palette_bytes(
-        bit_depth=8, with_trns=False
-    )
-    import zlib
-
-    rows = idx.copy()
-    rows[0, 0] = len(palette)  # first index past the table
-    raw = MM._png_filter_rows(rows, bpp=1)
-    ihdr = (21).to_bytes(4, "big") + (11).to_bytes(4, "big") + bytes(
-        [8, 3, 0, 0, 0]
-    )
-    bad = (
-        MM._PNG_SIG
-        + MM._png_chunk(b"IHDR", ihdr)
-        + MM._png_chunk(b"PLTE", palette.tobytes())
-        + MM._png_chunk(b"IDAT", zlib.compress(raw))
-        + MM._png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="palette index"):
-        MM.decode_png(bad)
-
-
-def test_png_16bit_and_lowdepth_gray_roundtrip():
-    """16-bit RGB reconstructs the exact big-endian samples through
-    all five filters at bpp=6; 2-bit grayscale unpacks sub-byte
-    samples and scales by the depth's max value."""
-    import zlib
-
-    import numpy as np
-
-    payload, img16 = MM.synth_png16_bytes()
-    img = MM.decode_png(payload)
-    assert img.shape == (7, 9, 3)
-    assert np.array_equal((img * 65535).round().astype(np.uint16), img16)
-    feats = MM.decode_media(payload, "image", 8, fake=False)
-    assert feats.shape == (8,) and all(0.0 <= x <= 1.0 for x in feats)
-
-    h, w = 5, 11
-    rng = np.random.RandomState(2)
-    gray = rng.randint(0, 4, (h, w), dtype=np.uint8)  # 2-bit samples
-    bits = ((gray[:, :, None] >> np.arange(1, -1, -1)) & 1).reshape(h, -1)
-    rows = np.packbits(bits.astype(np.uint8), axis=1)
-    raw = MM._png_filter_rows(rows, bpp=1)
-    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([2, 0, 0, 0, 0])
-    payload2 = (
-        MM._PNG_SIG
-        + MM._png_chunk(b"IHDR", ihdr)
-        + MM._png_chunk(b"IDAT", zlib.compress(raw))
-        + MM._png_chunk(b"IEND", b"")
-    )
-    img2 = MM.decode_png(payload2)
-    assert img2.shape == (h, w, 1)
-    assert np.array_equal((img2[..., 0] * 3).round().astype(np.uint8), gray)
-
-
-def test_jpeg_fixture_pinned_and_decodes():
-    """Committed baseline-JPEG fixture == generator output; the pure
-    numpy decoder (huffman + dequant + IDCT + 4:2:0 upsample) recovers
-    the source image within the quantization budget, and the decode is
-    bit-deterministic (pinned output hash)."""
-    import hashlib
-
-    import numpy as np
-
-    from powerbi_ontology_extractor_spark.operators import jpeg as J
-
-    with open(os.path.join(FIXTURES, "sample.jpg"), "rb") as f:
-        payload = f.read()
-    assert payload == J.synth_jpeg_bytes()
-    img = J.decode_baseline_jpeg(payload)
-    assert img.shape == (24, 40, 3) and 0.0 <= img.min() <= img.max() <= 1.0
-
-    # closeness to the pre-encode source (lossy, so a tolerance pin):
-    # max error bounded by the coarse chroma quantization at 4:2:0
-    rng = np.random.RandomState(13)
-    yy, xx = np.mgrid[0:24, 0:40].astype(np.float64)
-    base = 96 + 64 * np.sin(xx / 9.0) + 48 * np.cos(yy / 7.0)
-    src = np.stack([base, 255 - base, 0.5 * base + 64], axis=2) + rng.uniform(
-        -3, 3, (24, 40, 3)
-    )
-    src = np.clip(src, 0, 255).astype(np.uint8) / 255.0
-    err = np.abs(img - src)
-    assert err.mean() < 0.03 and err.max() < 0.2
-
-    # determinism pin: quantized decode bytes hash exactly
-    q = (img * 255).round().astype(np.uint8)
-    assert (
-        hashlib.sha256(q.tobytes()).hexdigest()
-        == "fb7db402a7f6c5d55c5a60cbe3c3d60188608ff8b3d6787a813bcc62e07a4581"
-    )
-
-    feats = MM.decode_media(payload, "image", 8, fake=False)
-    assert feats.shape == (8,) and all(0.0 <= x <= 1.0 for x in feats)
-
-
-def test_jpeg_444_and_grayscale_roundtrip():
-    import numpy as np
-
-    from powerbi_ontology_extractor_spark.operators import jpeg as J
-
-    p444 = J.synth_jpeg_bytes(subsampling="444")
-    img = J.decode_baseline_jpeg(p444)
-    assert img.shape == (24, 40, 3)
-
-    gray = (np.mgrid[0:17, 0:23][0] * 9 % 256).astype(np.uint8)
-    d = J.decode_baseline_jpeg(J.encode_baseline_jpeg(gray))
-    assert d.shape == (17, 23, 1)
-    assert np.abs(d[:, :, 0] - gray / 255.0).max() < 0.05
-
-
-def test_jpeg_declared_gaps():
-    import pytest
-
-    from powerbi_ontology_extractor_spark.operators import jpeg as J
-
-    payload = bytearray(J.synth_jpeg_bytes())
-    # flip SOF0 (FFC0) to SOF2 (FFC2): progressive is declared out
-    i = bytes(payload).find(b"\xff\xc0")
-    assert i > 0
-    payload[i + 1] = 0xC2
-    with pytest.raises(NotImplementedError):
-        J.decode_baseline_jpeg(bytes(payload))
-    with pytest.raises(ValueError):
-        J.decode_baseline_jpeg(b"\x00\x01not a jpeg")
-
-
-def test_wav_fixture_pinned_and_decodes():
-    with open(os.path.join(FIXTURES, "sample.wav"), "rb") as f:
-        payload = f.read()
-    assert payload == MM.synth_wav_bytes()
-    samples, rate = MM.decode_wav(payload)
-    assert rate == 8000 and samples.shape == (2048,)
-    assert -1.0 <= samples.min() and samples.max() <= 1.0
-    feats = MM.decode_media(payload, "audio", 8, fake=False)
-    assert feats.shape == (8,)
-
-
-def test_wav_8bit_stereo_downmix():
-    fmt = (
-        (1).to_bytes(2, "little") + (2).to_bytes(2, "little")
-        + (8000).to_bytes(4, "little") + (16000).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (8).to_bytes(2, "little")
-    )
-    pcm = bytes(range(200))
-    payload = (
-        b"RIFF" + (4 + 8 + len(fmt) + 8 + len(pcm)).to_bytes(4, "little")
-        + b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        + b"data" + len(pcm).to_bytes(4, "little") + pcm
-    )
-    samples, rate = MM.decode_wav(payload)
-    assert rate == 8000 and samples.shape == (100,)  # stereo → mono
-
-
-def _wav(fmt_code, n_ch, rate, bits, data):
-    fmt = (
-        fmt_code.to_bytes(2, "little") + n_ch.to_bytes(2, "little")
-        + rate.to_bytes(4, "little")
-        + (rate * n_ch * bits // 8).to_bytes(4, "little")
-        + (n_ch * bits // 8).to_bytes(2, "little")
-        + bits.to_bytes(2, "little")
-    )
-    return (
-        b"RIFF" + (4 + 8 + len(fmt) + 8 + len(data)).to_bytes(4, "little")
-        + b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        + b"data" + len(data).to_bytes(4, "little") + data
-    )
-
-
-def test_wav_24bit_sign_extension():
-    """24-bit PCM: 3-byte little-endian samples assemble and
-    sign-extend exactly (max positive, min negative, ±1 LSB, zero)."""
-    import numpy as np
-
-    vals = [0, 1, -1, (1 << 23) - 1, -(1 << 23), 0x123456, -0x123456]
-    data = b"".join(
-        (v & 0xFFFFFF).to_bytes(3, "little") for v in vals
-    )
-    samples, rate = MM.decode_wav(_wav(1, 1, 16000, 24, data))
-    assert rate == 16000
-    want = np.array(vals, dtype=np.float64) / float(1 << 23)
-    assert np.allclose(samples, want, atol=0)
-
-
-def test_wav_ieee_float_formats():
-    """Format-3 WAV: 32-bit and 64-bit IEEE float samples pass through
-    exactly; stereo still downmixes; non-PCM/float still declared."""
-    import numpy as np
-    import pytest
-
-    vals = np.array([0.0, 0.5, -0.5, 1.0, -1.0, 0.123456], dtype=np.float32)
-    samples, _ = MM.decode_wav(_wav(3, 1, 8000, 32, vals.tobytes()))
-    assert np.array_equal(samples, vals.astype(np.float64))
-    vals64 = np.array([0.25, -0.75, 0.999, -0.999], dtype=np.float64)
-    samples64, _ = MM.decode_wav(_wav(3, 2, 8000, 64, vals64.tobytes()))
-    assert np.allclose(samples64, vals64.reshape(-1, 2).mean(axis=1), atol=0)
-    with pytest.raises(NotImplementedError):  # e.g. format 2 = ADPCM
-        MM.decode_wav(_wav(2, 1, 8000, 4, b"\x00" * 8))
-
-
-def test_wav_g711_companding():
-    """µ-law and A-law expand to the ITU G.711 reference values —
-    extreme magnitudes, zero codes and a mid-chord sample pinned as
-    hand-derived literals."""
-    import numpy as np
-
-    mu = bytes([0x00, 0x80, 0xFF, 0x7F, 0xEF])
-    samples, _ = MM.decode_wav(_wav(7, 1, 8000, 8, mu))
-    want = np.array([-32124, 32124, 0, 0, 132], dtype=np.float64) / 32768.0
-    assert np.allclose(samples, want, atol=0)
-
-    al = bytes([0x55, 0xD5, 0x2A, 0xAA])
-    samples, _ = MM.decode_wav(_wav(6, 1, 8000, 8, al))
-    want = np.array([-8, 8, -32256, 32256], dtype=np.float64) / 32768.0
-    assert np.allclose(samples, want, atol=0)
-
-
-def _bmp(width, height, bpp, pixel_rows, palette=b"", compression=0):
-    """Assemble a BMP: 14-byte file header + 40-byte info header +
-    optional palette + raster rows (caller pads them)."""
-    raster = b"".join(pixel_rows)
-    offset = 14 + 40 + len(palette)
-    info = (
-        (40).to_bytes(4, "little")
-        + width.to_bytes(4, "little", signed=True)
-        + height.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + bpp.to_bytes(2, "little")
-        + compression.to_bytes(4, "little")
-        + len(raster).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2
-        + (len(palette) // 4).to_bytes(4, "little")
-        + (0).to_bytes(4, "little")
-    )
-    total = offset + len(raster)
-    return (
-        b"BM" + total.to_bytes(4, "little") + b"\x00" * 4
-        + offset.to_bytes(4, "little") + info + palette + raster
-    )
-
-
-def test_bmp_roundtrip_and_gaps():
-    """24-bit bottom-up (padded rows, BGR→RGB), 32-bit BGRA, 8-bit
-    palette top-down (negative height) reconstruct exactly; RLE stays
-    a declared gap."""
-    import numpy as np
-    import pytest
-
-    # 24-bit, 3×2, bottom-up; stride 9 → padded to 12
-    px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)  # RGB rows
-    rows = [
-        bytes(px[y, :, ::-1].reshape(-1)) + b"\x00" * 3
-        for y in (1, 0)  # bottom-up storage order
-    ]
-    img = MM.decode_bmp(_bmp(3, 2, 24, rows))
-    assert img.shape == (2, 3, 3)
-    assert np.array_equal((img * 255).round().astype(np.uint8), px)
-
-    # 32-bit BGRA, 2×2, bottom-up (no padding at 4-byte pixels)
-    px4 = np.arange(2 * 2 * 4, dtype=np.uint8).reshape(2, 2, 4)  # RGBA
-    rows = [bytes(px4[y][:, [2, 1, 0, 3]].reshape(-1)) for y in (1, 0)]
-    img4 = MM.decode_bmp(_bmp(2, 2, 32, rows))
-    assert img4.shape == (2, 2, 4)
-    assert np.array_equal((img4 * 255).round().astype(np.uint8), px4)
-
-    # 8-bit palette, 5×3, TOP-DOWN (negative height); stride 5 → 8
-    rng = np.random.RandomState(4)
-    table = rng.randint(0, 256, (7, 3), dtype=np.uint8)  # RGB entries
-    palette = b"".join(
-        bytes(row[::-1]) + b"\x00" for row in table  # BGRA quads
-    )
-    idx = rng.randint(0, 7, (3, 5), dtype=np.uint8)
-    rows = [bytes(idx[y]) + b"\x00" * 3 for y in range(3)]  # top-down
-    imgp = MM.decode_bmp(_bmp(5, -3, 8, rows, palette=palette))
-    assert imgp.shape == (3, 5, 3)
-    assert np.array_equal((imgp * 255).round().astype(np.uint8), table[idx])
-
-    feats = MM.decode_media(_bmp(3, 2, 24, [
-        bytes(px[y, :, ::-1].reshape(-1)) + b"\x00" * 3 for y in (1, 0)
-    ]), "image", 4, fake=False)
-    assert feats.shape == (4,)
-
-    with pytest.raises(NotImplementedError, match="compression"):
-        MM.decode_bmp(_bmp(3, 2, 24, rows, compression=2))  # RLE4
-    with pytest.raises(ValueError, match="8-bit"):
-        MM.decode_bmp(_bmp(3, 2, 24, rows, compression=1))  # RLE8 ≠ 24bpp
-    with pytest.raises(ValueError, match="palette index"):
-        bad_idx = idx.copy()
-        bad_idx[0, 0] = 7  # past the 7-entry table
-        MM.decode_bmp(_bmp(5, -3, 8,
-                           [bytes(bad_idx[y]) + b"\x00" * 3 for y in range(3)],
-                           palette=palette))
-
-
-def test_bmp_rle8_roundtrip():
-    """BI_RLE8 expansion: encoded runs, absolute mode (word-aligned),
-    end-of-line, delta skips (cells stay 0) and end-of-bitmap all
-    reconstruct the expected index raster, bottom-up."""
-    import numpy as np
-
-    table = np.arange(30, dtype=np.uint8).reshape(10, 3)
-    palette = b"".join(bytes(row[::-1]) + b"\x00" for row in table)
-    # storage rows (bottom-up): logical raster is 6 wide × 3 tall
-    stream = (
-        # storage row 0 (logical bottom): run 4×idx7, abs [1,2,3] pad, EOL
-        b"\x04\x07" + b"\x00\x03\x01\x02\x03\x00" + b"\x00\x00"
-        # storage row 1: delta (+2,0) leaves zeros, run 3×idx9, EOL
-        + b"\x00\x02\x02\x00" + b"\x03\x09" + b"\x00\x00"
-        # storage row 2: run 6×idx5, end of bitmap
-        + b"\x06\x05" + b"\x00\x01"
-    )
-    want_storage = np.array(
-        [
-            [7, 7, 7, 7, 1, 2],  # run 4 + abs 3 = 7 cells clamp to width 6
-            [0, 0, 9, 9, 9, 0],
-            [5, 5, 5, 5, 5, 5],
-        ],
-        dtype=np.uint8,
-    )
-    img = MM.decode_bmp(_bmp(6, 3, 8, [stream], palette=palette,
-                             compression=1))
-    want = table[want_storage[::-1]]  # bottom-up flip, palette expand
-    assert img.shape == (3, 6, 3)
-    assert np.array_equal((img * 255).round().astype(np.uint8), want)
-
-
-def test_tiff_roundtrip_variants():
-    """Baseline TIFF: gray (both photometric polarities), RGB and
-    16-bit-ColorMap palette rasters reconstruct exactly across byte
-    orders and multi-strip layouts; compression stays declared."""
-    import numpy as np
-    import pytest
-
-    for mode in ("gray", "gray0", "rgb", "palette"):
-        for byte_order in ("II", "MM"):
-            payload, want = MM.synth_tiff_bytes(
-                mode=mode, byte_order=byte_order
-            )
-            img = MM.decode_tiff(payload)
-            assert img.shape == want.shape
-            assert np.array_equal(
-                (img * 255).round().astype(np.uint8), want
-            )
-    # single-strip layout (rows_per_strip ≥ height → inline offsets)
-    payload, want = MM.synth_tiff_bytes(mode="rgb", rows_per_strip=64)
-    img = MM.decode_tiff(payload)
-    assert np.array_equal((img * 255).round().astype(np.uint8), want)
-
-    feats = MM.decode_media(payload, "image", 4, fake=False)
-    assert feats.shape == (4,)
-
-    # LZW-compressed TIFF stays a declared gap
-    comp = bytearray(MM.synth_tiff_bytes(mode="gray")[0])
-    # patch tag 259's inline value (scan the IFD for it)
-    bo = "little"
-    ifd = int.from_bytes(comp[4:8], bo)
-    n = int.from_bytes(comp[ifd : ifd + 2], bo)
-    for i in range(n):
-        e = ifd + 2 + i * 12
-        if int.from_bytes(comp[e : e + 2], bo) == 259:
-            comp[e + 8 : e + 10] = (5).to_bytes(2, bo)  # LZW
-    with pytest.raises(NotImplementedError, match="compression"):
-        MM.decode_tiff(bytes(comp))
-
-
-def test_gif_roundtrip_variants():
-    """GIF first-frame decode: plain, interlaced (pass-order storage →
-    deinterlaced raster) and GCE-transparent fixtures reconstruct the
-    exact palette-expanded pixels; a growing LZW table crosses code
-    widths on a larger raster."""
-    import numpy as np
-
-    from powerbi_ontology_extractor_spark.operators import gif as G
-
-    for kwargs in (
-        {},
-        {"interlace": True},
-        {"transparent": True},
-        {"width": 83, "height": 61},  # enough codes to widen past 5→8 bits
-        {"width": 83, "height": 61, "interlace": True, "transparent": True},
-    ):
-        payload, palette, idx = G.synth_gif_bytes(**kwargs)
-        img = G.decode_gif(payload)
-        h, w = idx.shape
-        if kwargs.get("transparent"):
-            assert img.shape == (h, w, 4)
-            want = np.concatenate(
-                [
-                    palette[idx],
-                    np.where(idx == 0, 0, 255).astype(np.uint8)[..., None],
-                ],
-                axis=2,
-            )
-        else:
-            assert img.shape == (h, w, 3)
-            want = palette[idx]
-        assert np.array_equal((img * 255).round().astype(np.uint8), want)
-
-    feats = MM.decode_media(
-        G.synth_gif_bytes()[0], "image", 6, fake=False
-    )
-    assert feats.shape == (6,)
-
-
-def test_gif_lzw_kwkwk_and_errors():
-    """The hand-packed code stream [CLEAR, 0, 6, 0, END] at
-    min_code_size=2 hits the KwKwK branch (code 6 == next unassigned
-    entry) and must decode to [0,0,0,0]; truncated streams and
-    out-of-table codes fail loudly."""
-    import pytest
-
-    from powerbi_ontology_extractor_spark.operators import gif as G
-
-    # codes 4,0,6,0,5 at 3 bits, LSB-first → bytes 0x84, 0x51
-    assert G.lzw_decode(bytes([0x84, 0x51]), 2, 4) == [0, 0, 0, 0]
-    with pytest.raises(ValueError, match="ended"):
-        G.lzw_decode(bytes([0x84]), 2, 4)
-    # code 7 with only entry 6 assignable → beyond table
-    # codes 4,0,7 at 3 bits LSB-first: 100 000 111 → 0xC4, 0x01
-    with pytest.raises(ValueError, match="beyond table"):
-        G.lzw_decode(bytes([0xC4, 0x01]), 2, 4)
-
-
-def test_real_decode_through_spark_pipeline(spark):
-    """fake=False end-to-end via mapInPandas on real PPM/WAV/PNG/JPEG/
-    GIF payloads — the decode step is no longer a stub for these
-    containers."""
-    from powerbi_ontology_extractor_spark.operators.gif import (
-        synth_gif_bytes,
-    )
-    from powerbi_ontology_extractor_spark.operators.jpeg import (
-        synth_jpeg_bytes,
-    )
-
-    rows = [
-        (0, "image", MM.synth_ppm_bytes(), "image/x-portable-pixmap",
-         24, 16, None, "synthetic://ppm/0"),
-        (1, "audio", MM.synth_wav_bytes(), "audio/wav",
-         None, None, 256, "synthetic://wav/1"),
-        (2, "image", MM.synth_png_bytes(), "image/png",
-         24, 16, None, "synthetic://png/2"),
-        (3, "image", synth_jpeg_bytes(), "image/jpeg",
-         40, 24, None, "synthetic://jpeg/3"),
-        (4, "image", synth_gif_bytes()[0], "image/gif",
-         19, 13, None, "synthetic://gif/4"),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in
-           MM.extract_features(media, dim=8, fake=False).collect()}
-    assert all(len(out[i]["features"]) == 8 for i in range(5))
-    # image bucket means live in [0,1]; audio in [-1,1]
-    assert all(0.0 <= x <= 1.0 for x in out[0]["features"])
-    assert all(-1.0 <= x <= 1.0 for x in out[1]["features"])
-    assert all(0.0 <= x <= 1.0 for x in out[2]["features"])
-    assert all(0.0 <= x <= 1.0 for x in out[3]["features"])
-
-
-def test_frame_sample_plan(spark):
-    media = MM.synth_media_df(spark, n=9)
-    plan = MM.frame_sample_plan(media, every_ms=1000)
-    one = plan.where(F.col("media_id") == 2).collect()  # video, 5200ms
-    assert [r["frame_ts_ms"] for r in one] == [0, 1000, 2000, 3000, 4000, 5000]
 
 
 def test_docs_scale_smoke(docs):

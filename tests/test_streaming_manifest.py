@@ -93,6 +93,15 @@ def test_manifest_resume(spark, tmp_path):
     assert recs["triples"].status == "completed"
     assert sum(recs["triples"].partition_rows) == n1
 
+    # staged = bulk: the triples stage is exactly build_triples' set
+    from powerbi_ontology_extractor_spark.operators.triples import TRIPLE_COLS
+    from powerbi_ontology_extractor_spark.pipeline import build_triples
+
+    staged = out["triples"].select(*TRIPLE_COLS)
+    bulk = build_triples(c).select(*TRIPLE_COLS)
+    assert bulk.exceptAll(staged).count() == 0
+    assert staged.exceptAll(bulk).count() == 0
+
     # tamper-proof resume: delete nothing, rerun → same outputs, no new
     # manifest rows (stages skipped)
     before = len(manifest.records())
