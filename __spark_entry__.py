@@ -1241,7 +1241,7 @@ def _q_ntriples_render(spark, sf_dir):
     """T14 serialization under the oracle: deterministic triples built
     from the part table — bnode subjects, ont:/rdfs:/absolute-URI
     predicates, plain + datatype-tagged literals with injected
-    backslash/quote content — rendered by triples.ntriples_lines; the
+    backslash/quote/LF/CR content — rendered by triples.ntriples_lines; the
     DuckDB oracle re-implements the expansion/escaping grammar."""
     from powerbi_ontology_extractor_spark.operators.triples import (
         ntriples_lines,
@@ -1260,7 +1260,7 @@ def _q_ntriples_render(spark, sf_dir):
     )
     obj = (
         F.when(kind == 0, F.col("p_size").cast("string"))
-        .when(kind == 1, F.concat(F.col("p_name"), F.lit(' say "q\\e"')))
+        .when(kind == 1, F.concat(F.col("p_name"), F.lit(' say "q\\e"\nline2\r')))
         .otherwise(F.concat(F.lit("ont:brand_"), F.col("p_brand")))
     )
     t = p.select(
@@ -1909,7 +1909,8 @@ def oracle_sql() -> dict[str, str]:
                        p_partkey % 3 AS kind,
                        CASE p_partkey % 3
                             WHEN 0 THEN CAST(p_size AS VARCHAR)
-                            WHEN 1 THEN p_name || ' say "q\\e"'
+                            WHEN 1 THEN p_name || ' say "q\\e"' || chr(10)
+                                        || 'line2' || chr(13)
                             ELSE 'ont:brand_' || p_brand END AS obj
                 FROM part),
             r AS (
@@ -1925,7 +1926,9 @@ def oracle_sql() -> dict[str, str]:
                     CASE WHEN kind = 0 THEN '"' || obj ||
                               '"^^<http://www.w3.org/2001/XMLSchema#integer>'
                          WHEN kind = 1 THEN '"' ||
-                              replace(replace(obj, '\\', '\\\\'), '"', '\\"')
+                              replace(replace(replace(replace(obj, '\\', '\\\\'),
+                                      '"', '\\"'), chr(10), '\\n'),
+                                      chr(13), '\\r')
                               || '"'
                          ELSE '<http://example.com/ontologies/Parts_DS#'
                               || substr(obj, 5) || '>' END AS o

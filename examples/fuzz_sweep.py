@@ -9,7 +9,6 @@ or the DAX regexes change.  Round-5 record: 150 seeds, 0 divergences,
 
 Usage:  python examples/fuzz_sweep.py [N]
 """
-import hashlib
 import json
 import os
 import sys
@@ -19,8 +18,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
-from tests.reference_harness import canonicalize_bnodes, reference_triples
-from tests.test_reference_fuzz import _mask_date, _random_model
+from tests.parity_cases import engine_model_set, mask_date
+from tests.reference_harness import reference_triples
+from tests.test_reference_fuzz import _random_model
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 150
 
@@ -30,10 +30,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-
-from powerbi_ontology_extractor_spark.operators.extract import extract_all
-from powerbi_ontology_extractor_spark.operators.ontology import generate_ontology
-from powerbi_ontology_extractor_spark.operators.triples import export_triples
 
 os.makedirs("/tmp/fuzzsweep", exist_ok=True)
 bad = []
@@ -46,19 +42,8 @@ for seed in range(N):
     except Exception as ex:  # reference itself crashed on this model
         print(f"seed {seed}: REFERENCE RAISED {type(ex).__name__}: {ex}")
         continue
-    ref = _mask_date(ref)
-    content = json.dumps(model)
-    sha = hashlib.sha256(content.encode()).hexdigest()
-    corpus = spark.createDataFrame(
-        [("r", pbix, "0" * 40, "model_json", content, sha)],
-        "repo string, path string, commit string, lang string, "
-        "content string, content_sha256 string",
-    )
-    dfs = extract_all(corpus)
-    t = export_triples(generate_ontology(dfs), dfs, include_lineage=False)
-    eng = _mask_date(canonicalize_bnodes(
-        {(r["subj"], r["pred"], r["obj"])
-         for r in t.select("subj", "pred", "obj").collect()}))
+    ref = mask_date(ref)
+    eng = engine_model_set(spark, json.dumps(model), pbix)
     if ref != eng:
         bad.append(seed)
         print(f"seed {seed}: DIVERGED  missing={sorted(ref - eng)[:6]} "

@@ -1,9 +1,10 @@
-"""Name / string normalization as native Spark Column expressions.
+"""Name / string normalization as native Spark Column expressions, or as
+SQL text (``*_sql``) for the emission grammar's spec table.
 
 Everything here stays inside whole-stage codegen (no Python UDFs).
 Semantics match the reference:
-- safe_name:      /root/reference/powerbi_ontology/export/owl.py:494-498
-- sanitize_dax:   /root/reference/powerbi_ontology/export/owl.py:473-492
+- safe_name:      powerbi_ontology/export/owl.py:494-498
+- sanitize_dax:   powerbi_ontology/export/owl.py:473-492
 - snake_case:     /root/reference/powerbi_ontology/schema_mapper.py:337-342
 - normalize_formula: /root/reference/powerbi_ontology/analyzer.py:337-341
 - normalize_name (fuzzy eval key): /root/reference/evaluation/run_evaluation.py:120-122
@@ -24,11 +25,16 @@ def safe_name(col: Column | str) -> Column:
     return F.when(safe.isNull() | (safe == ""), F.lit("unnamed")).otherwise(safe)
 
 
-def sanitize_dax(col: Column | str) -> Column:
-    """Strip null bytes + semicolons, truncate to 10000 chars; null → ''."""
-    c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.regexp_replace(c, "[\x00;]", "")
-    return F.coalesce(F.substring(cleaned, 1, MAX_DAX_LENGTH), F.lit(""))
+def safe_name_sql(expr: str) -> str:
+    """``safe_name`` as SQL text over the expression ``expr``."""
+    return f"coalesce(nullif(translate({expr}, ' -.', '___'), ''), 'unnamed')"
+
+
+def sanitize_dax_sql(expr: str) -> str:
+    """Strip null bytes + semicolons, truncate to 10000 chars; null → ''
+    (SQL text over ``expr``)."""
+    return (f"coalesce(substring(regexp_replace({expr}, '[\\\\x00;]', ''), "
+            f"1, {MAX_DAX_LENGTH}), '')")
 
 
 def snake_case(col: Column | str) -> Column:
@@ -69,22 +75,15 @@ def map_pbix_type(col: Column | str) -> Column:
     )
 
 
-def map_to_xsd(col: Column | str) -> Column:
-    """Ontology data type → XSD type as prefixed name (default xsd:string).
+def map_to_xsd_sql(expr: str) -> str:
+    """Ontology data type → XSD type as prefixed name (default
+    xsd:string), as SQL text over ``expr``.
 
     Reference: export/owl.py:457-471.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.when(c == "String", "xsd:string")
-        .when(c == "Integer", "xsd:integer")
-        .when(c == "Decimal", "xsd:decimal")
-        .when(c == "Date", "xsd:date")
-        .when(c == "DateTime", "xsd:dateTime")
-        .when(c == "Boolean", "xsd:boolean")
-        .when(c == "Float", "xsd:float")
-        .when(c == "Double", "xsd:double")
-        .when(c == "Long", "xsd:long")
-        .when(c == "Binary", "xsd:base64Binary")
-        .otherwise("xsd:string")
-    )
+    xsd = [("String", "string"), ("Integer", "integer"), ("Decimal", "decimal"),
+           ("Date", "date"), ("DateTime", "dateTime"), ("Boolean", "boolean"),
+           ("Float", "float"), ("Double", "double"), ("Long", "long"),
+           ("Binary", "base64Binary")]
+    whens = " ".join(f"WHEN '{t}' THEN 'xsd:{x}'" for t, x in xsd)
+    return f"CASE {expr} {whens} ELSE 'xsd:string' END"

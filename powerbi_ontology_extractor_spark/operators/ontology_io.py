@@ -266,82 +266,46 @@ def ontology_doc_triples(
     corpus: DataFrame, roles: list[str] | None = None
 ) -> DataFrame:
     """Full OWL export of loaded ontology docs — the cli import→export
-    round trip (cli.py:176-199): metadata (label = the doc's own name,
-    NOT name+'_Ontology'; comment 'Ontology from {source}'; version;
-    ont:meta_<key> per metadata entry), then the same family emitters
-    the extraction pipeline uses, plus T7/T8 constraints."""
-    from powerbi_ontology_extractor_spark.functions.naming import safe_name
+    round trip (cli.py:176-199): the doc's own metadata (label = the
+    doc's name, NOT name+'_Ontology'; comment 'Ontology from {source}';
+    version; ont:meta_<key> per metadata entry) beside the OntoGuard
+    catalog, then the doc frames through the extraction pipeline's
+    grammar, T7/T8 constraints included."""
+    from powerbi_ontology_extractor_spark.functions.naming import safe_name_sql
     from powerbi_ontology_extractor_spark.operators.triples import (
+        CATALOG,
         DEFAULT_ROLES,
+        GRAMMAR,
+        LIT,
         TRIPLE_COLS,
-        _lit,
-        _rows,
-        _uri,
-        base_class_triples,
-        business_rule_triples,
-        crud_triples,
-        entity_constraint_triples,
-        entity_triples,
-        property_constraint_triples,
-        property_triples,
-        relationship_triples,
+        Frame,
+        T,
+        emit_frames,
     )
 
-    roles = roles or DEFAULT_ROLES
-    docs = _docs(corpus)
-    onto = _uri("ont:", safe_name(F.col("dataset")))
-    meta = _rows(
-        docs,
+    meta = Frame(
+        {"_onto": f"concat('ont:', {safe_name_sql('dataset')})"},
         [
-            (onto, "rdf:type", F.lit("owl:Ontology"), False, ""),
-            (onto, "rdfs:label", F.col("dataset"), True, ""),
-            (
-                onto,
-                "rdfs:comment",
-                F.concat(F.lit("Ontology from "), F.col("source")),
-                True,
-                "",
-            ),
-            (onto, "owl:versionInfo", _lit(F.col("version")), True, ""),
+            T("_onto", "'rdf:type'", "'owl:Ontology'"),
+            T("_onto", "'rdfs:label'", "dataset", LIT),
+            T("_onto", "'rdfs:comment'", "concat('Ontology from ', source)", LIT),
+            T("_onto", "'owl:versionInfo'", "nullif(version, '')", LIT),
+            T("_onto", "concat('ont:meta_', x.key)", "x.value", LIT,
+              each="map_entries(try_variant_get(v, '$.metadata', "
+                   "'map<string,string>'))"),
+            *CATALOG.rows,
         ],
+        CATALOG.per_role,
     )
-    # ont:meta_<key> annotations: dynamic predicate per metadata entry
-    meta_kv = (
-        docs.select(
-            "repo",
-            "dataset",
-            onto.alias("subj"),
-            F.explode_outer(
-                F.try_variant_get(F.col("v"), "$.metadata", "map<string,string>")
-            ).alias("k", "val"),
-        )
-        .where(F.col("k").isNotNull())
-        .select(
-            "repo",
-            "dataset",
-            "subj",
-            F.concat(F.lit("ont:meta_"), F.col("k")).alias("pred"),
-            F.col("val").alias("obj"),
-            F.lit(True).alias("obj_is_literal"),
-            F.lit("").alias("obj_datatype"),
-        )
-    )
-    datasets = doc_datasets(corpus)
-    ents = doc_entities(corpus)
-    fams = [
-        meta,
-        meta_kv,
-        base_class_triples(datasets, roles),
-        entity_triples(ents),
-        property_triples(doc_properties(corpus)),
-        relationship_triples(doc_relationships(corpus)),
-        business_rule_triples(doc_business_rules(corpus)),
-        crud_triples(ents, roles),
-        property_constraint_triples(doc_property_constraints(corpus)),
-        entity_constraint_triples(doc_entity_constraints(corpus)),
-    ]
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b), fams).dropDuplicates(
-        TRIPLE_COLS
-    )
+    return emit_frames(
+        [
+            (meta, _docs(corpus)),
+            (GRAMMAR["ontology_entities"], doc_entities(corpus)),
+            (GRAMMAR["properties"], doc_properties(corpus)),
+            (GRAMMAR["ontology_relationships"], doc_relationships(corpus)),
+            (GRAMMAR["business_rules"], doc_business_rules(corpus)),
+            (GRAMMAR["property_constraints"], doc_property_constraints(corpus)),
+            (GRAMMAR["entity_constraints"], doc_entity_constraints(corpus)),
+        ],
+        roles or DEFAULT_ROLES,
+    ).dropDuplicates(TRIPLE_COLS)

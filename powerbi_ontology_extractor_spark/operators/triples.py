@@ -1,9 +1,13 @@
 """Triple emission: ontology DataFrames → (subj, pred, obj) rows.
 
-Output contract = the reference's rdflib emission grammar
-(/root/reference/powerbi_ontology/export/owl.py) expressed as
-``select``/``explode`` families + ``unionByName``.  Each family
-function below maps 1:1 to an ``_add_*`` method and is cited.
+Output contract = the reference's rdflib emission grammar (owl.py), written
+down ONCE as data: ``GRAMMAR`` maps each input frame to the URI/bnode
+columns it derives and the triple specs it emits, all SQL text over that
+frame's columns, each cited to the owl.py lines it mirrors.
+``emit_frames`` renders every frame in ONE projection (``_rows``: an
+array of triple structs, exploded), so each checkpointed input is scanned
+once and the constant catalog and the CRUD action × role combos are
+constant spec rows, not literal frames joined in.
 
 Key re-expressions forced by the distributed model:
 - rdflib ``Graph`` is a *set* → the final union applies
@@ -18,25 +22,25 @@ Triple row: (repo, dataset, subj, pred, obj, obj_is_literal,
 obj_datatype).  URIs are prefixed names (``ont:``, ``rdf:``, ``rdfs:``,
 ``owl:``, ``xsd:``) — the ``ont:`` namespace is per-(repo, dataset).
 
-Scale notes: every family is a narrow projection of an already-shuffled
-ontology DF; the CRUD family (owl.py:386-409) is an explicit
-``crossJoin`` against a 12-row literal frame (broadcast by
-construction).  The union tree is pure map-side; the one shuffle is the
-final ``dropDuplicates``, partitioned by (repo, dataset, subj) —
-write-side this becomes the Iceberg ``bucket(repo)`` layout.
+Scale notes: every frame's emission is a narrow projection of an
+already-shuffled ontology DF; the union is pure map-side and the one
+shuffle is the final ``dropDuplicates``, partitioned by (repo, dataset,
+subj) — write-side this becomes the Iceberg ``bucket(repo)`` layout.
 """
 
 from __future__ import annotations
 
 from functools import reduce
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from powerbi_ontology_extractor_spark.functions.naming import (
-    map_to_xsd,
+    map_to_xsd_sql,
     safe_name,
-    sanitize_dax,
+    safe_name_sql,
+    sanitize_dax_sql,
 )
 
 TRIPLE_COLS = [
@@ -53,36 +57,292 @@ DEFAULT_ROLES = ["Admin", "Analyst", "Viewer"]
 DEFAULT_GENERATED_AT = "1970-01-01T00:00:00"
 
 
+class T(NamedTuple):
+    """One triple spec as SQL text over its frame's columns.  The triple
+    is emitted when ``obj`` is non-null (the reference's ``if field:``
+    guards).  With ``each`` (an array expression) the spec is emitted
+    once per element — ``x`` the element, ``i`` its 0-based index — with
+    no null guard.  ``{generated_at}`` and, in per-role specs, ``{role}``
+    are bound to SQL string literals at render time."""
+
+    subj: str
+    pred: str
+    obj: str
+    lit: bool = False
+    dt: str = ""
+    each: str | None = None
+
+
+class Frame(NamedTuple):
+    """Derived columns (name → SQL, computed once: duplicating the
+    concat/translate trees into every spec multiplies codegen size ~10x),
+    the frame's specs, and the specs repeated for every role."""
+
+    cols: dict[str, str]
+    rows: list[T]
+    per_role: list[T] = ()
+
+
+LIT = True
+
+
+def _q(s: str) -> str:
+    """SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _c(s: str, p: str, o: str, lit: bool = False) -> T:
+    """A constant triple."""
+    return T(_q(s), _q(p), _q(o), lit)
+
+
+def _iri(*names: str) -> str:
+    """``ont:`` + safe_name of each column expression, joined by '_'."""
+    return "concat('ont:', " + ", '_', ".join(map(safe_name_sql, names)) + ")"
+
+
+def _nz(e: str) -> str:
+    """Empty string → null (the reference's ``if x:`` guard)."""
+    return f"nullif({e}, '')"
+
+
+def _when(cond: str, e: str) -> str:
+    return f"CASE WHEN {cond} THEN {e} END"
+
+
+def _decimal(e: str) -> str:
+    """A double as rdflib renders ``Literal(v, XSD.decimal)`` for the
+    values the reference passes (ints stay ints: 0 → "0", 0.5 → "0.5")."""
+    return (f"CASE WHEN {e} = floor({e}) THEN cast(cast({e} AS bigint) AS string)"
+            f" ELSE cast({e} AS string) END")
+
+
+# owl.py:129-181 — the fixed OntoGuard catalog: 35 triples + 3 per role
+_ROLE_CLASS = "concat('ont:', translate({role}, ' -.', '___'))"
+CATALOG = Frame({}, [
+    _c("ont:User", "rdf:type", "owl:Class"),
+    _c("ont:User", "rdfs:label", "User", LIT),
+    _c("ont:User", "rdfs:comment", "Base class for user roles", LIT),
+    _c("ont:Action", "rdf:type", "owl:Class"),
+    _c("ont:Action", "rdfs:label", "Action", LIT),
+    _c("ont:Action", "rdfs:comment", "Base class for actions", LIT),
+    *[
+        t
+        for a in ["ReadAction", "WriteAction", "DeleteAction", "ExecuteAction"]
+        for t in (
+            _c(f"ont:{a}", "rdf:type", "owl:Class"),
+            _c(f"ont:{a}", "rdfs:subClassOf", "ont:Action"),
+            _c(f"ont:{a}", "rdfs:label", a, LIT),
+        )
+    ],
+    _c("ont:requiresRole", "rdf:type", "owl:ObjectProperty"),
+    _c("ont:requiresRole", "rdfs:label", "requiresRole", LIT),
+    _c("ont:requiresRole", "rdfs:comment", "Role required to perform this action", LIT),
+    _c("ont:requiresRole", "rdfs:domain", "ont:Action"),
+    _c("ont:requiresRole", "rdfs:range", "ont:User"),
+    _c("ont:appliesTo", "rdf:type", "owl:ObjectProperty"),
+    _c("ont:appliesTo", "rdfs:label", "appliesTo", LIT),
+    _c("ont:appliesTo", "rdfs:comment", "Entity this action applies to", LIT),
+    _c("ont:appliesTo", "rdfs:domain", "ont:Action"),
+    _c("ont:allowsAction", "rdf:type", "owl:DatatypeProperty"),
+    _c("ont:allowsAction", "rdfs:label", "allowsAction", LIT),
+    _c("ont:allowsAction", "rdfs:comment", "Action type allowed", LIT),
+    _c("ont:allowsAction", "rdfs:range", "xsd:string"),
+    _c("ont:appliesToProperty", "rdf:type", "owl:DatatypeProperty"),
+    _c("ont:appliesToProperty", "rdfs:label", "appliesToProperty", LIT),
+    _c("ont:appliesToProperty", "rdfs:comment", "Property this action applies to", LIT),
+    _c("ont:appliesToProperty", "rdfs:range", "xsd:string"),
+], [
+    T(_ROLE_CLASS, "'rdf:type'", "'owl:Class'"),
+    T(_ROLE_CLASS, "'rdfs:subClassOf'", "'ont:User'"),
+    T(_ROLE_CLASS, "'rdfs:label'", "{role}", LIT),
+])
+
+
+def _crud(action: str, cls: str) -> list[T]:
+    """owl.py:386-409 — one action instance per (entity, role), 4 triples."""
+    subj = f"concat('ont:{action}_', _name, '_', {safe_name_sql('{role}')})"
+    return [
+        T(subj, "'rdf:type'", _q(cls)),
+        T(subj, "'ont:appliesTo'", "_ent"),
+        T(subj, "'ont:requiresRole'", _iri("{role}")),
+        T(subj, "'ont:allowsAction'", _q(action), LIT),
+    ]
+
+
+_IS = "constraint_type = '{}'".format
+
+GRAMMAR: dict[str, Frame] = {
+    "datasets": Frame(
+        {"_onto": f"concat('ont:', {safe_name_sql('dataset')}, '_Ontology')"},
+        [
+            # owl.py:114-127 + generator :147-155 metadata entries
+            T("_onto", "'rdf:type'", "'owl:Ontology'"),
+            T("_onto", "'rdfs:label'", "concat(dataset, '_Ontology')", LIT),
+            T("_onto", "'rdfs:comment'", "concat('Ontology from Power BI: ', path)", LIT),
+            T("_onto", "'owl:versionInfo'", "'1.0.0'", LIT),
+            T("_onto", "'ont:meta_generation_date'", "{generated_at}", LIT),
+            T("_onto", "'ont:meta_source_model'", "dataset", LIT),
+            *CATALOG.rows,
+            # owl.py:411-425 — added once per add_rls_rules call
+            _c("ont:daxFilter", "rdf:type", "owl:DatatypeProperty"),
+            _c("ont:daxFilter", "rdfs:label", "daxFilter", LIT),
+            _c("ont:daxFilter", "rdfs:comment", "DAX filter expression for RLS", LIT),
+        ],
+        CATALOG.per_role,
+    ),
+    # owl.py:183-199 entity classes, then the CRUD action instances
+    "ontology_entities": Frame(
+        {"_ent": _iri("entity"), "_name": safe_name_sql("entity")},
+        [
+            T("_ent", "'rdf:type'", "'owl:Class'"),
+            T("_ent", "'rdfs:label'", "entity", LIT),
+            T("_ent", "'rdfs:comment'", _nz("description"), LIT),
+            T("_ent", "'ont:entityType'", _nz("entity_type"), LIT),
+            T("_ent", "'ont:sourceTable'", _nz("source_table"), LIT),
+        ],
+        [*_crud("read", "ont:ReadAction"), *_crud("create", "ont:WriteAction"),
+         *_crud("update", "ont:WriteAction"), *_crud("delete", "ont:DeleteAction")],
+    ),
+    # owl.py:210-242 column properties (FunctionalProperty when unique);
+    # owl.py:244-262 the minCardinality restriction of required columns
+    "properties": Frame(
+        {"_ent": _iri("entity"), "_prop": _iri("entity", "property"),
+         "_bnode": _when("required", "concat('_:r_', sha1(concat_ws('|', "
+                                     "dataset, entity, property)))")},
+        [
+            T("_prop", "'rdf:type'", "'owl:DatatypeProperty'"),
+            T("_prop", "'rdfs:label'", "property", LIT),
+            T("_prop", "'rdfs:domain'", "_ent"),
+            T("_prop", "'rdfs:range'", map_to_xsd_sql("data_type")),
+            T("_prop", "'rdfs:comment'", _nz("description"), LIT),
+            T("_prop", "'ont:sourceColumn'", _nz("source_column"), LIT),
+            T("_prop", "'rdf:type'", _when("`unique`", "'owl:FunctionalProperty'")),
+            T("_bnode", "'rdf:type'", _when("required", "'owl:Restriction'")),
+            T("_bnode", "'owl:onProperty'", _when("required", "_prop")),
+            T("_bnode", "'owl:minCardinality'", _when("required", "'1'"), LIT,
+              "xsd:nonNegativeInteger"),
+            T("_ent", "'rdfs:subClassOf'", "_bnode"),
+        ],
+    ),
+    # owl.py:311-338 relationships as object properties
+    "ontology_relationships": Frame(
+        {"_rel": _iri("concat_ws('_', from_entity, relationship_type, to_entity)"),
+         "_from": _iri("from_entity"), "_to": _iri("to_entity")},
+        [
+            T("_rel", "'rdf:type'", "'owl:ObjectProperty'"),
+            T("_rel", "'rdfs:label'", "relationship_type", LIT),
+            T("_rel", "'rdfs:domain'", "_from"),
+            T("_rel", "'rdfs:range'", "_to"),
+            T("_rel", "'rdfs:comment'", _nz("description"), LIT),
+            T("_rel", "'ont:sourceRelationship'", _nz("source_relationship"), LIT),
+            T("_rel", "'ont:cardinality'", "cardinality", LIT),
+            T("_rel", "'ont:fromProperty'", _nz("from_property"), LIT),
+            T("_rel", "'ont:toProperty'", _nz("to_property"), LIT),
+        ],
+    ),
+    # owl.py:340-384 rule class + rule instance with sanitized DAX
+    "business_rules": Frame(
+        {"_cls": f"concat('ont:', {safe_name_sql('name')}, 'Rule')",
+         "_inst": f"concat('ont:', {safe_name_sql('name')}, 'RuleInstance')",
+         "_ent": _iri("entity")},
+        [
+            T("_cls", "'rdf:type'", "'owl:Class'"),
+            T("_cls", "'rdfs:subClassOf'", "'ont:Action'"),
+            T("_cls", "'rdfs:label'", "name", LIT),
+            T("_cls", "'rdfs:comment'", _nz("description"), LIT),
+            T("_inst", "'rdf:type'", "_cls"),
+            T("_inst", "'ont:appliesTo'", _when(f"{_nz('entity')} IS NOT NULL", "_ent")),
+            T("_inst", "'ont:condition'", _nz(sanitize_dax_sql("condition")), LIT),
+            T("_inst", "'ont:ruleAction'", _nz("action"), LIT),
+            T("_inst", "'ont:classification'", _nz("classification"), LIT),
+            T("_inst", "'ont:priority'", "cast(priority AS string)", LIT, "xsd:integer"),
+            T("_inst", "'ont:sourceMeasure'", _nz("source_measure"), LIT),
+        ],
+    ),
+    # owl.py:411-455 RLS rules as ReadAction instances; the role-class
+    # triples rely on the final set-dedup (the reference's
+    # graph-membership check :427 has the same effect)
+    "security_rules": Frame(
+        {"_role": _iri("role"),
+         "_rls": f"concat('ont:RLS_', {safe_name_sql('role')}, '_', "
+                 f"{safe_name_sql('`table`')})"},
+        [
+            T("_role", "'rdf:type'", "'owl:Class'"),
+            T("_role", "'rdfs:subClassOf'", "'ont:User'"),
+            T("_role", "'rdfs:label'", "role", LIT),
+            T("_rls", "'rdf:type'", "'ont:ReadAction'"),
+            T("_rls", "'rdfs:label'", "concat('RLS: ', role, ' on ', `table`)", LIT),
+            T("_rls", "'ont:appliesTo'", _iri("`table`")),
+            T("_rls", "'ont:requiresRole'", "_role"),
+            T("_rls", "'ont:daxFilter'", _nz(sanitize_dax_sql("dax_filter")), LIT),
+            T("_rls", "'rdfs:comment'", _nz("description"), LIT),
+            T("_rls", "'ont:isRLSRule'", "'true'", LIT, "xsd:boolean"),
+        ],
+    ),
+    # measure→depends_on→column lineage (beyond the reference's OWL
+    # export; dependency grammar = dax_parser.py:262-287): Table.Column
+    # → the property IRI, Table.* → the entity IRI
+    "parsed_measures": Frame(
+        {"_subj": f"concat('ont:measure_', {safe_name_sql('measure')})"},
+        [
+            T("_subj", "'rdf:type'", "'ont:Measure'"),
+            T("_subj", "'ont:measureType'", "measure_type", LIT),
+            T("_subj", "'ont:inTable'", _iri("`table`")),
+            T("_subj", "'ont:dependsOn'",
+              _iri("CASE WHEN endswith(x, '.*') THEN rtrim('.*', x) ELSE x END"),
+              each="filter(lineage_deps, d -> d IS NOT NULL)"),
+        ],
+    ),
+    # owl.py:264-299 (T7) property constraints as annotations; the enum
+    # predicate itself is indexed (owl.py:292).  Input frame:
+    # constraints_io.PROPERTY_CONSTRAINT_COLS
+    "property_constraints": Frame(
+        {"_prop": _iri("entity", "property")},
+        [
+            T("_prop", "'ont:minValue'", _when(_IS("range"), _decimal("min_value")),
+              LIT, "xsd:decimal"),
+            T("_prop", "'ont:maxValue'", _when(_IS("range"), _decimal("max_value")),
+              LIT, "xsd:decimal"),
+            T("_prop", "'ont:pattern'", _when(_IS("regex"), _nz("pattern")), LIT),
+            T("_prop", "'ont:references'", _when(_IS("reference"), _nz("reference")), LIT),
+            T("_prop", "'ont:constraintMessage'", _nz("message"), LIT),
+            T("_prop", "concat('ont:enumValue_', cast(i AS string))", "x", LIT,
+              each=_when(_IS("enum"), "enum_values")),
+        ],
+    ),
+    # owl.py:301-309 (T8) entity constraints as ont:EntityConstraint
+    # bnodes (same deterministic scheme as the restriction bnodes).
+    # Input frame: (repo, dataset, entity, constraint_type, value, message)
+    "entity_constraints": Frame(
+        {"_ent": _iri("entity"),
+         "_bnode": "concat('_:ec_', sha1(concat_ws('|', dataset, entity, "
+                   "constraint_type, value)))"},
+        [
+            T("_bnode", "'rdf:type'", "'ont:EntityConstraint'"),
+            T("_bnode", "'ont:constraintType'", _nz("constraint_type"), LIT),
+            T("_bnode", "'ont:constraintValue'", _nz("value"), LIT),
+            T("_bnode", "'rdfs:comment'", _nz("message"), LIT),
+            T("_ent", "'ont:hasConstraint'", "_bnode"),
+        ],
+    ),
+}
+
+# owl.py:79-112 export() order; the lineage frame last
+EXPORT_FRAMES = [
+    "datasets",
+    "ontology_entities",
+    "properties",
+    "ontology_relationships",
+    "business_rules",
+    "security_rules",
+    "parsed_measures",
+]
+
+
 def _uri(*parts: Column | str) -> Column:
     cols = [F.lit(p) if isinstance(p, str) else p for p in parts]
     return F.concat(*cols)
-
-
-def _rows(
-    df: DataFrame, triples: list[tuple[Column, str, Column, bool, str]]
-) -> DataFrame:
-    """Emit one output row per (input row × triple spec), dropping specs
-    whose obj is null (the reference's ``if field:`` guards)."""
-    structs = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    obj.isNotNull(),
-                    F.struct(
-                        subj.alias("subj"),
-                        F.lit(pred).alias("pred"),
-                        obj.alias("obj"),
-                        F.lit(is_lit).alias("obj_is_literal"),
-                        F.lit(dt).alias("obj_datatype"),
-                    ),
-                )
-                for (subj, pred, obj, is_lit, dt) in triples
-            ]
-        )
-    )
-    return df.select(
-        "repo", "dataset", F.explode(structs).alias("t")
-    ).select("repo", "dataset", "t.*")
 
 
 def _lit(col: Column | str) -> Column:
@@ -91,535 +351,64 @@ def _lit(col: Column | str) -> Column:
     return F.nullif(c, F.lit(""))
 
 
-def datasets_df(models: DataFrame) -> DataFrame:
-    """(repo, dataset, path) — one row per exported ontology.  Callers
-    inside the pipeline should pass the pre-materialized ``datasets``
-    frame from extract_all instead of re-deriving from ``models``."""
-    if set(models.columns) == {"repo", "dataset", "path"}:
-        return models
-    return models.select("repo", "dataset", "path").dropDuplicates(
-        ["repo", "dataset"]
-    )
+def _struct_sql(t: T) -> str:
+    return (f"named_struct('subj', {t.subj}, 'pred', {t.pred}, 'obj', {t.obj}, "
+            f"'obj_is_literal', {str(t.lit).lower()}, 'obj_datatype', {_q(t.dt)})")
 
 
-def ontology_metadata_triples(
-    models: DataFrame, generated_at: str = DEFAULT_GENERATED_AT
+def _rows(df: DataFrame, triples: list) -> DataFrame:
+    """Emit one output row per (input row × triple spec) in one
+    projection.  A spec is a ``T`` (SQL text) or a (subj Column, pred
+    str, obj Column, is_literal, datatype) tuple; scalar specs whose obj
+    is null are dropped (the reference's ``if field:`` guards).  The
+    ``T`` specs go to the JVM as ONE SQL expression: building them as
+    Columns costs ~100 py4j round trips per spec."""
+    cols, scalar, arrays = [], [], []
+    for t in triples:
+        if not isinstance(t, T):
+            subj, pred, obj, is_lit, dt = t
+            cols.append(F.when(obj.isNotNull(), F.struct(
+                subj.alias("subj"), F.lit(pred).alias("pred"), obj.alias("obj"),
+                F.lit(is_lit).alias("obj_is_literal"), F.lit(dt).alias("obj_datatype"),
+            )))
+        elif t.each is None:
+            scalar.append(f"CASE WHEN ({t.obj}) IS NOT NULL THEN {_struct_sql(t)} END")
+        else:
+            arrays.append(f"coalesce(transform({t.each}, (x, i) -> {_struct_sql(t)}), array())")
+    parts = [F.array(*cols)] if cols else []
+    if scalar or arrays:
+        parts.append(F.expr(f"concat(array({', '.join(scalar)}), {', '.join(arrays)})"
+                            if arrays else f"array({', '.join(scalar)})"))
+    return df.select("repo", "dataset", F.inline(F.array_compact(F.concat(*parts))))
+
+
+def _bind(spec: T, **params: str) -> T:
+    """Substitute ``{name}`` placeholders with SQL string literals."""
+    fields = []
+    for f in spec:
+        if isinstance(f, str):
+            for k, v in params.items():
+                f = f.replace("{" + k + "}", _q(v))
+        fields.append(f)
+    return T(*fields)
+
+
+def emit_frames(
+    inputs: list[tuple[Frame, DataFrame]],
+    roles: list[str] = DEFAULT_ROLES,
+    generated_at: str = DEFAULT_GENERATED_AT,
 ) -> DataFrame:
-    """owl.py:114-127 — ontology node: type/label/comment/versionInfo +
-    one ``ont:meta_<key>`` per metadata entry (generation_date,
-    source_model — generator :147-155)."""
-    d = datasets_df(models)
-    onto = _uri("ont:", safe_name(F.col("dataset")), "_Ontology")
-    name = F.concat(F.col("dataset"), F.lit("_Ontology"))
-    return _rows(
-        d,
-        [
-            (onto, "rdf:type", F.lit("owl:Ontology"), False, ""),
-            (onto, "rdfs:label", name, True, ""),
-            (
-                onto,
-                "rdfs:comment",
-                F.concat(F.lit("Ontology from Power BI: "), F.col("path")),
-                True,
-                "",
-            ),
-            (onto, "owl:versionInfo", F.lit("1.0.0"), True, ""),
-            (onto, "ont:meta_generation_date", F.lit(generated_at), True, ""),
-            (onto, "ont:meta_source_model", F.col("dataset"), True, ""),
-        ],
-    )
-
-
-def _static_base_rows(roles: list[str]) -> list[tuple[str, str, str, bool, str]]:
-    """The fixed OntoGuard catalog (owl.py:129-181): 44 triples with the
-    3 default roles."""
-    rows: list[tuple[str, str, str, bool, str]] = [
-        ("ont:User", "rdf:type", "owl:Class", False, ""),
-        ("ont:User", "rdfs:label", "User", True, ""),
-        ("ont:User", "rdfs:comment", "Base class for user roles", True, ""),
-        ("ont:Action", "rdf:type", "owl:Class", False, ""),
-        ("ont:Action", "rdfs:label", "Action", True, ""),
-        ("ont:Action", "rdfs:comment", "Base class for actions", True, ""),
-    ]
-    for a in ["ReadAction", "WriteAction", "DeleteAction", "ExecuteAction"]:
-        rows += [
-            (f"ont:{a}", "rdf:type", "owl:Class", False, ""),
-            (f"ont:{a}", "rdfs:subClassOf", "ont:Action", False, ""),
-            (f"ont:{a}", "rdfs:label", a, True, ""),
-        ]
-    rows += [
-        ("ont:requiresRole", "rdf:type", "owl:ObjectProperty", False, ""),
-        ("ont:requiresRole", "rdfs:label", "requiresRole", True, ""),
-        ("ont:requiresRole", "rdfs:comment",
-         "Role required to perform this action", True, ""),
-        ("ont:requiresRole", "rdfs:domain", "ont:Action", False, ""),
-        ("ont:requiresRole", "rdfs:range", "ont:User", False, ""),
-        ("ont:appliesTo", "rdf:type", "owl:ObjectProperty", False, ""),
-        ("ont:appliesTo", "rdfs:label", "appliesTo", True, ""),
-        ("ont:appliesTo", "rdfs:comment",
-         "Entity this action applies to", True, ""),
-        ("ont:appliesTo", "rdfs:domain", "ont:Action", False, ""),
-        ("ont:allowsAction", "rdf:type", "owl:DatatypeProperty", False, ""),
-        ("ont:allowsAction", "rdfs:label", "allowsAction", True, ""),
-        ("ont:allowsAction", "rdfs:comment", "Action type allowed", True, ""),
-        ("ont:allowsAction", "rdfs:range", "xsd:string", False, ""),
-        ("ont:appliesToProperty", "rdf:type", "owl:DatatypeProperty", False, ""),
-        ("ont:appliesToProperty", "rdfs:label", "appliesToProperty", True, ""),
-        ("ont:appliesToProperty", "rdfs:comment",
-         "Property this action applies to", True, ""),
-        ("ont:appliesToProperty", "rdfs:range", "xsd:string", False, ""),
-    ]
-    for role in roles:
-        safe = role.replace(" ", "_").replace("-", "_").replace(".", "_")
-        rows += [
-            (f"ont:{safe}", "rdf:type", "owl:Class", False, ""),
-            (f"ont:{safe}", "rdfs:subClassOf", "ont:User", False, ""),
-            (f"ont:{safe}", "rdfs:label", role, True, ""),
-        ]
-    return rows
-
-
-def base_class_triples(
-    models: DataFrame, roles: list[str] = DEFAULT_ROLES
-) -> DataFrame:
-    """Static catalog × datasets — a literal frame crossJoined against
-    the (small) dataset list; broadcast by construction."""
-    spark = models.sparkSession
-    static = spark.createDataFrame(
-        _static_base_rows(roles),
-        "subj string, pred string, obj string, obj_is_literal boolean, obj_datatype string",
-    )
-    return (
-        datasets_df(models)
-        .select("repo", "dataset")
-        .crossJoin(F.broadcast(static))
-        .select(*TRIPLE_COLS)
-    )
-
-
-def entity_triples(ontology_entities: DataFrame) -> DataFrame:
-    """owl.py:183-199 — dataset→table schema triples."""
-    ontology_entities = ontology_entities.withColumn(
-        "_ent", _uri("ont:", safe_name(F.col("entity")))
-    )
-    e = F.col("_ent")
-    return _rows(
-        ontology_entities,
-        [
-            (e, "rdf:type", F.lit("owl:Class"), False, ""),
-            (e, "rdfs:label", F.col("entity"), True, ""),
-            (e, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (e, "ont:entityType", _lit(F.col("entity_type")), True, ""),
-            (e, "ont:sourceTable", _lit(F.col("source_table")), True, ""),
-        ],
-    )
-
-
-def property_triples(properties: DataFrame) -> DataFrame:
-    """owl.py:210-242 — table→column schema triples, plus the
-    FunctionalProperty tag for unique columns and the 4-triple
-    minCardinality restriction for required columns (owl.py:244-262,
-    deterministic bnode IRI)."""
-    # precompute URI columns once: duplicating the concat/translate
-    # trees into every triple spec multiplies codegen size ~10x
-    properties = properties.withColumn(
-        "_ent", _uri("ont:", safe_name(F.col("entity")))
-    ).withColumn(
-        "_prop",
-        _uri("ont:", safe_name(F.col("entity")), "_", safe_name(F.col("property"))),
-    )
-    ent = F.col("_ent")
-    prop = F.col("_prop")
-    base = _rows(
-        properties,
-        [
-            (prop, "rdf:type", F.lit("owl:DatatypeProperty"), False, ""),
-            (prop, "rdfs:label", F.col("property"), True, ""),
-            (prop, "rdfs:domain", ent, False, ""),
-            (prop, "rdfs:range", map_to_xsd(F.col("data_type")), False, ""),
-            (prop, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (prop, "ont:sourceColumn", _lit(F.col("source_column")), True, ""),
-            (
-                prop,
-                "rdf:type",
-                F.when(F.col("unique"), F.lit("owl:FunctionalProperty")),
-                False,
-                "",
-            ),
-        ],
-    )
-    required_df = properties.where(F.col("required")).withColumn(
-        "_bnode",
-        F.concat(
-            F.lit("_:r_"),
-            F.sha1(
-                F.concat_ws("|", F.col("dataset"), F.col("entity"), F.col("property"))
-            ),
-        ),
-    )
-    bnode = F.col("_bnode")
-    required = _rows(
-        required_df,
-        [
-            (bnode, "rdf:type", F.lit("owl:Restriction"), False, ""),
-            (bnode, "owl:onProperty", prop, False, ""),
-            (
-                bnode,
-                "owl:minCardinality",
-                F.lit("1"),
-                True,
-                "xsd:nonNegativeInteger",
-            ),
-            (ent, "rdfs:subClassOf", bnode, False, ""),
-        ],
-    )
-    return base.unionByName(required)
-
-
-def relationship_triples(ontology_relationships: DataFrame) -> DataFrame:
-    """owl.py:311-338 — FK relationship edges as object properties."""
-    ontology_relationships = (
-        ontology_relationships.withColumn(
-            "_rel",
-            _uri(
-                "ont:",
-                safe_name(
-                    F.concat_ws(
-                        "_",
-                        F.col("from_entity"),
-                        F.col("relationship_type"),
-                        F.col("to_entity"),
-                    )
-                ),
-            ),
+    """Union of each (grammar frame, input DataFrame) rendered in one
+    projection; no dedup."""
+    out = []
+    for frame, df in inputs:
+        specs = [_bind(t, generated_at=generated_at) for t in frame.rows]
+        specs += [_bind(t, role=r) for r in roles for t in frame.per_role]
+        derived = df.selectExpr(
+            "*", *[f"{sql} AS {name}" for name, sql in frame.cols.items()]
         )
-        .withColumn("_from", _uri("ont:", safe_name(F.col("from_entity"))))
-        .withColumn("_to", _uri("ont:", safe_name(F.col("to_entity"))))
-    )
-    rel = F.col("_rel")
-    return _rows(
-        ontology_relationships,
-        [
-            (rel, "rdf:type", F.lit("owl:ObjectProperty"), False, ""),
-            (rel, "rdfs:label", F.col("relationship_type"), True, ""),
-            (rel, "rdfs:domain", F.col("_from"), False, ""),
-            (rel, "rdfs:range", F.col("_to"), False, ""),
-            (rel, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (rel, "ont:sourceRelationship", _lit(F.col("source_relationship")), True, ""),
-            (rel, "ont:cardinality", F.col("cardinality"), True, ""),
-            (rel, "ont:fromProperty", _lit(F.col("from_property")), True, ""),
-            (rel, "ont:toProperty", _lit(F.col("to_property")), True, ""),
-        ],
-    )
-
-
-def business_rule_triples(business_rules: DataFrame) -> DataFrame:
-    """owl.py:340-384 — rule class + rule instance with sanitized DAX
-    condition (measure→rule lineage)."""
-    business_rules = business_rules.withColumn(
-        "_cls", _uri("ont:", safe_name(F.col("name")), "Rule")
-    ).withColumn(
-        "_inst", _uri("ont:", safe_name(F.col("name")), "RuleInstance")
-    ).withColumn("_ent_uri", _uri("ont:", safe_name(F.col("entity"))))
-    rule_cls = F.col("_cls")
-    rule_inst = F.col("_inst")
-    return _rows(
-        business_rules,
-        [
-            (rule_cls, "rdf:type", F.lit("owl:Class"), False, ""),
-            (rule_cls, "rdfs:subClassOf", F.lit("ont:Action"), False, ""),
-            (rule_cls, "rdfs:label", F.col("name"), True, ""),
-            (rule_cls, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (rule_inst, "rdf:type", rule_cls, False, ""),
-            (
-                rule_inst,
-                "ont:appliesTo",
-                F.when(
-                    _lit(F.col("entity")).isNotNull(), F.col("_ent_uri")
-                ),
-                False,
-                "",
-            ),
-            (
-                rule_inst,
-                "ont:condition",
-                _lit(sanitize_dax(F.col("condition"))),
-                True,
-                "",
-            ),
-            (rule_inst, "ont:ruleAction", _lit(F.col("action")), True, ""),
-            (rule_inst, "ont:classification", _lit(F.col("classification")), True, ""),
-            (
-                rule_inst,
-                "ont:priority",
-                F.col("priority").cast("string"),
-                True,
-                "xsd:integer",
-            ),
-            (rule_inst, "ont:sourceMeasure", _lit(F.col("source_measure")), True, ""),
-        ],
-    )
-
-
-def crud_triples(
-    ontology_entities: DataFrame, roles: list[str] = DEFAULT_ROLES
-) -> DataFrame:
-    """owl.py:386-409 — entities × {read,create,update,delete} × roles,
-    4 triples each: the dominant family by volume.  Expressed as an
-    explicit crossJoin with a 4×|roles| literal frame (broadcast)."""
-    spark = ontology_entities.sparkSession
-    action_cls = {
-        "read": "ont:ReadAction",
-        "create": "ont:WriteAction",
-        "update": "ont:WriteAction",
-        "delete": "ont:DeleteAction",
-    }
-    combos = [
-        (action, cls, role)
-        for action, cls in action_cls.items()
-        for role in roles
-    ]
-    combo_df = spark.createDataFrame(
-        combos, "action string, action_class string, role string"
-    )
-    df = ontology_entities.select("repo", "dataset", "entity").crossJoin(
-        F.broadcast(combo_df)
-    )
-    df = (
-        df.withColumn(
-            "_subj",
-            _uri(
-                "ont:", F.col("action"), "_", safe_name(F.col("entity")),
-                "_", safe_name(F.col("role")),
-            ),
-        )
-        .withColumn("_ent_uri", _uri("ont:", safe_name(F.col("entity"))))
-        .withColumn("_role_uri", _uri("ont:", safe_name(F.col("role"))))
-    )
-    subj = F.col("_subj")
-    return _rows(
-        df,
-        [
-            (subj, "rdf:type", F.col("action_class"), False, ""),
-            (subj, "ont:appliesTo", F.col("_ent_uri"), False, ""),
-            (subj, "ont:requiresRole", F.col("_role_uri"), False, ""),
-            (subj, "ont:allowsAction", F.col("action"), True, ""),
-        ],
-    )
-
-
-def rls_triples(security_rules: DataFrame, models: DataFrame) -> DataFrame:
-    # `models` may be the pre-derived datasets frame
-    """owl.py:411-455 — RLS rules as ReadAction instances.
-
-    The 3 one-time daxFilter property triples are emitted per dataset
-    (the reference adds them whenever add_rls_rules is called); the
-    role-class triples are emitted unconditionally and rely on the
-    final set-dedup (the reference's graph-membership check :427 has
-    the same effect)."""
-    d = datasets_df(models)
-    dax_prop = _rows(
-        d,
-        [
-            (F.lit("ont:daxFilter"), "rdf:type", F.lit("owl:DatatypeProperty"), False, ""),
-            (F.lit("ont:daxFilter"), "rdfs:label", F.lit("daxFilter"), True, ""),
-            (
-                F.lit("ont:daxFilter"),
-                "rdfs:comment",
-                F.lit("DAX filter expression for RLS"),
-                True,
-                "",
-            ),
-        ],
-    )
-    security_rules = security_rules.withColumn(
-        "_role_uri", _uri("ont:", safe_name(F.col("role")))
-    ).withColumn(
-        "_rls",
-        _uri("ont:RLS_", safe_name(F.col("role")), "_", safe_name(F.col("table"))),
-    )
-    role_uri = F.col("_role_uri")
-    rls = F.col("_rls")
-    per_rule = _rows(
-        security_rules,
-        [
-            (role_uri, "rdf:type", F.lit("owl:Class"), False, ""),
-            (role_uri, "rdfs:subClassOf", F.lit("ont:User"), False, ""),
-            (role_uri, "rdfs:label", F.col("role"), True, ""),
-            (rls, "rdf:type", F.lit("ont:ReadAction"), False, ""),
-            (
-                rls,
-                "rdfs:label",
-                F.concat(
-                    F.lit("RLS: "), F.col("role"), F.lit(" on "), F.col("table")
-                ),
-                True,
-                "",
-            ),
-            (rls, "ont:appliesTo", _uri("ont:", safe_name(F.col("table"))), False, ""),
-            (rls, "ont:requiresRole", role_uri, False, ""),
-            (rls, "ont:daxFilter", _lit(sanitize_dax(F.col("dax_filter"))), True, ""),
-            (rls, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (rls, "ont:isRLSRule", F.lit("true"), True, "xsd:boolean"),
-        ],
-    )
-    return dax_prop.unionByName(per_rule)
-
-
-def _decimal_literal(c: Column) -> Column:
-    """Render a double the way rdflib renders ``Literal(v, XSD.decimal)``
-    for the values the reference passes (ints stay ints: 0 → "0",
-    0.5 → "0.5")."""
-    return F.when(
-        c == F.floor(c), c.cast("long").cast("string")
-    ).otherwise(c.cast("string"))
-
-
-def property_constraint_triples(property_constraints: DataFrame) -> DataFrame:
-    """owl.py:264-299 (T7) — property-level constraints as annotations:
-    range → ont:minValue/ont:maxValue (xsd:decimal), regex →
-    ont:pattern, enum → one ont:enumValue_<i> per value (posexplode),
-    reference → ont:references, plus ont:constraintMessage when a
-    message is present.
-
-    Input frame: see constraints_io.PROPERTY_CONSTRAINT_COLS.
-    """
-    pcs = property_constraints.withColumn(
-        "_prop",
-        _uri("ont:", safe_name(F.col("entity")), "_", safe_name(F.col("property"))),
-    )
-    prop = F.col("_prop")
-    is_type = lambda t: F.col("constraint_type") == t
-    base = _rows(
-        pcs,
-        [
-            (
-                prop,
-                "ont:minValue",
-                F.when(is_type("range"), _decimal_literal(F.col("min_value"))),
-                True,
-                "xsd:decimal",
-            ),
-            (
-                prop,
-                "ont:maxValue",
-                F.when(is_type("range"), _decimal_literal(F.col("max_value"))),
-                True,
-                "xsd:decimal",
-            ),
-            (prop, "ont:pattern", F.when(is_type("regex"), _lit(F.col("pattern"))), True, ""),
-            (
-                prop,
-                "ont:references",
-                F.when(is_type("reference"), _lit(F.col("reference"))),
-                True,
-                "",
-            ),
-            (prop, "ont:constraintMessage", _lit(F.col("message")), True, ""),
-        ],
-    )
-    # enum: the predicate itself is indexed (owl.py:292) — needs a
-    # dynamic pred column, so it cannot go through the static-spec _rows
-    enum = (
-        pcs.where(is_type("enum") & F.col("enum_values").isNotNull())
-        .select(
-            "repo",
-            "dataset",
-            prop.alias("subj"),
-            F.posexplode("enum_values").alias("i", "val"),
-        )
-        .select(
-            "repo",
-            "dataset",
-            "subj",
-            F.concat(F.lit("ont:enumValue_"), F.col("i").cast("string")).alias(
-                "pred"
-            ),
-            F.col("val").alias("obj"),
-            F.lit(True).alias("obj_is_literal"),
-            F.lit("").alias("obj_datatype"),
-        )
-    )
-    return base.unionByName(enum)
-
-
-def entity_constraint_triples(entity_constraints: DataFrame) -> DataFrame:
-    """owl.py:301-309 (T8) — entity-level constraints as
-    ont:EntityConstraint bnodes (deterministic bnode IRIs, same scheme
-    as the required-property restriction bnodes).
-
-    Input frame: (repo, dataset, entity, constraint_type, value,
-    message).
-    """
-    ecs = entity_constraints.withColumn(
-        "_ent", _uri("ont:", safe_name(F.col("entity")))
-    ).withColumn(
-        "_bnode",
-        F.concat(
-            F.lit("_:ec_"),
-            F.sha1(
-                F.concat_ws(
-                    "|",
-                    F.col("dataset"),
-                    F.col("entity"),
-                    F.col("constraint_type"),
-                    F.col("value"),
-                )
-            ),
-        ),
-    )
-    b = F.col("_bnode")
-    return _rows(
-        ecs,
-        [
-            (b, "rdf:type", F.lit("ont:EntityConstraint"), False, ""),
-            (b, "ont:constraintType", _lit(F.col("constraint_type")), True, ""),
-            (b, "ont:constraintValue", _lit(F.col("value")), True, ""),
-            (b, "rdfs:comment", _lit(F.col("message")), True, ""),
-            (F.col("_ent"), "ont:hasConstraint", b, False, ""),
-        ],
-    )
-
-
-def lineage_triples(parsed_measures: DataFrame) -> DataFrame:
-    """measure→depends_on→column lineage (north-star surface beyond the
-    reference's OWL export; dependency grammar = dax_parser.py:262-287).
-
-    ``Table.Column`` deps resolve to the property IRI
-    ``ont:<Table>_<Column>`` (same scheme as property_triples);
-    ``Table.*`` deps resolve to the entity IRI."""
-    m = parsed_measures.select(
-        "repo",
-        "dataset",
-        "table",
-        "measure",
-        "measure_type",
-        F.explode_outer("lineage_deps").alias("dep"),
-    )
-    heads = parsed_measures.select(
-        "repo", "dataset", "table", "measure", "measure_type"
-    ).withColumn("_subj", _uri("ont:measure_", safe_name(F.col("measure"))))
-    m = m.withColumn(
-        "_subj", _uri("ont:measure_", safe_name(F.col("measure")))
-    )
-    subj = F.col("_subj")
-    dep_uri = F.when(
-        F.col("dep").endswith(".*"),
-        _uri("ont:", safe_name(F.expr("rtrim('.*', dep)"))),
-    ).otherwise(_uri("ont:", safe_name(F.col("dep"))))
-    head = _rows(
-        heads,
-        [
-            (subj, "rdf:type", F.lit("ont:Measure"), False, ""),
-            (subj, "ont:measureType", F.col("measure_type"), True, ""),
-            (subj, "ont:inTable", _uri("ont:", safe_name(F.col("table"))), False, ""),
-        ],
-    )
-    deps = _rows(
-        m.where(F.col("dep").isNotNull()),
-        [(subj, "ont:dependsOn", dep_uri, False, "")],
-    )
-    return head.unionByName(deps)
+        out.append(_rows(derived, specs))
+    return reduce(DataFrame.unionByName, out)
 
 
 def export_triples(
@@ -629,44 +418,19 @@ def export_triples(
     generated_at: str = DEFAULT_GENERATED_AT,
     include_lineage: bool = True,
     dedup: bool = True,
-    prebuilt: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """Full OWL export (owl.py:79-112 orchestration): union of all
-    families + set dedup.  Matches the reference graph triple-for-triple
-    per (repo, dataset) on the model/ontology families.
+    """Full OWL export (owl.py:79-112 orchestration): every export frame
+    rendered through ``GRAMMAR`` + set dedup.  Matches the reference
+    graph triple-for-triple per (repo, dataset) on the model/ontology
+    families.
 
     ``dedup=False`` skips the set-dedup shuffle — for callers (the full
     pipeline) that union further families and apply ONE global dedup at
     the end; two full-row dedup shuffles of long URI/literal strings
-    was the flagship job's single biggest exchange.
-
-    ``prebuilt`` may carry 'metadata'/'base_class' frames constructed
-    during the pipeline's barrier overlap — the same builders with the
-    same (datasets, generated_at/roles) args, just built while the
-    checkpoint round ran; the union ORDER is unchanged."""
-    pre = prebuilt or {}
-    datasets = model_dfs.get("datasets")
-    if datasets is None:
-        datasets = datasets_df(model_dfs["models"])
-    meta = pre.get("metadata")
-    if meta is None:
-        meta = ontology_metadata_triples(datasets, generated_at)
-    base = pre.get("base_class")
-    if base is None:
-        base = base_class_triples(datasets, roles)
-    fams = [
-        meta,
-        base,
-        entity_triples(ontology_dfs["ontology_entities"]),
-        property_triples(model_dfs["properties"]),
-        relationship_triples(ontology_dfs["ontology_relationships"]),
-        business_rule_triples(ontology_dfs["business_rules"]),
-        crud_triples(ontology_dfs["ontology_entities"], roles),
-        rls_triples(model_dfs["security_rules"], datasets),
-    ]
-    if include_lineage:
-        fams.append(lineage_triples(ontology_dfs["parsed_measures"]))
-    union = reduce(lambda a, b: a.unionByName(b), fams)
+    was the flagship job's single biggest exchange."""
+    frames = {**model_dfs, **ontology_dfs}
+    keys = EXPORT_FRAMES if include_lineage else EXPORT_FRAMES[:-1]
+    union = emit_frames([(GRAMMAR[k], frames[k]) for k in keys], roles, generated_at)
     return union.dropDuplicates(TRIPLE_COLS) if dedup else union
 
 
@@ -709,13 +473,14 @@ def ntriples_lines(
             )
         return out.otherwise(F.concat(F.lit("<"), col, F.lit(">")))
 
-    # NB: Java regexp replacement strings unescape `\x` — the quote
-    # escape needs a DOUBLED backslash in the replacement or the output
-    # is a bare `"` (invalid N-Triples; caught by the q_ntriples_render
-    # DuckDB oracle)
-    lit_escaped = F.regexp_replace(
-        F.regexp_replace(F.col("obj"), r"\\", r"\\\\"), '"', '\\\\"'
-    )
+    # NB: Java regexp replacement strings unescape `\x` — each escape
+    # needs a DOUBLED backslash in the replacement or the output is a
+    # bare `"` (invalid N-Triples; caught by the q_ntriples_render DuckDB
+    # oracle).  N-Triples also forbids raw LF/CR inside a literal, and
+    # sanitized DAX keeps its newlines.
+    lit_escaped = F.col("obj")
+    for pat, rep in [(r"\\", r"\\\\"), ('"', r'\\"'), ("\n", r"\\n"), ("\r", r"\\r")]:
+        lit_escaped = F.regexp_replace(lit_escaped, pat, rep)
     obj = F.when(
         F.col("obj_is_literal"),
         F.when(

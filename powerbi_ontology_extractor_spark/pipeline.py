@@ -43,13 +43,11 @@ from powerbi_ontology_extractor_spark.operators.constraints_io import (
 from powerbi_ontology_extractor_spark.operators.triples import (
     DEFAULT_GENERATED_AT,
     DEFAULT_ROLES,
+    GRAMMAR,
     TRIPLE_COLS,
-    base_class_triples,
-    entity_constraint_triples,
+    emit_frames,
     export_summary,
     export_triples,
-    ontology_metadata_triples,
-    property_constraint_triples,
 )
 
 
@@ -73,13 +71,12 @@ def _assemble(
     round suffices — round latency is pure serial time (measured ~6-10 s
     at 36k repos).
 
-    The round is submitted as FUTURES and the driver builds every
-    family whose inputs are only (corpus, datasets) — sidecar
-    constraints, metadata, base classes, M-datasource and report
-    families — WHILE the remaining five checkpoints execute.  py4j
-    expression construction is driver-only, the checkpoint threads just
-    block on the JVM, so the build hides behind the round latency
-    (measured rest_wait=0.00 at 400 repos).
+    The round is submitted as FUTURES and the driver builds the
+    M-datasource and report families (inputs: corpus + datasets) WHILE
+    the remaining five checkpoints execute.  py4j expression
+    construction is driver-only, the checkpoint threads just block on
+    the JVM, so the build hides behind the round latency.  Every other
+    family renders from ``triples.GRAMMAR``, one projection per frame.
 
     The T7/T8 constraint families (owl.py:264-309) are the suggested
     validation constraints (ontology_generator.py:314-366 heuristics,
@@ -111,14 +108,7 @@ def _assemble(
         futs = {
             k: ex.submit(checkpoint_one, v, target) for k, v in frames.items()
         }
-        # corpus-only families: buildable before ANY checkpoint lands
-        sidecar_pcs = sidecar_property_constraints(corpus)
-        sidecar_ect = entity_constraint_triples(sidecar_entity_constraints(corpus))
         datasets = futs["datasets"].result()
-        prebuilt = {
-            "metadata": ontology_metadata_triples(datasets, generated_at),
-            "base_class": base_class_triples(datasets, roles),
-        }
         latent = m_datasource_triples(corpus, datasets).unionByName(
             report_triples(corpus, datasets)
         )
@@ -143,14 +133,15 @@ def _assemble(
         "enhancements": suggest_enhancements(ckpt["properties"]),
     }
     pcs = enhancement_property_constraints(onto_dfs["enhancements"]).unionByName(
-        sidecar_pcs
+        sidecar_property_constraints(corpus)
     )
+    constraints = emit_frames([
+        (GRAMMAR["property_constraints"], pcs),
+        (GRAMMAR["entity_constraints"], sidecar_entity_constraints(corpus)),
+    ])
     triples = (
-        export_triples(
-            onto_dfs, model_dfs, roles, generated_at, dedup=False,
-            prebuilt=prebuilt,
-        )
-        .unionByName(property_constraint_triples(pcs).unionByName(sidecar_ect))
+        export_triples(onto_dfs, model_dfs, roles, generated_at, dedup=False)
+        .unionByName(constraints)
         .unionByName(latent)
     )
     return triples.dropDuplicates(TRIPLE_COLS), model_dfs, onto_dfs

@@ -2,17 +2,15 @@
 + full export, asserted EXACTLY against the reference's own
 _dict_to_ontology → OWLExporter run live."""
 
-import hashlib
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from powerbi_ontology_extractor_spark.operators import ontology_io as OI
-from tests.reference_harness import (
-    canonicalize_bnodes,
-    reference_triples_from_ontology_doc,
-)
+from tests.parity_cases import doc_corpus, engine_doc_set
+from tests.reference_harness import reference_triples_from_ontology_doc
+
+DOC_SEEDS = [5, 15, 25, 35, 45, 55]
 
 DOC = {
     "name": "Sales Model_Ontology",
@@ -70,25 +68,13 @@ DOC = {
 }
 
 
-def _corpus(spark, doc):
-    content = json.dumps(doc)
-    sha = hashlib.sha256(content.encode()).hexdigest()
-    return spark.createDataFrame(
-        [("r", "sales_ontology.json", "0" * 40, OI.LANG, content, sha)],
-        "repo string, path string, commit string, lang string, "
-        "content string, content_sha256 string",
-    )
-
-
 @pytest.fixture(scope="module")
 def engine_set(spark):
-    t = OI.ontology_doc_triples(_corpus(spark, DOC))
-    rows = t.select("subj", "pred", "obj").collect()
-    return canonicalize_bnodes({(r["subj"], r["pred"], r["obj"]) for r in rows})
+    return engine_doc_set(spark, DOC)
 
 
 def test_loader_frames(spark):
-    c = _corpus(spark, DOC)
+    c = doc_corpus(spark, DOC)
     ents = {r["entity"]: r for r in OI.doc_entities(c).collect()}
     assert ents["Customer"]["entity_type"] == "dimension"
     assert ents["Customer"]["n_properties"] == 4
@@ -102,7 +88,7 @@ def test_loader_frames(spark):
 
 
 def test_malformed_doc_isolated(spark):
-    c = _corpus(spark, DOC).unionByName(
+    c = doc_corpus(spark, DOC).unionByName(
         spark.createDataFrame(
             [("r2", "bad.json", "0" * 40, OI.LANG, "{broken", "x")],
             "repo string, path string, commit string, lang string, "
@@ -113,6 +99,7 @@ def test_malformed_doc_isolated(spark):
     assert OI.doc_datasets(c).count() == 1
 
 
+@pytest.mark.requires_reference
 def test_exact_parity_with_reference_import_path(engine_set):
     ref, name = reference_triples_from_ontology_doc(DOC)
     assert name == "Sales Model_Ontology"
@@ -195,15 +182,12 @@ def _random_doc(seed: int) -> dict:
     }
 
 
-@pytest.mark.parametrize("seed", [5, 15, 25, 35, 45, 55])
+@pytest.mark.requires_reference
+@pytest.mark.parametrize("seed", DOC_SEEDS)
 def test_fuzzed_doc_parity(spark, seed):
     doc = _random_doc(seed)
     ref, _ = reference_triples_from_ontology_doc(doc)
-    t = OI.ontology_doc_triples(_corpus(spark, doc))
-    eng = canonicalize_bnodes(
-        {(r["subj"], r["pred"], r["obj"])
-         for r in t.select("subj", "pred", "obj").collect()}
-    )
+    eng = engine_doc_set(spark, doc)
     assert ref == eng, (
         f"seed={seed} doc={json.dumps(doc)[:400]}\n"
         f"missing: {sorted(ref - eng)[:12]}\nextra: {sorted(eng - ref)[:12]}"

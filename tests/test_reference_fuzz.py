@@ -5,13 +5,15 @@ the weird corners — empty/duplicate names, missing optional fields,
 unknown dataTypes, bare-threshold DAX, semicolon injection, dangling
 relationship endpoints, empty RLS filters."""
 
-import hashlib
 import json
 import random
 
 import pytest
 
-from tests.reference_harness import canonicalize_bnodes, reference_triples
+from tests.parity_cases import engine_model_set, mask_date
+from tests.reference_harness import reference_triples
+
+SEEDS = [11, 22, 33, 44, 55, 66, 77, 88, 99, 110, 121, 132]
 
 NAME_ALPHABET = "ABC xyz09._-"
 
@@ -103,44 +105,14 @@ def _random_model(seed: int) -> dict:
             "relationships": rels, "roles": roles}
 
 
-def _mask_date(triples):
-    return {
-        (s, p, "<ts>" if p == "ont:meta_generation_date" else o)
-        for (s, p, o) in triples
-    }
-
-
-@pytest.mark.parametrize("seed", [11, 22, 33, 44, 55, 66, 77, 88, 99, 110, 121, 132])
+@pytest.mark.requires_reference
+@pytest.mark.parametrize("seed", SEEDS)
 def test_fuzzed_model_parity(spark, tmp_path, seed):
-    from powerbi_ontology_extractor_spark.operators.extract import extract_all
-    from powerbi_ontology_extractor_spark.operators.ontology import (
-        generate_ontology,
-    )
-    from powerbi_ontology_extractor_spark.operators.triples import (
-        export_triples,
-    )
-
     model = _random_model(seed)
     pbix = tmp_path / f"fuzz{seed}.pbix"
     ref, _ = reference_triples(model, str(pbix))
-    ref = _mask_date(ref)
-
-    content = json.dumps(model)
-    sha = hashlib.sha256(content.encode()).hexdigest()
-    corpus = spark.createDataFrame(
-        [("r", str(pbix), "0" * 40, "model_json", content, sha)],
-        "repo string, path string, commit string, lang string, "
-        "content string, content_sha256 string",
-    )
-    dfs = extract_all(corpus)
-    onto = generate_ontology(dfs)
-    t = export_triples(onto, dfs, include_lineage=False)
-    eng = _mask_date(
-        canonicalize_bnodes(
-            {(r["subj"], r["pred"], r["obj"])
-             for r in t.select("subj", "pred", "obj").collect()}
-        )
-    )
+    ref = mask_date(ref)
+    eng = engine_model_set(spark, json.dumps(model), str(pbix))
     assert ref == eng, (
         f"seed={seed} model={json.dumps(model)[:400]}\n"
         f"missing: {sorted(ref - eng)[:12]}\nextra: {sorted(eng - ref)[:12]}"

@@ -5,13 +5,18 @@ the reference's own conftest-style Shipment/Customer fixture
 gate, checked against the real thing rather than a hand-derived
 reading of owl.py."""
 
-import hashlib
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
-from tests.reference_harness import canonicalize_bnodes, reference_triples
+from tests.parity_cases import (
+    corpus_model_content,
+    engine_model_set,
+    mask_date,
+)
+from tests.reference_harness import reference_triples
+
+pytestmark = pytest.mark.requires_reference
 
 # the reference conftest sample model (tests/conftest.py:32-99 shape)
 MODEL_DATA = {
@@ -61,14 +66,11 @@ MODEL_DATA = {
     ],
 }
 
-GENERATION_DATE = "<generation_date>"
-
-
-def _mask_date(triples):
-    return {
-        (s, p, GENERATION_DATE if p == "ont:meta_generation_date" else o)
-        for (s, p, o) in triples
-    }
+# 0: wrapped JSON; 1: odd + divergent (ChurnProbability, int64 Segment,
+# many-to-many Shipment rel); 3: wrapped odd; 4: EVEN + divergent
+# (RiskScore combined with the divergent schema) — covers every
+# generator branch pair
+CORPUS_REPOS = [0, 1, 3, 4]
 
 
 @pytest.fixture(scope="module")
@@ -76,35 +78,13 @@ def ref_set(tmp_path_factory):
     pbix = tmp_path_factory.mktemp("ref") / "model.pbix"
     triples, name = reference_triples(MODEL_DATA, str(pbix))
     assert name == "Test Model_Ontology"
-    return _mask_date(triples), str(pbix)
+    return mask_date(triples), str(pbix)
 
 
 @pytest.fixture(scope="module")
 def engine_set(spark, ref_set):
-    from powerbi_ontology_extractor_spark.operators.extract import extract_all
-    from powerbi_ontology_extractor_spark.operators.ontology import (
-        generate_ontology,
-    )
-    from powerbi_ontology_extractor_spark.operators.triples import (
-        export_triples,
-    )
-
     _, pbix_path = ref_set
-    content = json.dumps(MODEL_DATA)
-    sha = hashlib.sha256(content.encode()).hexdigest()
-    corpus = spark.createDataFrame(
-        [("r", pbix_path, "0" * 40, "model_json", content, sha)],
-        "repo string, path string, commit string, lang string, "
-        "content string, content_sha256 string",
-    )
-    dfs = extract_all(corpus)
-    onto = generate_ontology(dfs)
-    # the reference export() emits no lineage family (north-star extra)
-    t = export_triples(onto, dfs, include_lineage=False)
-    rows = t.select("subj", "pred", "obj").collect()
-    return _mask_date(
-        canonicalize_bnodes({(r["subj"], r["pred"], r["obj"]) for r in rows})
-    )
+    return engine_model_set(spark, json.dumps(MODEL_DATA), pbix_path)
 
 
 def test_reference_parity_precision_recall(ref_set, engine_set):
@@ -135,48 +115,19 @@ def test_reference_parity_exact(ref_set, engine_set):
     )
 
 
-# 0: wrapped JSON; 1: odd + divergent (ChurnProbability, int64 Segment,
-# many-to-many Shipment rel); 3: wrapped odd; 4: EVEN + divergent
-# (RiskScore combined with the divergent schema) — covers every
-# generator branch pair
-@pytest.mark.parametrize("repo_idx", [0, 1, 3, 4])
+@pytest.mark.parametrize("repo_idx", CORPUS_REPOS)
 def test_reference_parity_corpus_models(spark, tmp_path, repo_idx):
     """Exact parity on the synthetic-corpus models too — these exercise
     SWITCH rules with colliding names (set-dedup), IF rules, RLS roles,
     hierarchies, the date/calendar quirk, and (repo 3) the
     {"model": ...} wrapper the reference PBIXReader unwraps."""
-    from powerbi_ontology_extractor_spark.operators.extract import extract_all
-    from powerbi_ontology_extractor_spark.operators.ontology import (
-        generate_ontology,
-    )
-    from powerbi_ontology_extractor_spark.operators.triples import (
-        export_triples,
-    )
-    from powerbi_ontology_extractor_spark.sources.corpus import _model_json
-    import random
-
-    content = _model_json(repo_idx, random.Random(repo_idx), 2)
+    content = corpus_model_content(repo_idx)
     pbix = tmp_path / f"m{repo_idx}.pbix"
     ref, _name = reference_triples(json.loads(content) if repo_idx % 3 != 0
                                    else json.loads(content)["model"],
                                    str(pbix))
-    ref = _mask_date(ref)
-
-    sha = hashlib.sha256(content.encode()).hexdigest()
-    corpus = spark.createDataFrame(
-        [("r", str(pbix), "0" * 40, "model_json", content, sha)],
-        "repo string, path string, commit string, lang string, "
-        "content string, content_sha256 string",
-    )
-    dfs = extract_all(corpus)
-    onto = generate_ontology(dfs)
-    t = export_triples(onto, dfs, include_lineage=False)
-    eng = _mask_date(
-        canonicalize_bnodes(
-            {(r["subj"], r["pred"], r["obj"])
-             for r in t.select("subj", "pred", "obj").collect()}
-        )
-    )
+    ref = mask_date(ref)
+    eng = engine_model_set(spark, content, str(pbix))
     assert ref == eng, (
         f"repo_idx={repo_idx}\nmissing: {sorted(ref - eng)[:20]}\n"
         f"extra: {sorted(eng - ref)[:20]}"

@@ -286,18 +286,22 @@ def test_ntriples_serialization(mini_triples):
 
 def test_ntriples_escapes_quotes_and_backslashes(spark):
     """Quote/backslash escaping in literals (the Java-replacement
-    unescaping pitfall the DuckDB oracle caught)."""
+    unescaping pitfall the DuckDB oracle caught), and LF/CR, which
+    N-Triples forbids raw inside a literal (multi-line DAX conditions)."""
     from powerbi_ontology_extractor_spark.operators.triples import (
         ntriples_lines,
     )
 
     t = spark.createDataFrame(
-        [("r", "D", "ont:x", "rdfs:comment", 'say "hi" \\ done', True, "")],
+        [("r", "D", "ont:x", "rdfs:comment", 'say "hi" \\ done', True, ""),
+         ("r", "D", "ont:y", "ont:condition", "A > 1\r\nB", True, "")],
         "repo string, dataset string, subj string, pred string, "
         "obj string, obj_is_literal boolean, obj_datatype string",
     )
-    line = ntriples_lines(t).first()["ntriple"]
-    assert '"say \\"hi\\" \\\\ done"' in line
+    lines = sorted(r["ntriple"] for r in ntriples_lines(t).collect())
+    assert '"say \\"hi\\" \\\\ done"' in lines[0]
+    assert '"A > 1\\r\\nB"' in lines[1]
+    assert all("\n" not in l and "\r" not in l for l in lines)
 
 
 def test_object_preds_match_oracle_constant(spark):
@@ -330,3 +334,37 @@ def test_object_preds_match_oracle_constant(spark):
         .collect()
     )
     assert obj_preds == sorted(kg_oracles.OBJECT_PREDS)
+
+
+def test_emission_plan_one_projection_per_frame(spark):
+    """The grammar renders each input frame in ONE projection: on the
+    6-repo fixture, export_triples(dedup=False) scans every checkpointed
+    export frame exactly once, with one Generate per frame and no Join
+    (the constant catalog and CRUD combos are spec rows, not literal
+    frames joined in); ontology_doc_triples likewise unions one
+    projection per doc frame."""
+    import os
+
+    from powerbi_ontology_extractor_spark.operators import ontology_io as OI
+    from powerbi_ontology_extractor_spark.operators.triples import EXPORT_FRAMES
+    from powerbi_ontology_extractor_spark.sources.corpus import read_corpus
+    from tests.parity_cases import doc_corpus
+    from tests.test_ontology_doc import DOC
+
+    fixture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "fixtures", "kg_corpus_6.parquet",
+    )
+    md = extract_all(read_corpus(spark, fixture), materialize=True)
+    od = generate_ontology(md, materialize=True)
+    plan = export_triples(od, md, dedup=False)._jdf.queryExecution()
+    plan = plan.optimizedPlan().toString()
+    scans = [l for l in plan.splitlines() if "LogicalRDD" in l]
+    assert len(scans) == len(EXPORT_FRAMES), plan
+    assert plan.count("Generate inline(") == len(EXPORT_FRAMES), plan
+    assert "Join" not in plan, plan
+
+    doc = OI.ontology_doc_triples(doc_corpus(spark, DOC))._jdf.queryExecution()
+    doc = doc.optimizedPlan().toString()
+    assert doc.count("Generate inline(") == 7, doc
+    assert "Join" not in doc, doc
