@@ -564,10 +564,9 @@ def _kg_graph_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes_edges,
     )
 
-    # checkpoint the built triples ONCE: nodes_edges fans out into four
-    # consumers (subject nodes, URI-object nodes, rdf:type join, edges)
-    # and the union census doubles that again — without the barrier the
-    # full triple DAG re-derived ~4× (26 corpus scans, PLANS.md)
+    # checkpoint the built triples ONCE: nodes_edges reads them twice
+    # (the one node aggregation and the edges) — without the barrier
+    # the full triple DAG would be re-derived per consumer
     triples = build_triples(_corpus(spark)).localCheckpoint(eager=True)
     nodes, edges = nodes_edges(triples)
     n = (

@@ -190,23 +190,29 @@ def nodes_edges(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     nodes: every URI subject/object with its rdf:type (if any)
     edges: every URI→URI triple (non-literal objects)
+
+    Each triple yields two node candidates, (subj, obj if rdf:type) and
+    (obj if URI, null); one aggregation per (repo, dataset, node) keeps
+    the least type, so the node table plans one exchange and no join.
     """
-    uri_objs = triples.where(~F.col("obj_is_literal"))
-    nodes = (
-        triples.select("repo", "dataset", F.col("subj").alias("node"))
-        .unionByName(
-            uri_objs.select("repo", "dataset", F.col("obj").alias("node"))
-        )
-        .dropDuplicates()
-        .join(
-            triples.where(F.col("pred") == "rdf:type")
-            .groupBy("repo", "dataset", F.col("subj").alias("node"))
-            .agg(F.min("obj").alias("node_type")),
-            ["repo", "dataset", "node"],
-            "left",
-        )
+    uri_obj = ~F.col("obj_is_literal")
+    candidates = F.array(
+        F.struct(
+            F.col("subj").alias("node"),
+            F.when(F.col("pred") == "rdf:type", F.col("obj")).alias("node_type"),
+        ),
+        F.struct(
+            F.when(uri_obj, F.col("obj")).alias("node"),
+            F.lit(None).cast("string").alias("node_type"),
+        ),
     )
-    edges = uri_objs.select(
+    nodes = (
+        triples.select("repo", "dataset", F.inline(candidates))
+        .where(F.col("node").isNotNull())
+        .groupBy("repo", "dataset", "node")
+        .agg(F.min("node_type").alias("node_type"))
+    )
+    edges = triples.where(uri_obj).select(
         "repo",
         "dataset",
         F.col("subj").alias("src"),

@@ -5,10 +5,14 @@ and triple counts for resumable runs".  The reference has no
 counterpart (single-process, rerun-from-scratch); this module gives the
 pipeline restartability semantics:
 
-- each stage writes its output table to ``<run_dir>/<stage>`` (parquet
-  locally, Iceberg on a cluster) and appends a manifest record:
-  stage name, status, row count, per-partition row counts (lineage),
-  input-corpus sha fingerprint, wall ms;
+- each stage writes its output table to ``<run_dir>/<stage>`` (parquet)
+  and appends a manifest record: stage name, status, row count, the
+  row count of every written file (lineage: one file per write task),
+  the output schema, the input-corpus sha fingerprint, wall ms;
+- the counts come from the parquet footers of the written files, read
+  on the driver, and every reload (fresh or resumed) reads the output
+  with the recorded schema, so describing and reloading an output
+  starts no Spark job;
 - a restarted run verifies the manifest + output existence + the corpus
   fingerprint and SKIPS completed stages (idempotent re-run);
 - a changed corpus fingerprint invalidates all downstream stages.
@@ -20,18 +24,33 @@ table.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from collections.abc import Callable
 from dataclasses import asdict, dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
 class StageRecord:
+    """One stage's manifest line.
+
+    ``partition_rows`` holds the row count of each written
+    ``part-*.parquet`` file, in file-name order, read from the file
+    footers; each file is one write task's output.  ``partitions`` is
+    the file count and ``rows`` their sum.  An empty output is the one
+    empty file task 0 writes, so it records ``[0]``.  ``schema`` is the
+    output's ``StructType`` as JSON, the schema every reload reads with;
+    a record without one (written before the field existed) is never
+    treated as completed, so its stage is recomputed.
+    """
+
     stage: str
     status: str  # completed | failed
     rows: int
@@ -40,6 +59,7 @@ class StageRecord:
     corpus_fingerprint: str
     wall_ms: int
     out_path: str
+    schema: str = ""
 
 
 class ManifestRunner:
@@ -78,6 +98,7 @@ class ManifestRunner:
             r.stage: r
             for r in self.records()
             if r.status == "completed"
+            and r.schema
             and r.corpus_fingerprint == corpus_fingerprint
             and os.path.exists(os.path.join(r.out_path, "_SUCCESS"))
         }
@@ -108,11 +129,12 @@ class ManifestRunner:
         num_partitions: int | None = None,
     ) -> DataFrame:
         """Produce-or-reload one stage.  Completed (same fingerprint,
-        output intact) → reload parquet, skip compute."""
+        output intact) → reload parquet with the recorded schema, skip
+        compute."""
         out_path = os.path.join(self.run_dir, name)
         done = self.completed(corpus_fingerprint)
         if name in done:
-            return self.spark.read.parquet(out_path)
+            return self._reload(out_path, done[name].schema)
 
         t0 = time.perf_counter()
         df = fn()
@@ -120,14 +142,11 @@ class ManifestRunner:
         if partition_cols and num_partitions:
             writer_df = df.repartition(num_partitions, *partition_cols)
         writer_df.write.mode("overwrite").parquet(out_path)
-        reloaded = self.spark.read.parquet(out_path)
         part_rows = [
-            r["rows"]
-            for r in reloaded.groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.count("*").alias("rows"))
-            .orderBy("p")
-            .collect()
+            pq.read_metadata(f).num_rows
+            for f in sorted(glob.glob(os.path.join(out_path, "part-*.parquet")))
         ]
+        schema = df.schema.json()
         rec = StageRecord(
             stage=name,
             status="completed",
@@ -137,9 +156,15 @@ class ManifestRunner:
             corpus_fingerprint=corpus_fingerprint,
             wall_ms=int((time.perf_counter() - t0) * 1000),
             out_path=out_path,
+            schema=schema,
         )
         self._append(rec)
-        return reloaded
+        return self._reload(out_path, schema)
+
+    def _reload(self, out_path: str, schema: str) -> DataFrame:
+        return self.spark.read.schema(
+            StructType.fromJson(json.loads(schema))
+        ).parquet(out_path)
 
 
 def run_pipeline_resumable(

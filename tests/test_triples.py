@@ -368,3 +368,99 @@ def test_emission_plan_one_projection_per_frame(spark):
     doc = doc.optimizedPlan().toString()
     assert doc.count("Generate inline(") == 7, doc
     assert "Join" not in doc, doc
+
+
+def test_empty_relationship_property_emits_no_triple(spark):
+    """An empty fromColumn/toColumn (the reference's ``if x:`` guard)
+    emits no ont:fromProperty/ont:toProperty triple; the relationship's
+    other triples stay."""
+    model = {
+        "name": "Rel",
+        "tables": [
+            {"name": t, "columns": [{"name": "ID", "dataType": "string"}]}
+            for t in ("Ship", "Cust", "Port")
+        ],
+        "relationships": [
+            {"name": "NoFrom", "fromTable": "Ship", "fromColumn": "",
+             "toTable": "Cust", "toColumn": "CID"},
+            {"name": "NoTo", "fromTable": "Ship", "fromColumn": "PID",
+             "toTable": "Port", "toColumn": ""},
+        ],
+    }
+    content = json.dumps(model)
+    corpus = spark.createDataFrame(
+        [("r1", "Rel.pbix/model.bim", "0" * 40, "model_json", content,
+          hashlib.sha256(content.encode()).hexdigest())],
+        "repo string, path string, commit string, lang string, content string, content_sha256 string",
+    )
+    t = build_triples(corpus).cache()
+
+    def preds(subj):
+        return sorted(
+            (r["pred"], r["obj"])
+            for r in t.where(F.col("subj") == subj).collect()
+        )
+
+    common = ["ont:cardinality", "ont:sourceRelationship", "rdf:type",
+              "rdfs:comment", "rdfs:domain", "rdfs:label", "rdfs:range"]
+    no_from = preds("ont:Ship_belongs_to_Cust")
+    assert sorted(p for p, _ in no_from) == sorted(common + ["ont:toProperty"])
+    assert ("ont:toProperty", "CID") in no_from
+    assert ("ont:sourceRelationship", "NoFrom") in no_from
+    no_to = preds("ont:Ship_belongs_to_Port")
+    assert sorted(p for p, _ in no_to) == sorted(common + ["ont:fromProperty"])
+    assert ("ont:fromProperty", "PID") in no_to
+    assert ("ont:sourceRelationship", "NoTo") in no_to
+    t.unpersist()
+
+
+@pytest.fixture(scope="module")
+def fixture_triples_parquet(spark, tmp_path_factory):
+    """build_triples over the 6-repo fixture, written and read back as
+    parquet (the form the staged run's nodes stage reads)."""
+    import os
+
+    from powerbi_ontology_extractor_spark.sources.corpus import read_corpus
+
+    fixture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "fixtures", "kg_corpus_6.parquet",
+    )
+    path = str(tmp_path_factory.mktemp("fixture_triples") / "triples")
+    build_triples(read_corpus(spark, fixture)).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_nodes_equal_union_join_formulation(fixture_triples_parquet):
+    """The one-aggregation node table equals the subjects ∪ URI objects,
+    dropDuplicates, rdf:type min left-join formulation."""
+    t = fixture_triples_parquet
+    uri_objs = t.where(~F.col("obj_is_literal"))
+    reference = (
+        t.select("repo", "dataset", F.col("subj").alias("node"))
+        .unionByName(uri_objs.select("repo", "dataset", F.col("obj").alias("node")))
+        .dropDuplicates()
+        .join(
+            t.where(F.col("pred") == "rdf:type")
+            .groupBy("repo", "dataset", F.col("subj").alias("node"))
+            .agg(F.min("obj").alias("node_type")),
+            ["repo", "dataset", "node"],
+            "left",
+        )
+    )
+    nodes = nodes_edges(t)[0]
+    assert nodes.columns == reference.columns
+    assert nodes.where(F.col("node_type").isNotNull()).count() > 0
+    assert nodes.exceptAll(reference).count() == 0
+    assert reference.exceptAll(nodes).count() == 0
+
+
+def test_nodes_plan_one_aggregation_no_join(fixture_triples_parquet):
+    """Over parquet-read triples the node table is one aggregation: no
+    Join and a single shuffle Exchange (no broadcast side)."""
+    nodes = nodes_edges(fixture_triples_parquet)[0]
+    qe = nodes._jdf.queryExecution()
+    assert "Join" not in qe.optimizedPlan().toString()
+    physical = qe.executedPlan().toString()
+    assert physical.count("Exchange") == 1, physical
+    assert "Exchange hashpartitioning" in physical, physical
