@@ -9,6 +9,7 @@ Usage:
     python bench_extra.py minhash   # stage breakdown of minhash_dedup_docs
     python bench_extra.py kg        # stage breakdown of kg_build_triples
     python bench_extra.py rel       # the relational headline queries
+    python bench_extra.py dag       # driver DAG build of the emission families
 """
 
 from __future__ import annotations
@@ -118,6 +119,60 @@ def main() -> None:
             t.schema  # forces analysis, not execution
 
         timed("D_dag_analysis", _dag_only, trials=2)
+
+    elif which == "dag":
+        # driver-side DAG build (build + schema analysis, no action) of
+        # each emission family over corpus_df(8)'s checkpointed frames;
+        # warm (one untimed build each), min of 7
+        from powerbi_ontology_extractor_spark.functions.layout import report_triples
+        from powerbi_ontology_extractor_spark.functions.mquery import (
+            m_datasource_triples,
+        )
+        from powerbi_ontology_extractor_spark.operators.contracts import (
+            contract_triples,
+            permissions_from_dashboard,
+        )
+        from powerbi_ontology_extractor_spark.operators.exporters import (
+            ontoguard_bindings,
+        )
+        from powerbi_ontology_extractor_spark.operators.extract import extract_all
+        from powerbi_ontology_extractor_spark.operators.fabric_owl import (
+            fabric_iq_owl_triples,
+        )
+        from powerbi_ontology_extractor_spark.operators.ontology import (
+            generate_ontology,
+        )
+        from powerbi_ontology_extractor_spark.operators.triples import export_triples
+        from powerbi_ontology_extractor_spark.sources.corpus import corpus_df
+
+        corpus = corpus_df(spark, n_repos=8).localCheckpoint(eager=True)
+        md = extract_all(corpus, materialize=True)
+        od = generate_ontology(md, materialize=True)
+        read_set = permissions_from_dashboard(
+            md["entities"], md["relationships"], md["measures"]
+        ).localCheckpoint(eager=True)
+        bindings = ontoguard_bindings(
+            od["ontology_entities"], md["properties"]
+        ).localCheckpoint(eager=True)
+        builds = {
+            "export_triples": lambda: export_triples(od, md, dedup=False),
+            "m_datasource_triples": lambda: m_datasource_triples(
+                corpus, md["datasets"]),
+            "report_triples": lambda: report_triples(corpus, md["datasets"]),
+            "fabric_iq_owl_triples": lambda: fabric_iq_owl_triples(
+                od["ontology_entities"], md["properties"],
+                od["ontology_relationships"], od["business_rules"],
+                bindings=bindings),
+            "contract_triples": lambda: contract_triples(read_set),
+        }
+        for name, build in builds.items():
+            build().schema  # warm-up
+            walls = []
+            for _ in range(7):
+                t0 = time.perf_counter()
+                build().schema  # forces analysis, not execution
+                walls.append(time.perf_counter() - t0)
+            timings[name] = [round(min(walls), 3)]
 
     elif which == "rel":
         import __spark_entry__ as entry

@@ -27,8 +27,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from powerbi_ontology_extractor_spark.functions.naming import safe_name
-from powerbi_ontology_extractor_spark.operators.triples import _rows, _uri
+from powerbi_ontology_extractor_spark.functions.naming import safe_name_sql
+from powerbi_ontology_extractor_spark.operators.triples import (
+    LIT,
+    Frame,
+    T,
+    _iri,
+    _when,
+    emit_frames,
+)
 
 LAYOUT_SCHEMA = StructType(
     [
@@ -129,50 +136,37 @@ def visual_bindings_df(corpus: DataFrame) -> DataFrame:
     )
 
 
-def report_triples(corpus: DataFrame, models: DataFrame) -> DataFrame:
-    """report→uses→dataset + visual→binds→field triples.
+_REPORT = f"concat('ont:report_', {safe_name_sql('path')})"
+_VISUAL = (f"concat('ont:visual_', {safe_name_sql('path')}, '_', "
+           f"{safe_name_sql('page')}, '_', cast(visual_idx AS string))")
 
-    ``queryRef`` 'Table.Column' resolves to the property IRI
-    ``ont:<Table>_<Column>`` (same scheme as property emission)."""
+# one frame per row grain: report, visual, field binding
+REPORT = Frame({"_report": _REPORT}, [
+    T("_report", "'rdf:type'", "'ont:Report'"),
+    T("_report", "'ont:usesDataset'", _iri("dataset")),
+])
+VISUAL = Frame({"_visual": _VISUAL, "_report": _REPORT}, [
+    T("_visual", "'rdf:type'", "'ont:Visual'"),
+    T("_visual", "'ont:visualType'", "visual_type", LIT),
+    T("_visual", "'ont:onPage'", "page", LIT),
+    T("_visual", "'ont:inReport'", "_report"),
+])
+# queryRef 'Table.Column' → the property IRI ont:<Table>_<Column> (same
+# scheme as property emission)
+BINDING = Frame({"_visual": _VISUAL}, [
+    T("_visual", "'ont:bindsField'", _when("query_ref IS NOT NULL", _iri("query_ref"))),
+])
+
+
+def report_triples(corpus: DataFrame, models: DataFrame) -> DataFrame:
+    """report→uses→dataset + visual→binds→field triples."""
     b = visual_bindings_df(corpus)
     datasets = models.select("repo", "dataset").dropDuplicates()
     df = b.join(F.broadcast(datasets), "repo", "left").withColumn(
         "dataset", F.coalesce(F.col("dataset"), F.lit("Unknown"))
     )
-    report = _uri("ont:report_", safe_name(F.col("path")))
-    visual = _uri(
-        "ont:visual_",
-        safe_name(F.col("path")),
-        "_",
-        safe_name(F.col("page")),
-        "_",
-        F.col("visual_idx").cast("string"),
-    )
-    field = _uri("ont:", safe_name(F.col("query_ref")))
-    report_rows = _rows(
-        df.dropDuplicates(["repo", "path"]),
-        [
-            (report, "rdf:type", F.lit("ont:Report"), False, ""),
-            (
-                report,
-                "ont:usesDataset",
-                _uri("ont:", safe_name(F.col("dataset"))),
-                False,
-                "",
-            ),
-        ],
-    )
-    visual_rows = _rows(
-        df.dropDuplicates(["repo", "path", "page", "visual_idx"]),
-        [
-            (visual, "rdf:type", F.lit("ont:Visual"), False, ""),
-            (visual, "ont:visualType", F.col("visual_type"), True, ""),
-            (visual, "ont:onPage", F.col("page"), True, ""),
-            (visual, "ont:inReport", report, False, ""),
-        ],
-    )
-    binding_rows = _rows(
-        df.where(F.col("query_ref").isNotNull()),
-        [(visual, "ont:bindsField", field, False, "")],
-    )
-    return report_rows.unionByName(visual_rows).unionByName(binding_rows)
+    return emit_frames([
+        (REPORT, df.dropDuplicates(["repo", "path"])),
+        (VISUAL, df.dropDuplicates(["repo", "path", "page", "visual_idx"])),
+        (BINDING, df),
+    ])

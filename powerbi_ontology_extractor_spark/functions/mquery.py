@@ -19,8 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from powerbi_ontology_extractor_spark.functions.naming import safe_name
-from powerbi_ontology_extractor_spark.operators.triples import _lit, _rows, _uri
+from powerbi_ontology_extractor_spark.functions.naming import safe_name_sql
+from powerbi_ontology_extractor_spark.operators.triples import (
+    LIT,
+    Frame,
+    T,
+    _nz,
+    emit_frames,
+)
 
 _CONNECTOR = r'=\s*((?:\w+\.)+\w+)\s*\('
 _ARG1 = r'=\s*(?:\w+\.)+\w+\s*\(\s*"([^"]*)"'
@@ -74,6 +80,27 @@ def m_connections_df(corpus: DataFrame) -> DataFrame:
     )
 
 
+# query → connectsTo → datasource; the datasource IRI joins its four
+# connection parts
+M_DATASOURCE = Frame(
+    {"_query": f"concat('ont:mquery_', {safe_name_sql('query_name')})",
+     "_ds": "concat('ont:datasource_', " + ", '_', ".join(
+         map(safe_name_sql, ["host", "database", "schema_name", "item"])) + ")"},
+    [
+        T("_query", "'rdf:type'", "'ont:PowerQuery'"),
+        T("_query", "'ont:connectsTo'", "_ds"),
+        T("_ds", "'rdf:type'", "'ont:DataSource'"),
+        T("_ds", "'ont:connector'", _nz("connector"), LIT),
+        T("_ds", "'ont:host'", _nz("host"), LIT),
+        T("_ds", "'ont:database'", _nz("database"), LIT),
+        T("_ds", "'ont:schema'", _nz("schema_name"), LIT),
+        T("_ds", "'ont:item'", _nz("item"), LIT),
+        T("_ds", "'ont:connectionString'",
+          "concat_ws('/', host, concat_ws('.', database, schema_name, item))", LIT),
+    ],
+)
+
+
 def m_datasource_triples(corpus: DataFrame, models: DataFrame) -> DataFrame:
     """datasource→connects_to triples; dataset resolved by joining the
     repo's model (broadcast — dataset list is dim-sized per repo)."""
@@ -82,40 +109,4 @@ def m_datasource_triples(corpus: DataFrame, models: DataFrame) -> DataFrame:
     df = conns.join(F.broadcast(datasets), "repo", "left").withColumn(
         "dataset", F.coalesce(F.col("dataset"), F.lit("Unknown"))
     )
-    ds = _uri(
-        "ont:datasource_",
-        safe_name(F.col("host")),
-        "_",
-        safe_name(F.col("database")),
-        "_",
-        safe_name(F.col("schema_name")),
-        "_",
-        safe_name(F.col("item")),
-    )
-    q = _uri("ont:mquery_", safe_name(F.col("query_name")))
-    return _rows(
-        df,
-        [
-            (q, "rdf:type", F.lit("ont:PowerQuery"), False, ""),
-            (q, "ont:connectsTo", ds, False, ""),
-            (ds, "rdf:type", F.lit("ont:DataSource"), False, ""),
-            (ds, "ont:connector", _lit(F.col("connector")), True, ""),
-            (ds, "ont:host", _lit(F.col("host")), True, ""),
-            (ds, "ont:database", _lit(F.col("database")), True, ""),
-            (ds, "ont:schema", _lit(F.col("schema_name")), True, ""),
-            (ds, "ont:item", _lit(F.col("item")), True, ""),
-            (
-                ds,
-                "ont:connectionString",
-                F.concat_ws(
-                    "/",
-                    F.col("host"),
-                    F.concat_ws(
-                        ".", F.col("database"), F.col("schema_name"), F.col("item")
-                    ),
-                ),
-                True,
-                "",
-            ),
-        ],
-    )
+    return emit_frames([(M_DATASOURCE, df)])

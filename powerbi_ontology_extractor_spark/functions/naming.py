@@ -18,15 +18,9 @@ from pyspark.sql import functions as F
 MAX_DAX_LENGTH = 10_000
 
 
-def safe_name(col: Column | str) -> Column:
-    """URI-safe name: space/-/. → _, empty/null → 'unnamed'."""
-    c = F.col(col) if isinstance(col, str) else col
-    safe = F.translate(c, " -.", "___")
-    return F.when(safe.isNull() | (safe == ""), F.lit("unnamed")).otherwise(safe)
-
-
 def safe_name_sql(expr: str) -> str:
-    """``safe_name`` as SQL text over the expression ``expr``."""
+    """URI-safe name: space/-/. → _, empty/null → 'unnamed' (SQL text
+    over the expression ``expr``)."""
     return f"coalesce(nullif(translate({expr}, ' -.', '___'), ''), 'unnamed')"
 
 

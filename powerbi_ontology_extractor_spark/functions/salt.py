@@ -5,15 +5,15 @@ AQE's skew-join splitting covers joins, but a `groupBy` on a hot key
 measures) still funnels one reducer.  The north rule calls for explicit
 salting: phase 1 aggregates on (key, salt) — salt derived from stable
 row identity, `pmod(xxhash64(id cols), buckets)` — phase 2 merges the
-per-salt partials.  Works for any algebraic aggregate; helpers below
-cover the count / collect shapes the analytics layer uses.
+per-salt partials.  Works for any algebraic aggregate; the analytics
+layer salts its hot-key aggregations with ``with_salt``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -23,48 +23,3 @@ def with_salt(df: DataFrame, id_cols: Sequence[str], buckets: int = 16) -> DataF
     return df.withColumn(
         "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in id_cols]), F.lit(buckets))
     )
-
-
-def salted_count(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    id_cols: Sequence[str],
-    buckets: int = 16,
-) -> DataFrame:
-    """count(*) per group, two-phase: partial count per (group, salt),
-    then sum per group.  The hot key's rows spread over ``buckets``
-    reducers in phase 1."""
-    partial = (
-        with_salt(df, id_cols, buckets)
-        .groupBy(*group_cols, "_salt")
-        .agg(F.count("*").alias("_partial"))
-    )
-    return partial.groupBy(*group_cols).agg(
-        F.sum("_partial").alias("count")
-    )
-
-
-def salted_collect_list(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    id_cols: Sequence[str],
-    buckets: int = 16,
-    max_per_group: int | None = None,
-) -> DataFrame:
-    """collect_list per group, two-phase (partial lists per salt →
-    flatten), with an optional per-group cap applied AFTER the merge
-    (deterministic: values sorted)."""
-    partial = (
-        with_salt(df, id_cols, buckets)
-        .groupBy(*group_cols, "_salt")
-        .agg(F.collect_list(value_col).alias("_vals"))
-    )
-    merged = partial.groupBy(*group_cols).agg(
-        F.array_sort(F.flatten(F.collect_list("_vals"))).alias("values")
-    )
-    if max_per_group:
-        merged = merged.withColumn(
-            "values", F.slice("values", 1, max_per_group)
-        )
-    return merged

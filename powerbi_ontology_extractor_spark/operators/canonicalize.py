@@ -15,7 +15,7 @@ O(n²) — so this module:
    a band hash are ever paired; bucket size capped against
    pathological skew);
 3. scores candidate pairs with the reference's own similarity
-   heuristics (containment / common-char ratio, SequenceMatcher) in a
+   heuristics (containment / common-char ratio) in a
    batched UDF — exact scoring only *inside* blocks;
 4. contracts the accepted-pair graph to components with the
    large-star/small-star iterative DataFrame algorithm (Kiveris et al.,
@@ -30,13 +30,12 @@ from __future__ import annotations
 
 import zlib
 from collections.abc import Sequence
-from difflib import SequenceMatcher
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, BooleanType, LongType
 from pyspark.sql.window import Window
 
 _MERSENNE = (1 << 61) - 1
@@ -220,18 +219,6 @@ def similar_names_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         return False
 
     return pd.Series([sim(x, y) for x, y in zip(a, b)])
-
-
-@F.pandas_udf(DoubleType())
-def seq_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """SequenceMatcher ratio (semantic_debt.py:528-530), batched —
-    only ever applied to LSH-blocked candidate pairs."""
-    return pd.Series(
-        [
-            SequenceMatcher(None, (x or "").lower(), (y or "").lower()).ratio()
-            for x, y in zip(a, b)
-        ]
-    )
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:

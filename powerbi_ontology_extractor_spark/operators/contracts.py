@@ -14,8 +14,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from powerbi_ontology_extractor_spark.functions.dax import identify_dependencies
-from powerbi_ontology_extractor_spark.functions.naming import safe_name
-from powerbi_ontology_extractor_spark.operators.triples import _rows, _uri
+from powerbi_ontology_extractor_spark.functions.naming import safe_name_sql
+from powerbi_ontology_extractor_spark.operators.triples import (
+    LIT,
+    Frame,
+    T,
+    _iri,
+    emit_frames,
+)
 
 
 def permissions_from_dashboard(
@@ -73,6 +79,26 @@ def relevant_business_rules(
     )
 
 
+ACTION_CLASSES = {
+    "read": "ont:ReadAction",
+    "write": "ont:WriteAction",
+    "execute": "ont:ExecuteAction",
+}
+# one action instance per granted entity; {agent}, {role}, {permission}
+# and {action_class} are the caller's strings
+CONTRACT = Frame(
+    {"_subj": f"concat('ont:contract_', {safe_name_sql('{agent}')}, '_', "
+              f"{{permission}}, '_', {safe_name_sql('entity')})"},
+    [
+        T("_subj", "'rdf:type'", "{action_class}"),
+        T("_subj", "'ont:appliesTo'", _iri("entity")),
+        T("_subj", "'ont:requiresRole'", _iri("{role}")),
+        T("_subj", "'ont:allowsAction'", "{permission}", LIT),
+        T("_subj", "'ont:grantedBy'", "{agent}", LIT),
+    ],
+)
+
+
 def contract_triples(
     read_set: DataFrame,
     agent_name: str = "agent",
@@ -82,27 +108,7 @@ def contract_triples(
     """Contract → OWL permission triples (the grammar of
     export/contract_to_owl.py:69-111: Read/Write/ExecuteAction
     instances with appliesTo/requiresRole per granted entity)."""
-    action_class = {
-        "read": "ont:ReadAction",
-        "write": "ont:WriteAction",
-        "execute": "ont:ExecuteAction",
-    }[permission]
-    df = read_set.withColumn("agent", F.lit(agent_name)).withColumn(
-        "role", F.lit(role)
-    )
-    subj = _uri(
-        "ont:contract_",
-        safe_name(F.col("agent")),
-        f"_{permission}_",
-        safe_name(F.col("entity")),
-    )
-    return _rows(
-        df,
-        [
-            (subj, "rdf:type", F.lit(action_class), False, ""),
-            (subj, "ont:appliesTo", _uri("ont:", safe_name(F.col("entity"))), False, ""),
-            (subj, "ont:requiresRole", _uri("ont:", safe_name(F.col("role"))), False, ""),
-            (subj, "ont:allowsAction", F.lit(permission), True, ""),
-            (subj, "ont:grantedBy", F.col("agent"), True, ""),
-        ],
+    return emit_frames(
+        [(CONTRACT, read_set)], agent=agent_name, role=role,
+        permission=permission, action_class=ACTION_CLASSES[permission],
     )

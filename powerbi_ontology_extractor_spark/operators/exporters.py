@@ -123,7 +123,7 @@ def fabric_iq_business_rules(business_rules: DataFrame) -> DataFrame:
     """One Fabric IQ rule doc per business rule with trigger tags (P15)
     (export/fabric_iq.py:128-148 + :234-243 trigger extraction)."""
     from powerbi_ontology_extractor_spark.operators.fabric_owl import (
-        rule_triggers,
+        rule_triggers_sql,
     )
 
     src = F.when(
@@ -138,7 +138,7 @@ def fabric_iq_business_rules(business_rules: DataFrame) -> DataFrame:
         "condition",
         "action",
         "classification",
-        rule_triggers(F.col("action")).alias("triggers"),
+        F.expr(rule_triggers_sql("action")).alias("triggers"),
         "description",
         "priority",
     )

@@ -13,126 +13,246 @@ schema-binding annotations (:391-405).
 Rather than round-tripping through serialized JSON docs, the converter
 runs over the same flattened family frames the T17 exporter consumes
 (``FabricIQToOWLConverter.from_fabric_iq_exporter`` composes the two
-the same way, :443-460) — one narrow projection per family, no Python.
+the same way, :443-460).  Its grammar is written down once as data, in
+the style of ``triples.GRAMMAR``: ``FABRIC`` maps each input frame to
+its derived URI columns and ``T`` spec rows (SQL text); the base
+classes, the OntoGuard property catalog, the 5 roles and the 4 CRUD
+combos are constant spec rows, and row filters are a ``CASE WHEN`` on
+the obj.  ``emit_frames`` renders each frame in one projection.
 
-P15: ``rule_triggers`` is the exporter's trigger extraction
+P15: ``rule_triggers_sql`` is the exporter's trigger extraction
 (export/fabric_iq.py:234-243).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from powerbi_ontology_extractor_spark.operators.triples import (
     DEFAULT_GENERATED_AT,
+    LIT,
     TRIPLE_COLS,
-    _lit,
-    _rows,
-    _uri,
+    Frame,
+    T,
+    _c,
+    _decimal,
+    _nz,
+    _q,
+    _when,
+    emit_frames,
 )
 
 FABRIC_ROLES = ["Admin", "Analyst", "Viewer", "Editor", "Owner"]
 FABRIC_ACTIONS = ["ReadAction", "WriteAction", "DeleteAction", "ExecuteAction"]
 
 
-def safe_uri_name(col: Column) -> Column:
+def safe_uri_name_sql(expr: str) -> str:
     """fabric_iq_to_owl.py:407-413 — space/-/. → _, then strip every
-    remaining non-alphanumeric/underscore character."""
-    return F.regexp_replace(
-        F.translate(col, " -.", "___"), "[^A-Za-z0-9_]", ""
-    )
+    remaining non-alphanumeric/underscore character (SQL text)."""
+    return f"regexp_replace(translate({expr}, ' -.', '___'), '[^A-Za-z0-9_]', '')"
 
 
-def rule_triggers(action: Column) -> Column:
+def rule_triggers_sql(action: str) -> str:
     """P15 (export/fabric_iq.py:234-243): trigger tags derived from the
-    rule action string."""
-    a = F.lower(F.coalesce(action, F.lit("")))
-    return F.array_compact(
-        F.array(
-            F.when(
-                a.contains("notify") | a.contains("alert"),
-                F.lit("NotifyOperations"),
-            ),
-            F.when(
-                a.contains("log") | a.contains("record"),
-                F.lit("LogIncident"),
-            ),
-            F.when(a.contains("classify"), F.lit("UpdateClassification")),
-        )
-    )
+    rule action string (SQL text)."""
+    a = f"lower(coalesce({action}, ''))"
+    return (f"array_compact(array("
+            f"CASE WHEN contains({a}, 'notify') OR contains({a}, 'alert') "
+            f"THEN 'NotifyOperations' END, "
+            f"CASE WHEN contains({a}, 'log') OR contains({a}, 'record') "
+            f"THEN 'LogIncident' END, "
+            f"CASE WHEN contains({a}, 'classify') THEN 'UpdateClassification' END))")
 
 
-def map_fabric_xsd(data_type: Column) -> Column:
+def map_fabric_xsd_sql(data_type: str) -> str:
     """fabric_iq_to_owl.py:415-437 type map (case variants, float →
-    decimal, double → double)."""
-    c = F.coalesce(data_type, F.lit(""))
-    lc = F.lower(c)
-    return (
-        F.when(lc == "string", "xsd:string")
-        .when(lc.isin("integer", "int"), "xsd:integer")
-        .when(lc.isin("decimal", "float"), "xsd:decimal")
-        .when(lc == "double", "xsd:double")
-        .when(lc == "date", "xsd:date")
-        .when(lc == "datetime", "xsd:dateTime")
-        .when(lc.isin("boolean", "bool"), "xsd:boolean")
-        .otherwise("xsd:string")
-    )
+    decimal, double → double), as SQL text."""
+    xsd = [("string", "string"), ("integer", "integer"), ("int", "integer"),
+           ("decimal", "decimal"), ("float", "decimal"), ("double", "double"),
+           ("date", "date"), ("datetime", "dateTime"), ("boolean", "boolean"),
+           ("bool", "boolean")]
+    whens = " ".join(f"WHEN '{t}' THEN 'xsd:{x}'" for t, x in xsd)
+    return f"CASE lower(coalesce({data_type}, '')) {whens} ELSE 'xsd:string' END"
 
 
-def _static_rows() -> list[tuple[str, str, str, bool, str]]:
-    """Base classes (:126-159) + OntoGuard properties (:161-201)."""
-    rows: list[tuple[str, str, str, bool, str]] = [
-        ("ont:User", "rdf:type", "owl:Class", False, ""),
-        ("ont:User", "rdfs:label", "User", True, ""),
-        ("ont:User", "rdfs:comment", "Base class for all user roles", True, ""),
+def _iri(expr: str) -> str:
+    """``ont:`` + the Fabric safe name of ``expr``."""
+    return f"concat('ont:', {safe_uri_name_sql(expr)})"
+
+
+def _crud(action: str, cls: str, role: str) -> list[T]:
+    """:364-389 — one default action individual per entity."""
+    subj = f"concat('ont:{action}_', _name)"
+    return [
+        T(subj, "'rdf:type'", _q(cls)),
+        T(subj, "'rdfs:label'", f"concat('{action} ', entity)", LIT),
+        T(subj, "'ont:allowsAction'", _q(action), LIT),
+        T(subj, "'ont:appliesTo'", "_ent"),
+        T(subj, "'ont:requiresRole'", _q(f"ont:{role}")),
     ]
-    for role in FABRIC_ROLES:
-        rows += [
-            (f"ont:{role}", "rdf:type", "owl:Class", False, ""),
-            (f"ont:{role}", "rdfs:subClassOf", "ont:User", False, ""),
-            (f"ont:{role}", "rdfs:label", role, True, ""),
-        ]
-    rows += [
-        ("ont:Action", "rdf:type", "owl:Class", False, ""),
-        ("ont:Action", "rdfs:label", "Action", True, ""),
-        ("ont:Action", "rdfs:comment",
-         "Base class for all actions that can be performed", True, ""),
-    ]
-    for a in FABRIC_ACTIONS:
-        rows += [
-            (f"ont:{a}", "rdf:type", "owl:Class", False, ""),
-            (f"ont:{a}", "rdfs:subClassOf", "ont:Action", False, ""),
-            (f"ont:{a}", "rdfs:label", a, True, ""),
-        ]
-    rows += [
-        ("ont:requiresRole", "rdf:type", "owl:ObjectProperty", False, ""),
-        ("ont:requiresRole", "rdfs:label", "requires role", True, ""),
-        ("ont:requiresRole", "rdfs:comment",
-         "Specifies which user role is required to perform an action", True, ""),
-        ("ont:requiresRole", "rdfs:domain", "ont:Action", False, ""),
-        ("ont:requiresRole", "rdfs:range", "ont:User", False, ""),
-        ("ont:appliesTo", "rdf:type", "owl:ObjectProperty", False, ""),
-        ("ont:appliesTo", "rdfs:label", "applies to", True, ""),
-        ("ont:appliesTo", "rdfs:comment",
-         "Specifies which entity type an action can be applied to", True, ""),
-        ("ont:appliesTo", "rdfs:domain", "ont:Action", False, ""),
-        ("ont:appliesTo", "rdfs:range", "owl:Thing", False, ""),
-        ("ont:requiresApproval", "rdf:type", "owl:ObjectProperty", False, ""),
-        ("ont:requiresApproval", "rdfs:label", "requires approval", True, ""),
-        ("ont:requiresApproval", "rdfs:comment",
-         "Indicates that an action requires approval from a specific role",
-         True, ""),
-        ("ont:requiresApproval", "rdfs:domain", "ont:Action", False, ""),
-        ("ont:requiresApproval", "rdfs:range", "ont:User", False, ""),
-        ("ont:allowsAction", "rdf:type", "owl:DatatypeProperty", False, ""),
-        ("ont:allowsAction", "rdfs:label", "allows action", True, ""),
-        ("ont:allowsAction", "rdfs:comment",
-         "Specifies the action type: read, create, update, delete", True, ""),
-        ("ont:allowsAction", "rdfs:domain", "ont:Action", False, ""),
-        ("ont:allowsAction", "rdfs:range", "xsd:string", False, ""),
-    ]
-    return rows
+
+
+def _guarded(cond: str, specs: list[T]) -> list[T]:
+    """Row filter: a spec's triple is emitted only where ``cond`` holds."""
+    return [t._replace(obj=_when(cond, t.obj)) for t in specs]
+
+
+_PROP = _iri("concat(entity, '_', property)")
+_REL_LABEL = "coalesce(nullif(relationship_type, ''), 'relatedTo')"
+
+FABRIC: dict[str, Frame] = {
+    # :104-124 metadata (ontologyItem = f"{name}_v{version}",
+    # export/fabric_iq.py:42), then the base classes (:126-159) and the
+    # OntoGuard properties (:161-201) once per dataset
+    "datasets": Frame(
+        {"_onto": _iri("concat(dataset, '_v', {version})")},
+        [
+            T("_onto", "'rdf:type'", "'owl:Ontology'"),
+            T("_onto", "'rdfs:label'", "concat(dataset, '_v', {version})", LIT),
+            T("_onto", "'rdfs:comment'", "concat('Ontology extracted from ', {source})",
+              LIT),
+            T("_onto", "'owl:versionInfo'", "{version}", LIT),
+            T("_onto", "'ont:extractedDate'", "{extracted_date}", LIT, "xsd:dateTime"),
+            _c("ont:User", "rdf:type", "owl:Class"),
+            _c("ont:User", "rdfs:label", "User", LIT),
+            _c("ont:User", "rdfs:comment", "Base class for all user roles", LIT),
+            _c("ont:Action", "rdf:type", "owl:Class"),
+            _c("ont:Action", "rdfs:label", "Action", LIT),
+            _c("ont:Action", "rdfs:comment",
+               "Base class for all actions that can be performed", LIT),
+            *[
+                t
+                for a in FABRIC_ACTIONS
+                for t in (
+                    _c(f"ont:{a}", "rdf:type", "owl:Class"),
+                    _c(f"ont:{a}", "rdfs:subClassOf", "ont:Action"),
+                    _c(f"ont:{a}", "rdfs:label", a, LIT),
+                )
+            ],
+            _c("ont:requiresRole", "rdf:type", "owl:ObjectProperty"),
+            _c("ont:requiresRole", "rdfs:label", "requires role", LIT),
+            _c("ont:requiresRole", "rdfs:comment",
+               "Specifies which user role is required to perform an action", LIT),
+            _c("ont:requiresRole", "rdfs:domain", "ont:Action"),
+            _c("ont:requiresRole", "rdfs:range", "ont:User"),
+            _c("ont:appliesTo", "rdf:type", "owl:ObjectProperty"),
+            _c("ont:appliesTo", "rdfs:label", "applies to", LIT),
+            _c("ont:appliesTo", "rdfs:comment",
+               "Specifies which entity type an action can be applied to", LIT),
+            _c("ont:appliesTo", "rdfs:domain", "ont:Action"),
+            _c("ont:appliesTo", "rdfs:range", "owl:Thing"),
+            _c("ont:requiresApproval", "rdf:type", "owl:ObjectProperty"),
+            _c("ont:requiresApproval", "rdfs:label", "requires approval", LIT),
+            _c("ont:requiresApproval", "rdfs:comment",
+               "Indicates that an action requires approval from a specific role", LIT),
+            _c("ont:requiresApproval", "rdfs:domain", "ont:Action"),
+            _c("ont:requiresApproval", "rdfs:range", "ont:User"),
+            _c("ont:allowsAction", "rdf:type", "owl:DatatypeProperty"),
+            _c("ont:allowsAction", "rdfs:label", "allows action", LIT),
+            _c("ont:allowsAction", "rdfs:comment",
+               "Specifies the action type: read, create, update, delete", LIT),
+            _c("ont:allowsAction", "rdfs:domain", "ont:Action"),
+            _c("ont:allowsAction", "rdfs:range", "xsd:string"),
+        ],
+        [
+            T("concat('ont:', {role})", "'rdf:type'", "'owl:Class'"),
+            T("concat('ont:', {role})", "'rdfs:subClassOf'", "'ont:User'"),
+            T("concat('ont:', {role})", "'rdfs:label'", "{role}", LIT),
+        ],
+    ),
+    # :203-238 entity classes, then the default CRUD individuals
+    # (:364-389) with their role defaults
+    "entities": Frame(
+        {"_name": safe_uri_name_sql("entity"), "_ent": _iri("entity")},
+        [
+            T("_ent", "'rdf:type'", "'owl:Class'"),
+            T("_ent", "'rdfs:label'", "entity", LIT),
+            T("_ent", "'rdfs:comment'", _nz("description"), LIT),
+            T("_ent", "'ont:entityType'", _nz("entity_type"), LIT),
+            T("_ent", "'ont:sourceTable'", _nz("source_table"), LIT),
+            *_crud("read", "ont:ReadAction", "Viewer"),
+            *_crud("create", "ont:WriteAction", "Editor"),
+            *_crud("update", "ont:WriteAction", "Editor"),
+            *_crud("delete", "ont:DeleteAction", "Admin"),
+        ],
+    ),
+    # :240-262 properties
+    "properties": Frame(
+        {"_ent": _iri("entity"), "_prop": _PROP},
+        [
+            T("_prop", "'rdf:type'", "'owl:DatatypeProperty'"),
+            T("_prop", "'rdfs:label'", "property", LIT),
+            T("_prop", "'rdfs:domain'", "_ent"),
+            T("_prop", "'rdfs:range'", map_fabric_xsd_sql("data_type")),
+            T("_prop", "'rdfs:comment'", _nz("description"), LIT),
+        ],
+    ),
+    # :264-279 range → min/maxValue, required/unique → boolean
+    # annotations; other constraint types are ignored by the converter
+    "property_constraints": Frame(
+        {"_prop": _PROP},
+        [
+            T("_prop", "'ont:minValue'",
+              _when("constraint_type = 'range'", _decimal("min_value")),
+              LIT, "xsd:decimal"),
+            T("_prop", "'ont:maxValue'",
+              _when("constraint_type = 'range'", _decimal("max_value")),
+              LIT, "xsd:decimal"),
+            T("_prop", "'ont:isRequired'",
+              _when("constraint_type = 'required'", "'true'"), LIT, "xsd:boolean"),
+            T("_prop", "'ont:isUnique'",
+              _when("constraint_type = 'unique'", "'true'"), LIT, "xsd:boolean"),
+        ],
+    ),
+    # :281-305 relationships between two named entities
+    "relationships": Frame(
+        {"_rel": _iri(f"concat_ws('_', from_entity, {_REL_LABEL}, to_entity)"),
+         "_from": _iri("from_entity"), "_to": _iri("to_entity")},
+        _guarded(f"{_nz('from_entity')} IS NOT NULL AND {_nz('to_entity')} IS NOT NULL", [
+            T("_rel", "'rdf:type'", "'owl:ObjectProperty'"),
+            T("_rel", "'rdfs:label'", _REL_LABEL, LIT),
+            T("_rel", "'rdfs:domain'", "_from"),
+            T("_rel", "'rdfs:range'", "_to"),
+            T("_rel", "'rdfs:comment'", _nz("description"), LIT),
+            T("_rel", "'ont:cardinality'", _nz("cardinality"), LIT),
+        ]),
+    ),
+    # :307-362 named business rules → action rules; the classification
+    # → role mapping with the NotifyOperations trigger override
+    "business_rules": Frame(
+        {"_cls": f"concat({_iri('name')}, 'Action')",
+         "_inst": f"concat({_iri('name')}, 'ActionInstance')",
+         "_ent": _iri("entity"),
+         "_role": f"CASE WHEN array_contains({rule_triggers_sql('action')}, "
+                  "'NotifyOperations') THEN 'Admin' "
+                  "ELSE CASE lower(classification) WHEN 'critical' THEN 'Admin' "
+                  "WHEN 'high' THEN 'Admin' WHEN 'medium' THEN 'Editor' "
+                  "WHEN 'low' THEN 'Viewer' WHEN 'notify' THEN 'Analyst' "
+                  "ELSE 'Viewer' END END"},
+        _guarded(f"{_nz('name')} IS NOT NULL", [
+            T("_cls", "'rdf:type'", "'owl:Class'"),
+            T("_cls", "'rdfs:subClassOf'", "'ont:Action'"),
+            T("_cls", "'rdfs:label'", "name", LIT),
+            T("_cls", "'rdfs:comment'", _nz("description"), LIT),
+            T("_inst", "'rdf:type'", "_cls"),
+            T("_inst", "'rdfs:label'", "concat(name, ' action')", LIT),
+            T("_inst", "'ont:allowsAction'", _nz("lower(action)"), LIT),
+            T("_inst", "'ont:appliesTo'", _when(f"{_nz('entity')} IS NOT NULL", "_ent")),
+            T("_inst", "'ont:requiresRole'", "concat('ont:', _role)"),
+            T("_inst", "'ont:ruleCondition'", _nz("condition"), LIT),
+        ]),
+    ),
+    # :391-405 schema-binding annotations; identity property mapping as
+    # generate_semantic_bindings' default (export/fabric_iq.py:150-175)
+    "bindings": Frame(
+        {"_ent": _iri("entity")},
+        [T("_ent", "'ont:schemaSource'", _nz("physical_source"), LIT)],
+    ),
+    "bound_properties": Frame(
+        {"_prop": _PROP},
+        [T("_prop", "'ont:sourceColumn'", _nz("property"), LIT)],
+    ),
+}
 
 
 def fabric_iq_owl_triples(
@@ -151,332 +271,22 @@ def fabric_iq_owl_triples(
     rdflib set semantics via the final dropDuplicates.
     """
     keys = ["repo", "dataset"]
-    datasets = entities.select(*keys).dropDuplicates()
-    spark = entities.sparkSession
-
-    # --- metadata (:104-124); ontologyItem = f"{name}_v{version}"
-    # (export/fabric_iq.py:42)
-    item = F.concat(F.col("dataset"), F.lit(f"_v{version}"))
-    onto = _uri("ont:", safe_uri_name(item))
-    meta = _rows(
-        datasets,
-        [
-            (onto, "rdf:type", F.lit("owl:Ontology"), False, ""),
-            (onto, "rdfs:label", item, True, ""),
-            (
-                onto,
-                "rdfs:comment",
-                F.lit(f"Ontology extracted from {source}"),
-                True,
-                "",
-            ),
-            (onto, "owl:versionInfo", F.lit(version), True, ""),
-            (
-                onto,
-                "ont:extractedDate",
-                F.lit(extracted_date),
-                True,
-                "xsd:dateTime",
-            ),
-        ],
-    )
-
-    # --- base classes + OntoGuard properties (:126-201)
-    static = spark.createDataFrame(
-        _static_rows(),
-        "subj string, pred string, obj string, obj_is_literal boolean, "
-        "obj_datatype string",
-    )
-    base = datasets.crossJoin(F.broadcast(static)).select(*TRIPLE_COLS)
-
-    # --- entity classes (:203-238)
-    ent_df = entities.withColumn("_ent", _uri("ont:", safe_uri_name(F.col("entity"))))
-    e_uri = F.col("_ent")
-    ents = _rows(
-        ent_df,
-        [
-            (e_uri, "rdf:type", F.lit("owl:Class"), False, ""),
-            (e_uri, "rdfs:label", F.col("entity"), True, ""),
-            (e_uri, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (e_uri, "ont:entityType", _lit(F.col("entity_type")), True, ""),
-            (e_uri, "ont:sourceTable", _lit(F.col("source_table")), True, ""),
-        ],
-    )
-
-    # --- properties (:240-262)
-    prop_df = (
-        properties.withColumn("_ent", _uri("ont:", safe_uri_name(F.col("entity"))))
-        .withColumn(
-            "_prop",
-            _uri(
-                "ont:",
-                safe_uri_name(
-                    F.concat(F.col("entity"), F.lit("_"), F.col("property"))
-                ),
-            ),
-        )
-    )
-    p_uri = F.col("_prop")
-    props = _rows(
-        prop_df,
-        [
-            (p_uri, "rdf:type", F.lit("owl:DatatypeProperty"), False, ""),
-            (p_uri, "rdfs:label", F.col("property"), True, ""),
-            (p_uri, "rdfs:domain", F.col("_ent"), False, ""),
-            (p_uri, "rdfs:range", map_fabric_xsd(F.col("data_type")), False, ""),
-            (p_uri, "rdfs:comment", _lit(F.col("description")), True, ""),
-        ],
-    )
-
-    # --- property constraints (:264-279): range → min/maxValue,
-    # required/unique → boolean annotations; other types are ignored by
-    # the converter
-    fams = [meta, base, ents, props]
+    inputs = [
+        (FABRIC["datasets"], entities.select(*keys).dropDuplicates()),
+        (FABRIC["entities"], entities),
+        (FABRIC["properties"], properties),
+        (FABRIC["relationships"], relationships),
+        (FABRIC["business_rules"], business_rules),
+    ]
     if property_constraints is not None:
-        pc = property_constraints.withColumn(
-            "_prop",
-            _uri(
-                "ont:",
-                safe_uri_name(
-                    F.concat(F.col("entity"), F.lit("_"), F.col("property"))
-                ),
-            ),
-        )
-        is_type = lambda t: F.col("constraint_type") == t
-        dec = lambda c: F.when(
-            c == F.floor(c), c.cast("long").cast("string")
-        ).otherwise(c.cast("string"))
-        fams.append(
-            _rows(
-                pc,
-                [
-                    (
-                        p_uri,
-                        "ont:minValue",
-                        F.when(is_type("range"), dec(F.col("min_value"))),
-                        True,
-                        "xsd:decimal",
-                    ),
-                    (
-                        p_uri,
-                        "ont:maxValue",
-                        F.when(is_type("range"), dec(F.col("max_value"))),
-                        True,
-                        "xsd:decimal",
-                    ),
-                    (
-                        p_uri,
-                        "ont:isRequired",
-                        F.when(is_type("required"), F.lit("true")),
-                        True,
-                        "xsd:boolean",
-                    ),
-                    (
-                        p_uri,
-                        "ont:isUnique",
-                        F.when(is_type("unique"), F.lit("true")),
-                        True,
-                        "xsd:boolean",
-                    ),
-                ],
-            )
-        )
-
-    # --- default CRUD action individuals (:364-389)
-    crud_combos = spark.createDataFrame(
-        [
-            ("read", "ont:ReadAction", "Viewer"),
-            ("create", "ont:WriteAction", "Editor"),
-            ("update", "ont:WriteAction", "Editor"),
-            ("delete", "ont:DeleteAction", "Admin"),
-        ],
-        "action string, action_class string, role string",
-    )
-    crud_df = (
-        entities.select(*keys, "entity")
-        .crossJoin(F.broadcast(crud_combos))
-        .withColumn("_ent", _uri("ont:", safe_uri_name(F.col("entity"))))
-        .withColumn(
-            "_act",
-            _uri(
-                "ont:",
-                safe_uri_name(
-                    F.concat(F.col("action"), F.lit("_"), F.col("entity"))
-                ),
-            ),
-        )
-    )
-    act = F.col("_act")
-    crud = _rows(
-        crud_df,
-        [
-            (act, "rdf:type", F.col("action_class"), False, ""),
-            (
-                act,
-                "rdfs:label",
-                F.concat(F.col("action"), F.lit(" "), F.col("entity")),
-                True,
-                "",
-            ),
-            (act, "ont:allowsAction", F.col("action"), True, ""),
-            (act, "ont:appliesTo", F.col("_ent"), False, ""),
-            (act, "ont:requiresRole", _uri("ont:", F.col("role")), False, ""),
-        ],
-    )
-    fams.append(crud)
-
-    # --- relationships (:281-305)
-    rel_df = relationships.withColumn(
-        "_rel",
-        _uri(
-            "ont:",
-            safe_uri_name(
-                F.concat_ws(
-                    "_",
-                    F.col("from_entity"),
-                    F.coalesce(_lit(F.col("relationship_type")), F.lit("relatedTo")),
-                    F.col("to_entity"),
-                )
-            ),
-        ),
-    )
-    rel_uri = F.col("_rel")
-    rels = _rows(
-        rel_df.where(
-            (_lit(F.col("from_entity")).isNotNull())
-            & (_lit(F.col("to_entity")).isNotNull())
-        ),
-        [
-            (rel_uri, "rdf:type", F.lit("owl:ObjectProperty"), False, ""),
-            (
-                rel_uri,
-                "rdfs:label",
-                F.coalesce(_lit(F.col("relationship_type")), F.lit("relatedTo")),
-                True,
-                "",
-            ),
-            (
-                rel_uri,
-                "rdfs:domain",
-                _uri("ont:", safe_uri_name(F.col("from_entity"))),
-                False,
-                "",
-            ),
-            (
-                rel_uri,
-                "rdfs:range",
-                _uri("ont:", safe_uri_name(F.col("to_entity"))),
-                False,
-                "",
-            ),
-            (rel_uri, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (rel_uri, "ont:cardinality", _lit(F.col("cardinality")), True, ""),
-        ],
-    )
-    fams.append(rels)
-
-    # --- business rules → action rules (:307-362) with the
-    # classification→role mapping and NotifyOperations override; triggers
-    # are the P15 tags
-    rule_df = (
-        business_rules.withColumn("_triggers", rule_triggers(F.col("action")))
-        .withColumn(
-            "_cls", _uri("ont:", safe_uri_name(F.col("name")), "Action")
-        )
-        .withColumn(
-            "_inst", _uri("ont:", safe_uri_name(F.col("name")), "ActionInstance")
-        )
-        .withColumn(
-            "_role",
-            F.when(
-                F.array_contains(F.col("_triggers"), "NotifyOperations"),
-                "Admin",
-            ).otherwise(
-                F.when(
-                    F.lower(F.col("classification")).isin("critical", "high"),
-                    "Admin",
-                )
-                .when(F.lower(F.col("classification")) == "medium", "Editor")
-                .when(F.lower(F.col("classification")) == "low", "Viewer")
-                .when(F.lower(F.col("classification")) == "notify", "Analyst")
-                .otherwise("Viewer")
-            ),
-        )
-    )
-    cls, inst = F.col("_cls"), F.col("_inst")
-    rules = _rows(
-        rule_df.where(_lit(F.col("name")).isNotNull()),
-        [
-            (cls, "rdf:type", F.lit("owl:Class"), False, ""),
-            (cls, "rdfs:subClassOf", F.lit("ont:Action"), False, ""),
-            (cls, "rdfs:label", F.col("name"), True, ""),
-            (cls, "rdfs:comment", _lit(F.col("description")), True, ""),
-            (inst, "rdf:type", cls, False, ""),
-            (
-                inst,
-                "rdfs:label",
-                F.concat(F.col("name"), F.lit(" action")),
-                True,
-                "",
-            ),
-            (inst, "ont:allowsAction", _lit(F.lower(F.col("action"))), True, ""),
-            (
-                inst,
-                "ont:appliesTo",
-                F.when(
-                    _lit(F.col("entity")).isNotNull(),
-                    _uri("ont:", safe_uri_name(F.col("entity"))),
-                ),
-                False,
-                "",
-            ),
-            (inst, "ont:requiresRole", _uri("ont:", F.col("_role")), False, ""),
-            (inst, "ont:ruleCondition", _lit(F.col("condition")), True, ""),
-        ],
-    )
-    fams.append(rules)
-
-    # --- schema-binding annotations (:391-405); identity prop mapping
-    # as generate_semantic_bindings' default (export/fabric_iq.py:150-175)
+        inputs.append((FABRIC["property_constraints"], property_constraints))
     if bindings is not None:
-        b = bindings.withColumn(
-            "_ent", _uri("ont:", safe_uri_name(F.col("entity")))
+        bound = properties.join(
+            bindings.select(*keys, "entity"), [*keys, "entity"], "left_semi"
         )
-        fams.append(
-            _rows(
-                b,
-                [
-                    (
-                        F.col("_ent"),
-                        "ont:schemaSource",
-                        _lit(F.col("physical_source")),
-                        True,
-                        "",
-                    )
-                ],
-            )
-        )
-        fams.append(
-            _rows(
-                properties.join(
-                    bindings.select(*keys, "entity"), [*keys, "entity"], "left_semi"
-                ).withColumn(
-                    "_prop",
-                    _uri(
-                        "ont:",
-                        safe_uri_name(
-                            F.concat(
-                                F.col("entity"), F.lit("_"), F.col("property")
-                            )
-                        ),
-                    ),
-                ),
-                [(p_uri, "ont:sourceColumn", _lit(F.col("property")), True, "")],
-            )
-        )
-
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b), fams).dropDuplicates(
-        TRIPLE_COLS
-    )
+        inputs += [(FABRIC["bindings"], bindings),
+                   (FABRIC["bound_properties"], bound)]
+    return emit_frames(
+        inputs, FABRIC_ROLES,
+        extracted_date=extracted_date, version=version, source=source,
+    ).dropDuplicates(TRIPLE_COLS)

@@ -41,17 +41,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens_col(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: word pieces + digits + punctuation
-    symbols, via one regex extract-all (a cheap stand-in for a real BPE
-    vocabulary; counts within ~10% of GPT-2 BPE on English prose)."""
-    return F.size(
-        F.regexp_extract_all(
-            text, F.lit(r"[A-Za-z]{1,8}|\d|[^\sA-Za-z\d]"), 0
-        )
-    )
-
-
 def _lang_score(text: Column, words: list[str]) -> Column:
     toks = tokens_col(text)
     hits = F.size(

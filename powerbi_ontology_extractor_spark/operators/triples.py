@@ -7,7 +7,10 @@ frame's columns, each cited to the owl.py lines it mirrors.
 ``emit_frames`` renders every frame in ONE projection (``_rows``: an
 array of triple structs, exploded), so each checkpointed input is scanned
 once and the constant catalog and the CRUD action × role combos are
-constant spec rows, not literal frames joined in.
+constant spec rows, not literal frames joined in.  The other triple
+families (M datasources, report layout, agent contracts, Fabric IQ)
+declare their own ``Frame``s in their modules and render through the
+same ``emit_frames``: ``T`` specs are the only spec kind.
 
 Key re-expressions forced by the distributed model:
 - rdflib ``Graph`` is a *set* → the final union applies
@@ -30,15 +33,15 @@ subj) — write-side this becomes the Iceberg ``bucket(repo)`` layout.
 
 from __future__ import annotations
 
+import re
 from functools import reduce
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from powerbi_ontology_extractor_spark.functions.naming import (
     map_to_xsd_sql,
-    safe_name,
     safe_name_sql,
     sanitize_dax_sql,
 )
@@ -62,8 +65,10 @@ class T(NamedTuple):
     is emitted when ``obj`` is non-null (the reference's ``if field:``
     guards).  With ``each`` (an array expression) the spec is emitted
     once per element — ``x`` the element, ``i`` its 0-based index — with
-    no null guard.  ``{generated_at}`` and, in per-role specs, ``{role}``
-    are bound to SQL string literals at render time."""
+    no null guard.  ``{name}`` placeholders (``{generated_at}``, the
+    caller's strings, and in per-role specs ``{role}``) are bound to SQL
+    string literals at render time — a caller's string never enters the
+    SQL text raw."""
 
     subj: str
     pred: str
@@ -340,72 +345,59 @@ EXPORT_FRAMES = [
 ]
 
 
-def _uri(*parts: Column | str) -> Column:
-    cols = [F.lit(p) if isinstance(p, str) else p for p in parts]
-    return F.concat(*cols)
-
-
-def _lit(col: Column | str) -> Column:
-    """Literal object; empty string → null (reference ``if x:`` guard)."""
-    c = F.lit(col) if isinstance(col, str) else col
-    return F.nullif(c, F.lit(""))
-
-
 def _struct_sql(t: T) -> str:
     return (f"named_struct('subj', {t.subj}, 'pred', {t.pred}, 'obj', {t.obj}, "
             f"'obj_is_literal', {str(t.lit).lower()}, 'obj_datatype', {_q(t.dt)})")
 
 
-def _rows(df: DataFrame, triples: list) -> DataFrame:
+def _rows(df: DataFrame, triples: list[T]) -> DataFrame:
     """Emit one output row per (input row × triple spec) in one
-    projection.  A spec is a ``T`` (SQL text) or a (subj Column, pred
-    str, obj Column, is_literal, datatype) tuple; scalar specs whose obj
-    is null are dropped (the reference's ``if field:`` guards).  The
-    ``T`` specs go to the JVM as ONE SQL expression: building them as
-    Columns costs ~100 py4j round trips per spec."""
-    cols, scalar, arrays = [], [], []
-    for t in triples:
-        if not isinstance(t, T):
-            subj, pred, obj, is_lit, dt = t
-            cols.append(F.when(obj.isNotNull(), F.struct(
-                subj.alias("subj"), F.lit(pred).alias("pred"), obj.alias("obj"),
-                F.lit(is_lit).alias("obj_is_literal"), F.lit(dt).alias("obj_datatype"),
-            )))
-        elif t.each is None:
-            scalar.append(f"CASE WHEN ({t.obj}) IS NOT NULL THEN {_struct_sql(t)} END")
-        else:
-            arrays.append(f"coalesce(transform({t.each}, (x, i) -> {_struct_sql(t)}), array())")
-    parts = [F.array(*cols)] if cols else []
-    if scalar or arrays:
-        parts.append(F.expr(f"concat(array({', '.join(scalar)}), {', '.join(arrays)})"
-                            if arrays else f"array({', '.join(scalar)})"))
-    return df.select("repo", "dataset", F.inline(F.array_compact(F.concat(*parts))))
+    projection.  Scalar specs whose obj is null are dropped (the
+    reference's ``if field:`` guards); ``each`` specs emit once per
+    array element.  All specs go to the JVM as ONE SQL expression:
+    building them as Columns costs ~100 py4j round trips per spec."""
+    scalar = [f"CASE WHEN ({t.obj}) IS NOT NULL THEN {_struct_sql(t)} END"
+              for t in triples if t.each is None]
+    arrays = [f"coalesce(transform({t.each}, (x, i) -> {_struct_sql(t)}), array())"
+              for t in triples if t.each is not None]
+    rows = f"array({', '.join(scalar)})"
+    if arrays:
+        rows = f"concat({rows}, {', '.join(arrays)})"
+    return df.selectExpr("repo", "dataset", f"inline(array_compact({rows}))")
 
 
-def _bind(spec: T, **params: str) -> T:
-    """Substitute ``{name}`` placeholders with SQL string literals."""
-    fields = []
-    for f in spec:
-        if isinstance(f, str):
-            for k, v in params.items():
-                f = f.replace("{" + k + "}", _q(v))
-        fields.append(f)
-    return T(*fields)
+_PLACEHOLDER = re.compile(r"\{(\w+)\}")
+
+
+def _bind(sql: str, **params: str) -> str:
+    """Substitute ``{name}`` placeholders with SQL string literals, in one
+    pass: a bound value is never scanned for placeholders again."""
+    return _PLACEHOLDER.sub(
+        lambda m: _q(params[m[1]]) if m[1] in params else m[0], sql
+    )
+
+
+def _bind_spec(spec: T, **params: str) -> T:
+    return T(*[_bind(f, **params) if isinstance(f, str) else f for f in spec])
 
 
 def emit_frames(
     inputs: list[tuple[Frame, DataFrame]],
     roles: list[str] = DEFAULT_ROLES,
-    generated_at: str = DEFAULT_GENERATED_AT,
+    **params: str,
 ) -> DataFrame:
     """Union of each (grammar frame, input DataFrame) rendered in one
-    projection; no dedup."""
+    projection; no dedup.  ``params`` bind the ``{name}`` placeholders of
+    the frames' columns and specs (``{role}`` of the per-role specs to
+    each of ``roles``)."""
     out = []
     for frame, df in inputs:
-        specs = [_bind(t, generated_at=generated_at) for t in frame.rows]
-        specs += [_bind(t, role=r) for r in roles for t in frame.per_role]
+        specs = [_bind_spec(t, **params) for t in frame.rows]
+        specs += [_bind_spec(t, **{**params, "role": r})
+                  for r in roles for t in frame.per_role]
         derived = df.selectExpr(
-            "*", *[f"{sql} AS {name}" for name, sql in frame.cols.items()]
+            "*", *[f"{_bind(sql, **params)} AS {name}"
+                   for name, sql in frame.cols.items()]
         )
         out.append(_rows(derived, specs))
     return reduce(DataFrame.unionByName, out)
@@ -430,7 +422,8 @@ def export_triples(
     was the flagship job's single biggest exchange."""
     frames = {**model_dfs, **ontology_dfs}
     keys = EXPORT_FRAMES if include_lineage else EXPORT_FRAMES[:-1]
-    union = emit_frames([(GRAMMAR[k], frames[k]) for k in keys], roles, generated_at)
+    union = emit_frames([(GRAMMAR[k], frames[k]) for k in keys], roles,
+                        generated_at=generated_at)
     return union.dropDuplicates(TRIPLE_COLS) if dedup else union
 
 
@@ -452,9 +445,9 @@ def ntriples_lines(
     per-dataset (the reference's per-ontology base URI); bnode subjects
     pass through.  Narrow map — a distributed ``.write.text`` sink."""
 
-    def expand(col: Column) -> Column:
+    def expand(col):
         ont_base = F.concat(
-            F.lit(base_uri_prefix), safe_name(F.col("dataset")), F.lit("#")
+            F.lit(base_uri_prefix), F.expr(safe_name_sql("dataset")), F.lit("#")
         )
         out = F.when(
             col.startswith("_:"), col

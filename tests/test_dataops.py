@@ -182,9 +182,6 @@ def test_token_counts(spark):
     )
     got = [r["n"] for r in d.select(TX.token_count(F.col("text")).alias("n")).collect()]
     assert got == [2, 3, 0]
-    bpe = d.select(TX.bpe_ish_token_count(F.col("text")).alias("n")).collect()
-    assert bpe[0]["n"] == 2
-    assert bpe[2]["n"] == 0
 
 
 def test_language_id(spark):

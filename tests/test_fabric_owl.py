@@ -13,8 +13,8 @@ from powerbi_ontology_extractor_spark.operators.exporters import (
 from powerbi_ontology_extractor_spark.operators.extract import extract_all
 from powerbi_ontology_extractor_spark.operators.fabric_owl import (
     fabric_iq_owl_triples,
-    rule_triggers,
-    safe_uri_name,
+    rule_triggers_sql,
+    safe_uri_name_sql,
 )
 from powerbi_ontology_extractor_spark.operators.ontology import (
     generate_ontology,
@@ -56,7 +56,7 @@ def _has(t, subj, pred, obj):
 
 def test_safe_uri_name_strips_specials(spark):
     df = spark.range(1).select(
-        safe_uri_name(F.lit("High Risk (v2)!")).alias("s")
+        F.expr(safe_uri_name_sql("'High Risk (v2)!'")).alias("s")
     )
     assert df.first()["s"] == "High_Risk_v2"
 
@@ -65,7 +65,7 @@ def test_trigger_extraction(spark):
     rows = [("notify ops",), ("log incident",), ("classify_as_high",),
             ("filter",), ("alert and record",)]
     df = spark.createDataFrame(rows, "action string")
-    out = [r["t"] for r in df.select(rule_triggers(F.col("action")).alias("t")).collect()]
+    out = [r["t"] for r in df.select(F.expr(rule_triggers_sql("action")).alias("t")).collect()]
     assert out == [
         ["NotifyOperations"],
         ["LogIncident"],

@@ -1,12 +1,8 @@
-"""Salting helpers, canonicalized end-to-end pipeline, contract triples."""
+"""Canonicalized end-to-end pipeline, contract triples."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from powerbi_ontology_extractor_spark.functions.salt import (
-    salted_collect_list,
-    salted_count,
-)
 from powerbi_ontology_extractor_spark.operators.contracts import contract_triples
 from powerbi_ontology_extractor_spark.pipeline import (
     build_triples,
@@ -14,33 +10,6 @@ from powerbi_ontology_extractor_spark.pipeline import (
     nodes_edges,
 )
 from powerbi_ontology_extractor_spark.sources.corpus import corpus_df
-
-
-def test_salted_count_matches_plain(spark):
-    df = spark.range(0, 10000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-    )
-    plain = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {
-        r["k"]: r["count"]
-        for r in salted_count(df, ["k"], ["v"], buckets=8).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_collect_matches_plain(spark):
-    df = spark.createDataFrame(
-        [("a", 3), ("a", 1), ("a", 2), ("b", 9)], "k string, v int"
-    )
-    got = {
-        r["k"]: r["values"]
-        for r in salted_collect_list(df, ["k"], "v", ["v"], buckets=4).collect()
-    }
-    assert got == {"a": [1, 2, 3], "b": [9]}
-    capped = salted_collect_list(
-        df, ["k"], "v", ["v"], buckets=4, max_per_group=2
-    ).collect()
-    assert {r["k"]: r["values"] for r in capped}["a"] == [1, 2]
 
 
 def test_canonicalized_pipeline(spark):
@@ -79,3 +48,18 @@ def test_contract_triples_permissions(spark):
     assert by_pred["ont:allowsAction"]["obj"] == "read"
     assert {r["pred"]: r for r in t_write}["rdf:type"]["obj"] == "ont:WriteAction"
     assert {r["pred"]: r for r in t_write}["ont:requiresRole"]["obj"] == "ont:Admin"
+
+
+def test_contract_caller_strings_are_literals(spark):
+    """A caller's string reaches the triples verbatim: quotes,
+    backslashes and placeholder-like text are bound once, as literals."""
+    read_set = spark.createDataFrame(
+        [("r", "d", "Customer", "entity")],
+        "repo string, dataset string, entity string, sources string",
+    )
+    agent = "o'brien\\{role} {permission}"
+    t = contract_triples(read_set, agent, "Data {agent}", "read").collect()
+    by_pred = {r["pred"]: r["obj"] for r in t}
+    assert by_pred["ont:grantedBy"] == agent
+    assert by_pred["ont:requiresRole"] == "ont:Data_{agent}"
+    assert t[0]["subj"] == "ont:contract_o'brien\\{role}_{permission}_read_Customer"

@@ -342,10 +342,27 @@ def test_emission_plan_one_projection_per_frame(spark):
     export frame exactly once, with one Generate per frame and no Join
     (the constant catalog and CRUD combos are spec rows, not literal
     frames joined in); ontology_doc_triples likewise unions one
-    projection per doc frame."""
+    projection per doc frame; the Fabric IQ family has one Generate per
+    frame, no cross join and no literal frame (its only Join is the
+    bindings semi-join); the M-datasource and report families have one
+    Generate per frame."""
     import os
 
+    from powerbi_ontology_extractor_spark.functions.layout import report_triples
+    from powerbi_ontology_extractor_spark.functions.mquery import (
+        m_datasource_triples,
+    )
     from powerbi_ontology_extractor_spark.operators import ontology_io as OI
+    from powerbi_ontology_extractor_spark.operators.constraints_io import (
+        enhancement_property_constraints,
+    )
+    from powerbi_ontology_extractor_spark.operators.exporters import (
+        ontoguard_bindings,
+    )
+    from powerbi_ontology_extractor_spark.operators.fabric_owl import (
+        FABRIC,
+        fabric_iq_owl_triples,
+    )
     from powerbi_ontology_extractor_spark.operators.triples import EXPORT_FRAMES
     from powerbi_ontology_extractor_spark.sources.corpus import read_corpus
     from tests.parity_cases import doc_corpus
@@ -368,6 +385,25 @@ def test_emission_plan_one_projection_per_frame(spark):
     doc = doc.optimizedPlan().toString()
     assert doc.count("Generate inline(") == 7, doc
     assert "Join" not in doc, doc
+
+    fabric = fabric_iq_owl_triples(
+        od["ontology_entities"], md["properties"],
+        od["ontology_relationships"], od["business_rules"],
+        property_constraints=enhancement_property_constraints(
+            od["enhancements"]).localCheckpoint(),
+        bindings=ontoguard_bindings(
+            od["ontology_entities"], md["properties"]).localCheckpoint(),
+    )._jdf.queryExecution().optimizedPlan().toString()
+    assert fabric.count("Generate inline(") == len(FABRIC), fabric
+    assert "LocalRelation" not in fabric, fabric
+    joins = [l for l in fabric.splitlines() if "Join" in l]
+    assert len(joins) == 1 and "LeftSemi" in joins[0], fabric
+
+    corpus = read_corpus(spark, fixture)
+    for family, frames in [(m_datasource_triples, 1), (report_triples, 3)]:
+        plan = family(corpus, md["datasets"])._jdf.queryExecution()
+        plan = plan.optimizedPlan().toString()
+        assert plan.count("Generate inline(") == frames, plan
 
 
 def test_empty_relationship_property_emits_no_triple(spark):
