@@ -1104,16 +1104,38 @@ def _q_events_hourly(spark, sf_dir):
     )
 
 
+def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """Gap sessionizer over (user_id, ts, value) events: a new session
+    starts at each user's first event and after every gap longer than
+    ``gap_minutes`` (lag + cumulative sum)."""
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gap = F.lag("ts").over(w)
+    new_session = (
+        F.when(gap.isNull(), 1)
+        .when(
+            F.unix_timestamp("ts") - F.unix_timestamp(gap) > gap_minutes * 60, 1
+        )
+        .otherwise(0)
+    )
+    sessioned = events.withColumn(
+        "session_id", F.sum(new_session).over(w)
+    )
+    return (
+        sessioned.groupBy("user_id", "session_id")
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count("*").alias("n_events"),
+            F.sum("value").alias("total_value"),
+        )
+    )
+
+
 def _q_events_sessions(spark, sf_dir):
-    """Gap sessionization (30-min) via streaming/ingest.sessionize_batch
-    — the batch twin of the applyInPandasWithState operator, under the
+    """Gap sessionization (30-min) via sessionize_batch under the
     DuckDB gaps-and-islands oracle.  Both engines use the default RANGE
     window frame, so tied timestamps behave identically; total_value is
     rounded to absorb FP-order ulps."""
-    from powerbi_ontology_extractor_spark.streaming.ingest import (
-        sessionize_batch,
-    )
-
     e = _t(spark, sf_dir, "events")
     s = sessionize_batch(e, gap_minutes=30)
     return s.select(

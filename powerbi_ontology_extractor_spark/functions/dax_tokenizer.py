@@ -14,19 +14,13 @@ filter argument separately.
 Equivalence contract (tests/test_dax_tokenizer.py): on the 8 golden
 evaluation patterns the AST extractor agrees with the regex extractor
 on the has-rules outcome; the production parity path (functions/dax.py)
-stays regex so golden-triple counts are bit-stable.  Batched the same
-way (Arrow UDF) when used.
+stays regex so golden-triple counts are bit-stable.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-
-import pandas as pd
-from pyspark.sql import functions as F
-
-from powerbi_ontology_extractor_spark.functions.dax import RULES_ARRAY
 
 _TOKEN_RE = re.compile(
     r"""
@@ -268,16 +262,6 @@ def extract_rules_ast(measure_name: str, dax: str) -> list[dict]:
                         _entity_of(cond),
                     )
     return rules
-
-
-@F.pandas_udf(RULES_ARRAY)
-def extract_rules_ast_udf(name: pd.Series, dax: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            extract_rules_ast(n or "", d or "")
-            for n, d in zip(name, dax)
-        ]
-    )
 
 
 def identify_dependencies_ast(dax: str) -> list[str]:

@@ -166,7 +166,8 @@ def report_triples(corpus: DataFrame, models: DataFrame) -> DataFrame:
         "dataset", F.coalesce(F.col("dataset"), F.lit("Unknown"))
     )
     return emit_frames([
-        (REPORT, df.dropDuplicates(["repo", "path"])),
-        (VISUAL, df.dropDuplicates(["repo", "path", "page", "visual_idx"])),
+        (REPORT, df.dropDuplicates(["repo", "path", "dataset"])),
+        (VISUAL, df.dropDuplicates(
+            ["repo", "path", "page", "visual_idx", "dataset"])),
         (BINDING, df),
     ])

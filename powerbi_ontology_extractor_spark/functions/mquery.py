@@ -36,18 +36,6 @@ _SCHEMA = r'Schema\s*=\s*"([^"]+)"'
 _ITEM = r'Item\s*=\s*"([^"]+)"'
 _FINAL = r"in\s+(\w+)\s*$"
 
-# connectors whose first string argument is the "host" notion
-KNOWN_CONNECTORS = [
-    "Sql.Database",
-    "Web.Contents",
-    "OData.Feed",
-    "Excel.Workbook",
-    "Csv.Document",
-    "AzureStorage.Blobs",
-    "PostgreSQL.Database",
-    "Odbc.DataSource",
-]
-
 
 def m_connections_df(corpus: DataFrame) -> DataFrame:
     """(repo, path, query_name, connector, host, database, schema_name,

@@ -1,16 +1,18 @@
 """Document deduplication for large-scale training-data pipelines.
 
-Five strategies over a documents table (id + text):
+Strategies over a documents table (id + text) or an embeddings table
+(id + vector):
 
 - exact:      hash-groupBy on md5(text) — one shuffle, JVM-side
 - MinHash-LSH: shingle → minhash signature (numpy Arrow UDF) → band →
                bucket-join → exact-Jaccard verify inside buckets
-- SimHash:    64-bit token-hash fingerprint; Hamming-≤k pairs found by
-               the pigeonhole band trick (split into k+1 chunks; any
-               pair within distance k shares ≥1 exact chunk)
+- SimHash:    Hamming-≤k pairs of token-hash fingerprints (the 32-bit
+               text.simhash32_signatures) found by the pigeonhole band
+               trick (split into k+1 chunks; any pair within distance k
+               shares ≥1 exact chunk)
 - n-gram Jaccard: exact verification metric (applied to LSH candidates;
                never all-pairs)
-- embedding cosine: see similarity.py (ANN path)
+- embedding cosine: banded random-hyperplane LSH → exact cosine verify
 
 Scale notes: nothing here is O(n²).  Every candidate-generation step is
 a groupBy on a band/chunk key with bucket-size caps; exact verification
@@ -19,17 +21,14 @@ only touches candidate pairs.
 
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import IntegerType
 
 from powerbi_ontology_extractor_spark.operators.canonicalize import (
     capped_bucket_pairs,
-    connected_components,
     lsh_candidate_pairs,
 )
 
@@ -49,25 +48,6 @@ def exact_duplicate_groups(
         )
         .where(F.col("n_docs") > 1)
     )
-
-
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep the min-id representative per identical text.
-
-    min_by hash AGGREGATE, not a row_number window: the window put each
-    duplicate group into one task's sort, and mega-duplicate boilerplate
-    (the #1 reason to run exact dedup on a crawl) is exactly the hot
-    key.  Partial map-side aggregation keeps at most one row per
-    (hash, map partition), so a 10^8-copy document costs each task O(1)
-    memory and the reduce side sees one row per partition, not 10^8.
-    The canonical survivor is unchanged (min id per group).
-    """
-    rep = docs.groupBy(F.md5(F.col(text_col)).alias("_h")).agg(
-        F.min_by(F.struct("*"), F.col(id_col)).alias("_r")
-    )
-    return rep.select("_r.*")
 
 
 def word_ngrams(c: F.Column, n: int = 3) -> F.Column:
@@ -155,71 +135,6 @@ def minhash_near_duplicates(
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id1", "id2", "jaccard")
         .dropDuplicates(["id1", "id2"])
-    )
-
-
-def near_dedup_components(
-    pairs: DataFrame, docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Collapse near-duplicate pairs to clusters (connected components)
-    and pick the min-id representative: (doc_id, cluster_id, keep)."""
-    comp = connected_components(pairs, "id1", "id2")
-    d = docs.select(F.col(id_col).cast("string").alias("doc_id"))
-    return d.join(comp, d["doc_id"] == comp["node"], "left").select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
-    ).withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
-
-
-# --- SimHash ------------------------------------------------------------------
-
-
-@F.pandas_udf(LongType())
-def simhash64(text: pd.Series) -> pd.Series:
-    """64-bit SimHash over whitespace tokens (crc32-seeded, two 32-bit
-    halves), numpy-vectorized per document."""
-    out = []
-    for t in text:
-        toks = (t or "").lower().split()
-        if not toks:
-            out.append(0)
-            continue
-        h32 = np.fromiter(
-            (zlib.crc32(tok.encode("utf-8")) for tok in toks),
-            dtype=np.uint64,
-            count=len(toks),
-        )
-        h64 = (h32 << np.uint64(32)) | np.fromiter(
-            (zlib.crc32(tok.encode("utf-8"), 0x9E3779B9) for tok in toks),
-            dtype=np.uint64,
-            count=len(toks),
-        )
-        bits = ((h64[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(
-            np.int64
-        )
-        v = np.where(bits.sum(axis=0) * 2 > len(toks), 1, 0).astype(np.uint64)
-        sig = np.uint64(0)
-        for i in range(64):
-            sig |= v[i] << np.uint64(i)
-        out.append(int(sig) - (1 << 63))  # store as signed long
-    return pd.Series(out, dtype="int64")
-
-
-def simhash_near_duplicates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Pairs within Hamming distance ≤ k of the 64-bit crc32 SimHash.
-    Signature computation here; the pigeonhole pair search is
-    hamming_pairs.  Output: (id1, id2, hamming) with string ids."""
-    sigs = _parallelism_floor(
-        docs.select(F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text"))
-    ).select("id", simhash64(F.col("text")).alias("sig"))
-    return hamming_pairs(
-        sigs, max_hamming=max_hamming, max_bucket=max_bucket, bits=64
     )
 
 
@@ -313,6 +228,37 @@ def cosine_similarity_col(a: F.Column, b: F.Column) -> F.Column:
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
 
 
+def _plane_matrix(dim: int, planes: int, seed: int) -> np.ndarray:
+    rng = np.random.RandomState(seed)
+    return rng.normal(size=(dim, planes))
+
+
+def hyperplane_bucket_udf(planes: int = 16, seed: int = 42):
+    """Arrow UDF: vector → int bucket id (sign pattern across random
+    hyperplanes).  The plane matrix is built lazily from the first
+    batch's dimensionality and cached per worker."""
+
+    state: dict[int, np.ndarray] = {}
+
+    @F.pandas_udf(IntegerType())
+    def bucket(vec: pd.Series) -> pd.Series:
+        out = []
+        for v in vec:
+            if v is None or len(v) == 0:
+                out.append(-1)
+                continue
+            arr = np.asarray(v, dtype=float)
+            m = state.get(arr.shape[0])
+            if m is None:
+                m = _plane_matrix(arr.shape[0], planes, seed)
+                state[arr.shape[0]] = m
+            bits = (arr @ m) >= 0
+            out.append(int(bits.dot(1 << np.arange(planes))))
+        return pd.Series(out, dtype="int32")
+
+    return bucket
+
+
 def embedding_near_duplicates(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -343,10 +289,6 @@ def embedding_near_duplicates(
     max_bucket × dim floats per bucket — so no join-back is needed.
     Output: (id1, id2, cosine).
     """
-    from powerbi_ontology_extractor_spark.operators.similarity import (
-        hyperplane_bucket_udf,
-    )
-
     e = _parallelism_floor(
         embeddings.select(
             F.col(id_col).cast("string").alias("id"), F.col(vec_col).alias("vec")

@@ -105,28 +105,6 @@ def quality_features(
     )
 
 
-def quality_score(features: DataFrame) -> DataFrame:
-    """Scalar quality score in [0,1]: length band + low punct/digit +
-    sane stopword ratio (the classic Gopher-style rule set, linearized).
-    """
-    f = features
-    length_ok = F.when(
-        (F.col("n_tokens") >= 5) & (F.col("n_tokens") <= 100000), 1.0
-    ).otherwise(0.0)
-    punct_ok = F.lit(1.0) - F.least(F.col("punct_ratio") * 2, F.lit(1.0))
-    digit_ok = F.lit(1.0) - F.least(F.col("digit_ratio") * 3, F.lit(1.0))
-    stop_ok = F.least(F.col("stopword_ratio") * 4, F.lit(1.0))
-    word_ok = F.when(
-        (F.col("mean_word_len") >= 2) & (F.col("mean_word_len") <= 12), 1.0
-    ).otherwise(0.0)
-    return f.withColumn(
-        "quality_score",
-        F.round(
-            (length_ok + punct_ok + digit_ok + stop_ok + word_ok) / 5.0, 6
-        ),
-    )
-
-
 def make_winnow_udf(k: int = 5, window: int = 4):
     """Winnowing fingerprints (Schleimer et al.): k-gram rolling hashes,
     min per sliding window, dedup — numpy Arrow UDF, one vectorized pass
@@ -254,8 +232,8 @@ def simhash32_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, sig): 32-bit polynomial-hash SimHash as pure Spark SQL
-    expressions (codegen; zero Python) — the cross-engine variant of
-    dedup.simhash64.  Token hashes are staged as a real column so the
+    expressions (codegen; zero Python), so DuckDB can mirror it
+    (simhash32_duck_sql).  Token hashes are staged as a real column so the
     32 per-bit passes share one computed list; the result is lazily
     localCheckpoint-ed because the pigeonhole consumer
     (dedup.hamming_pairs) explodes per-chunk structs referencing sig —

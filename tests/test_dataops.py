@@ -1,24 +1,17 @@
-"""Training-data operators: dedup (exact/minhash/simhash/embedding),
-similarity search, text analysis — over the generated
-documents/embeddings test tables plus synthetic edge cases."""
+"""Training-data operators: dedup (exact/minhash/simhash/embedding)
+and text analysis — over the generated documents test table plus
+synthetic edge cases."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from powerbi_ontology_extractor_spark.operators import dedup as DD
-from powerbi_ontology_extractor_spark.operators import similarity as SIM
 from powerbi_ontology_extractor_spark.operators import text as TX
 
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").persist()
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").persist()
 
 
 def test_exact_dedup_roundtrip(spark):
@@ -28,8 +21,6 @@ def test_exact_dedup_roundtrip(spark):
     )
     groups = DD.exact_duplicate_groups(d).collect()
     assert len(groups) == 1 and groups[0]["doc_ids"] == [1, 2]
-    kept = DD.exact_dedup(d).select("doc_id").collect()
-    assert sorted(r["doc_id"] for r in kept) == [1, 3]
 
 
 def test_ngram_jaccard_values(spark):
@@ -61,14 +52,6 @@ def test_minhash_near_duplicates(spark):
     pairs = DD.minhash_near_duplicates(d, jaccard_threshold=0.5).collect()
     assert {(r["id1"], r["id2"]) for r in pairs} == {("1", "2")}
 
-    comp = DD.near_dedup_components(
-        DD.minhash_near_duplicates(d, jaccard_threshold=0.5), d
-    ).collect()
-    by_id = {r["doc_id"]: r for r in comp}
-    assert by_id["1"]["cluster_id"] == by_id["2"]["cluster_id"]
-    assert by_id["1"]["keep"] and not by_id["2"]["keep"]
-    assert by_id["3"]["keep"]
-
 
 def test_results_independent_of_shuffle_partitions(spark, docs):
     """Dedup and canonicalization output must not depend on how the
@@ -86,12 +69,20 @@ def test_results_independent_of_shuffle_partitions(spark, docs):
 
     md = extract_all(corpus_df(spark, n_repos=4), materialize=True)
     od = generate_ontology(md, materialize=True)
+    # the documents have no byte-identical pairs: re-insert every 10th
+    # under a shifted id so the exact groups are non-empty
+    text = docs.select("doc_id", "text")
+    dup_docs = text.unionByName(
+        text.where(F.col("doc_id") % 10 == 0).withColumn(
+            "doc_id", F.col("doc_id") + 1_000_000
+        )
+    )
 
     def run():
         return [
             sorted(map(tuple, df.collect()))
             for df in (
-                DD.exact_dedup(docs),
+                DD.exact_duplicate_groups(dup_docs),
                 DD.minhash_near_duplicates(docs, jaccard_threshold=0.5),
                 entity_canonical_mapping(od["ontology_entities"], md["properties"]),
             )
@@ -113,55 +104,35 @@ def test_results_independent_of_shuffle_partitions(spark, docs):
 
 
 def test_simhash_near_duplicates(spark):
+    # the 32-bit signatures of 1 and 2 agree; 3 is 7 bits from both
     base = "alpha beta gamma delta epsilon zeta eta theta " * 4
     d = spark.createDataFrame(
-        [(1, base), (2, base.replace("theta", "thetaX", 1)), (3, "qq ww ee rr " * 8)],
+        [
+            (1, base),
+            (2, base.replace("theta", "thetaX", 1)),
+            (3, "qq ww ee rr " * 8),
+            (4, "the quick brown fox jumps over the lazy dog"),
+            (5, "the quick brown fox jumps over the lazy hog"),
+        ],
         "doc_id long, text string",
     )
-    pairs = DD.simhash_near_duplicates(d, max_hamming=8).collect()
-    ids = {(r["id1"], r["id2"]) for r in pairs}
-    assert ("1", "2") in ids
-    assert ("1", "3") not in ids and ("2", "3") not in ids
+    pairs = DD.hamming_pairs(
+        TX.simhash32_signatures(d), max_hamming=3, bits=32
+    ).collect()
+    assert {(r["id1"], r["id2"]): r["hamming"] for r in pairs} == {
+        (1, 2): 0,
+        (4, 5): 1,
+    }
 
 
 def test_simhash_identical_is_zero(spark):
     d = spark.createDataFrame(
         [(1, "same words here"), (2, "same words here")], "doc_id long, text string"
     )
-    pairs = DD.simhash_near_duplicates(d, max_hamming=0).collect()
+    pairs = DD.hamming_pairs(
+        TX.simhash32_signatures(d), max_hamming=0, bits=32
+    ).collect()
     assert len(pairs) == 1 and pairs[0]["hamming"] == 0
-
-
-def test_brute_force_topk_matches_numpy(spark, embeddings):
-    rows = embeddings.orderBy("vec_id").limit(200).collect()
-    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=float) for r in rows}
-    q = vecs[0]
-
-    def cos(a, b):
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    expected = sorted(
-        ((cos(v, q), -i) for i, v in vecs.items()), reverse=True
-    )[:5]
-    expected_ids = [-i for _, i in expected]
-
-    sub = embeddings.where(F.col("vec_id") < 200)
-    got = SIM.brute_force_topk(sub, q.tolist(), k=5).collect()
-    assert [r["vec_id"] for r in got] == expected_ids
-
-
-def test_lsh_topk_recall(spark, embeddings):
-    q = embeddings.where(F.col("vec_id") == 0).first()["embedding"]
-    exact = {r["vec_id"] for r in SIM.brute_force_topk(embeddings, list(q), k=10).collect()}
-    approx = {
-        r["vec_id"]
-        for r in SIM.lsh_topk(embeddings, list(q), k=10, planes=4).collect()
-    }
-    # the synthetic embeddings are near-random (top cosine ≈ 0.33), so
-    # LSH recall is inherently modest here; the hard guarantees are:
-    # the query vector itself is always found, and some overlap exists
-    assert 0 in approx
-    assert len(exact & approx) >= 2
 
 
 def test_embedding_near_duplicates(spark):
@@ -219,10 +190,11 @@ def test_quality_features_and_score(spark):
         ],
         "doc_id long, text string",
     )
-    scored = TX.quality_score(TX.quality_features(d)).collect()
-    by_id = {r["doc_id"]: r for r in scored}
-    assert by_id[1]["quality_score"] > by_id[2]["quality_score"]
-    assert by_id[3]["n_tokens"] == 0 and by_id[3]["quality_score"] <= 0.6
+    feats = TX.quality_features(d).collect()
+    by_id = {r["doc_id"]: r for r in feats}
+    assert by_id[1]["n_tokens"] == 14 and by_id[1]["stopword_ratio"] > 0.3
+    assert by_id[3]["n_tokens"] == 0 and by_id[3]["stopword_ratio"] == 0.0
+    assert by_id[3]["punct_ratio"] == 0.0
     assert by_id[2]["punct_ratio"] > 0.5
 
 
@@ -244,29 +216,10 @@ def test_fingerprints_and_matches(spark):
 def test_docs_scale_smoke(docs):
     """Run the headline text ops over the real documents table."""
     n = docs.count()
-    feats = TX.quality_score(TX.quality_features(docs))
+    feats = TX.quality_features(docs)
     assert feats.count() == n
-    assert DD.exact_dedup(docs).count() <= n
-
-
-def test_lsh_bucketed_layout_matches_and_prunes(spark, embeddings, tmp_path):
-    """The materialized bucket layout must (a) return exactly what the
-    on-the-fly lsh_topk returns and (b) probe via partition pruning —
-    the scan node lists the bucket IN filter as a PartitionFilter, so
-    non-probed buckets' files are never read."""
-    path = str(tmp_path / "ann_idx")
-    SIM.write_bucketed(embeddings, path, planes=4)
-    q = embeddings.where(F.col("vec_id") == 0).first()["embedding"]
-    fly = SIM.lsh_topk(embeddings, list(q), k=10, planes=4).collect()
-    idx = SIM.lsh_topk_bucketed(spark, path, list(q), k=10, planes=4).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in fly] == [
-        (r["vec_id"], r["cosine"]) for r in idx
-    ]
-
-    probe = SIM._probe_buckets(list(q), 4, 42, True)
-    df = spark.read.parquet(path).where(F.col("bucket").isin(probe))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
+    groups = DD.exact_duplicate_groups(docs)
+    assert (groups.agg(F.sum("n_docs")).first()[0] or 0) <= n
 
 
 def test_embedding_near_dup_banded_recall(spark):
@@ -306,30 +259,3 @@ def test_embedding_near_dup_banded_recall(spark):
     assert recall >= 0.95, f"recall {recall:.2f}, missed {sorted(truth - got)[:5]}"
     # precision is exact by construction (cosine verify)
     assert got <= truth
-
-
-def test_ivf_index_recall_and_pruning(spark, embeddings, tmp_path):
-    """IVF: top-k from the probed inverted lists must contain the true
-    top-k whenever nprobe covers the query's neighborhood; with
-    nprobe = n_centroids it IS exact."""
-    path = str(tmp_path / "ivf_idx")
-    SIM.ivf_build(embeddings, path, n_centroids=8, train_sample=500)
-    q = embeddings.where(F.col("vec_id") == 0).first()["embedding"]
-    exact = [r["vec_id"] for r in SIM.brute_force_topk(embeddings, list(q), k=5).collect()]
-    full = [r["vec_id"]
-            for r in SIM.ivf_topk(spark, path, list(q), k=5, nprobe=8).collect()]
-    assert full == exact  # all lists probed == brute force
-    probed = {r["vec_id"]
-              for r in SIM.ivf_topk(spark, path, list(q), k=5, nprobe=2).collect()}
-    assert 0 in probed  # the query vector's own list is always probed
-    # centroids live in a parquet sidecar read through spark.read (no
-    # driver-local open() — works on object storage)
-    import numpy as _np
-    cents = SIM.read_centroids(spark, path)
-    assert cents.shape[0] == 8
-    # partition pruning visible in the plan
-    qv = _np.asarray(list(q)); qv = qv / _np.linalg.norm(qv)
-    probe = [int(i) for i in _np.argsort(-(cents @ qv))[:2]]
-    df = spark.read.parquet(path).where(F.col("centroid").isin(probe))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid" in plan

@@ -92,3 +92,69 @@ def test_layout_missing_projections_tolerated(spark):
     # card visual has no projections → one row with null query_ref;
     # bad config → null visual row, no crash
     assert any(r["visual_type"] == "card" and r["query_ref"] is None for r in rows)
+
+
+def test_report_triples_one_copy_per_dataset(spark):
+    """A repo with two models and one layout: the report and visual
+    triples are emitted in EACH dataset's namespace, like the field
+    bindings, whatever the shuffle partitioning."""
+    import json
+
+    from powerbi_ontology_extractor_spark.functions.layout import report_triples
+
+    def visual(vtype, ref):
+        return {"config": json.dumps({"singleVisual": {
+            "visualType": vtype,
+            "projections": {"Values": [{"queryRef": ref}]},
+        }})}
+
+    layout = json.dumps({"sections": [{"name": "P", "visualContainers": [
+        visual("card", "Sales.Amount"), visual("table", "Customer.Name"),
+    ]}]})
+    corpus = spark.createDataFrame(
+        [("r1", "Report/Layout", "0" * 40, "report_json", layout,
+          hashlib.sha256(layout.encode()).hexdigest())],
+        "repo string, path string, commit string, lang string, "
+        "content string, content_sha256 string",
+    )
+    models = spark.createDataFrame(
+        [("r1", "A"), ("r1", "B")], "repo string, dataset string"
+    )
+
+    def run():
+        return sorted(
+            (r["dataset"], r["subj"], r["pred"], r["obj"])
+            for r in report_triples(corpus, models).collect()
+        )
+
+    keys = ["spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        out = []
+        for parts in ("3", "17"):
+            spark.conf.set(keys[0], parts)
+            spark.conf.set(keys[1], "false")
+            out.append(run())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert out[0] == out[1]
+
+    rows = out[0]
+    uses = {(ds, o) for ds, _, p, o in rows if p == "ont:usesDataset"}
+    assert uses == {("A", "ont:A"), ("B", "ont:B")}
+    per_ds = {
+        ds: {(s, p, o) for d, s, p, o in rows
+             if d == ds and p != "ont:usesDataset"}
+        for ds in ("A", "B")
+    }
+    assert per_ds["A"] == per_ds["B"]
+    preds = {p for _, p, _ in per_ds["A"]}
+    assert {"rdf:type", "ont:visualType", "ont:onPage", "ont:inReport",
+            "ont:bindsField"} <= preds
+    # one report + two visuals, each typed once per dataset
+    assert sorted(o for _, p, o in per_ds["A"] if p == "rdf:type") == [
+        "ont:Report", "ont:Visual", "ont:Visual"
+    ]
+    assert len(rows) == len(set(rows))

@@ -17,6 +17,7 @@ from powerbi_ontology_extractor_spark.operators import dedup as DD
 from powerbi_ontology_extractor_spark.operators.canonicalize import (
     capped_bucket_pairs,
 )
+from powerbi_ontology_extractor_spark.operators.text import simhash32_signatures
 
 N_HOT = 5000
 
@@ -41,18 +42,23 @@ def test_capped_bucket_pairs_two_phase_is_exact_prefix(spark):
 
 def test_simhash_empty_docs_bounded(spark):
     # N_HOT empty docs all hash to signature 0 → one bucket per chunk;
-    # uncapped this is ~12.5M pairs; capped it is ≤ C(200,2)
+    # uncapped this is ~12.5M pairs; capped it is ≤ C(200,2).  Same
+    # path as the q_docs_simhash_pairs query: 32-bit signatures, k=3.
     rows = [(i, "") for i in range(N_HOT)]
     rows += [(N_HOT + 1, "the quick brown fox jumps over the lazy dog")]
     rows += [(N_HOT + 2, "the quick brown fox jumps over the lazy hog")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = DD.simhash_near_duplicates(d, max_hamming=8, max_bucket=200)
-    got = pairs.collect()
+    pairs = DD.hamming_pairs(
+        simhash32_signatures(d), max_hamming=3, max_bucket=200, bits=32
+    )
     cap_pairs = 200 * 199 // 2
-    assert 0 < len(got) <= cap_pairs + 1
-    # the genuine near-dup pair survives the degenerate flood
-    real = {(r["id1"], r["id2"]) for r in got if r["id1"].startswith("500")}
-    assert (str(N_HOT + 1), str(N_HOT + 2)) in real
+    assert 0 < pairs.count() <= cap_pairs + 1
+    # the genuine near-dup pair (1 bit apart) survives the degenerate
+    # flood, which fills every chunk bucket the two share at value 0
+    real = pairs.where(F.col("id1") > N_HOT).collect()
+    assert [(r["id1"], r["id2"], r["hamming"]) for r in real] == [
+        (N_HOT + 1, N_HOT + 2, 1)
+    ]
 
 
 def test_embedding_zero_vectors_bounded(spark):
@@ -134,26 +140,3 @@ def test_entity_structure_conflicts_hot_name_bounded(hot_props):
     assert r["definition1"] == "2 properties"
     assert r["definition2"] == "2 properties"
     assert r["dashboard1"] < r["dashboard2"]
-
-
-def test_exact_dedup_mega_duplicate_no_window_sort(spark):
-    # N_HOT byte-identical docs (boilerplate) + two singletons: the
-    # keep-representative path must be a hash AGGREGATE (partial
-    # map-side combine bounds per-task state), not a row_number window
-    # whose per-group sort puts the whole hot group in one task.
-    rows = [(i, "boilerplate " * 20) for i in range(N_HOT)]
-    rows += [(N_HOT + 1, "unique one"), (N_HOT + 2, "unique two")]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = DD.exact_dedup(d)
-    got = sorted(r["doc_id"] for r in kept.collect())
-    assert got == [0, N_HOT + 1, N_HOT + 2]
-    plan = kept._sc._jvm.PythonSQLUtils.explainString(
-        kept._jdf.queryExecution(), "formatted"
-    )
-    assert "Window" not in plan
-    # min_by over a struct plans as SortAggregate (struct-typed buffer);
-    # what matters for skew is the PARTIAL map-side combine, present in
-    # every aggregate flavor and absent from a window
-    assert any(
-        n in plan for n in ("HashAggregate", "ObjectHashAggregate", "SortAggregate")
-    )
