@@ -1380,9 +1380,7 @@ def _q_docs_simhash_pairs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     return (
-        hamming_pairs(
-            simhash32_signatures(d), max_hamming=3, max_bucket=500, bits=32
-        )
+        hamming_pairs(simhash32_signatures(d), max_hamming=3, max_bucket=500)
         .select(
             F.col("id1").cast("bigint").alias("id1"),
             F.col("id2").cast("bigint").alias("id2"),

@@ -197,78 +197,6 @@ def html_debt_report(
     )
 
 
-def graph_figure_spec(
-    nodes: list[dict], edges: list[dict], max_nodes: int = 200
-) -> dict:
-    """Renderer-agnostic figure spec for the ontology graph — the
-    engine's stand-in for the reference's matplotlib/plotly renderers
-    (utils/visualizer.py:70-331): deterministic circular layout,
-    node color by rdf:type, edge list with labels.  Feed to
-    :func:`render_png` (matplotlib, if installed) or serialize as the
-    plotly-figure-shaped JSON.
-    """
-    import math
-
-    kept = nodes[:max_nodes]
-    keep = {n["node"] for n in kept}
-    n = max(len(kept), 1)
-    colors = {
-        "owl:Class": "#4CAF50",
-        "owl:DatatypeProperty": "#2196F3",
-        "owl:ObjectProperty": "#FF9800",
-    }
-    spec_nodes = [
-        {
-            "id": row["node"],
-            "label": row["node"].replace("ont:", ""),
-            "x": round(math.cos(2 * math.pi * i / n), 6),
-            "y": round(math.sin(2 * math.pi * i / n), 6),
-            "color": colors.get(row.get("node_type"), "#9E9E9E"),
-        }
-        for i, row in enumerate(kept)
-    ]
-    spec_edges = [
-        {"source": e["src"], "target": e["dst"],
-         "label": e["rel"].replace("ont:", "")}
-        for e in edges
-        if e["src"] in keep and e["dst"] in keep
-    ]
-    return {
-        "layout": "circular",
-        "n_nodes_total": len(nodes),
-        "truncated": len(nodes) > max_nodes,
-        "nodes": spec_nodes,
-        "edges": spec_edges,
-    }
-
-
-def render_png(spec: dict, out_path: str) -> str:
-    """Rasterize a :func:`graph_figure_spec` with matplotlib.  The lib
-    is not installed in this sandbox — the spec itself is the tested
-    artifact; this is the thin gated shell around it."""
-    try:
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import matplotlib.pyplot as plt
-    except ImportError as exc:  # pragma: no cover - lib absent here
-        raise NotImplementedError(
-            "matplotlib not installed; use the figure spec directly"
-        ) from exc
-    fig, ax = plt.subplots(figsize=(12, 12))  # pragma: no cover
-    pos = {n["id"]: (n["x"], n["y"]) for n in spec["nodes"]}
-    for e in spec["edges"]:
-        (x1, y1), (x2, y2) = pos[e["source"]], pos[e["target"]]
-        ax.plot([x1, x2], [y1, y2], color="#cccccc", zorder=1)
-    for n in spec["nodes"]:
-        ax.scatter([n["x"]], [n["y"]], color=n["color"], zorder=2)
-        ax.annotate(n["label"], (n["x"], n["y"]), fontsize=7)
-    ax.axis("off")
-    fig.savefig(out_path, dpi=150)
-    plt.close(fig)
-    return out_path
-
-
 def mermaid_diagram(nodes: list[dict], edges: list[dict], max_nodes: int = 60) -> str:
     """Mermaid graph text from collected node/edge rows (the
     visualizer's diagram surface, utils/visualizer.py:70-120)."""

@@ -33,7 +33,7 @@ from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 from powerbi_ontology_extractor_spark.functions.naming import normalize_formula
-from powerbi_ontology_extractor_spark.functions.salt import with_salt
+from powerbi_ontology_extractor_spark.functions.salt import CAP, capped_collect
 
 
 def _src() -> Column:
@@ -45,6 +45,46 @@ def _with_src(df: DataFrame) -> DataFrame:
     # (the reference analyzes SemanticModel objects; standalone lang='dax'
     # corpus rows have no dashboard identity)
     return df.where(F.col("dataset") != "Standalone").withColumn("src", _src())
+
+
+def _fingerprint_group_pairs(e: DataFrame, key: str, max_group: int) -> DataFrame:
+    """(key, src1, props1, src2, props2) over ``e``'s (key, src, props)
+    rows: one row per src pair of the same key with DIFFERENT props,
+    oriented src1 < src2.
+
+    The join pairs distinct (key, props) FINGERPRINT GROUPS, never raw
+    src rows, so a hot key with one dominant structure emits zero
+    pairs instead of a quadratic self-join.  Each group's srcs are the
+    ``max_group`` smallest (capped_collect); pair output is inherently
+    |g1|×|g2| per group pair, so the cap is the surfaced policy."""
+    groups = capped_collect(e, [key, "props"], ["src"], max_group)
+    a, b = groups.alias("a"), groups.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col("a.props") < F.col("b.props")),
+        )
+        .select(
+            F.col(f"a.{key}").alias(key),
+            F.col("a.props").alias("props_a"),
+            F.col("b.props").alias("props_b"),
+            F.explode(F.col("a.src")).alias("src_a"),
+            F.col("b.src").alias("srcs_b"),
+        )
+        .select(
+            key, "props_a", "props_b", "src_a",
+            F.explode(F.col("srcs_b")).alias("src_b"),
+        )
+    )
+    swap = F.col("src_a") > F.col("src_b")
+    return pairs.select(
+        key,
+        F.least("src_a", "src_b").alias("src1"),
+        F.when(swap, F.col("props_b")).otherwise(F.col("props_a")).alias("props1"),
+        F.greatest("src_a", "src_b").alias("src2"),
+        F.when(swap, F.col("props_a")).otherwise(F.col("props_b")).alias("props2"),
+    )
 
 
 def measure_conflicts(measures: DataFrame, max_group: int = 1000) -> DataFrame:
@@ -136,17 +176,13 @@ def measure_conflicts(measures: DataFrame, max_group: int = 1000) -> DataFrame:
 
 
 def entity_structure_conflicts(
-    properties: DataFrame, max_group: int = 10_000
+    properties: DataFrame, max_group: int = CAP
 ) -> DataFrame:
     """Same entity name (ci), different {property→type} maps — pairwise
     (analyzer.py:123-150).  The map compare is a sorted-struct-array
-    equality (order-insensitive, as the reference's dict compare).
-
-    Same fingerprint-group shape as entity_conflicts_debt: the join
-    pairs distinct (concept, props) structure groups, never raw src
-    rows, so a hot entity name with one dominant structure emits zero
-    pairs instead of a quadratic self-join.  Src exemplars per group
-    are salted two-phase collected and capped at ``max_group``."""
+    equality (order-insensitive, as the reference's dict compare);
+    pairs come from the fingerprint groups (_fingerprint_group_pairs),
+    src exemplars per group capped at ``max_group``."""
     e = (
         _with_src(properties)
         .groupBy(F.lower(F.col("entity")).alias("concept"), "src")
@@ -156,44 +192,15 @@ def entity_structure_conflicts(
             ).alias("props"),
         )
     )
-    partial = (
-        with_salt(e, ["src"], 16)
-        .groupBy("concept", "props", "_salt")
-        .agg(F.slice(F.array_sort(F.collect_list("src")), 1, max_group).alias("_srcs"))
-    )
-    groups = partial.groupBy("concept", "props").agg(
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("_srcs"))), 1, max_group
-        ).alias("srcs")
-    )
-    a, b = groups.alias("a"), groups.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.concept") == F.col("b.concept"))
-            & (F.col("a.props") < F.col("b.props")),
-        )
-        .select(
-            F.col("a.concept").alias("concept"),
-            F.size(F.col("a.props")).alias("n_a"),
-            F.size(F.col("b.props")).alias("n_b"),
-            F.explode(F.col("a.srcs")).alias("src_a"),
-            F.col("b.srcs").alias("srcs_b"),
-        )
-        .select(
-            "concept", "n_a", "n_b", "src_a",
-            F.explode(F.col("srcs_b")).alias("src_b"),
-        )
-    )
-    swap = F.col("src_a") > F.col("src_b")
-    n1 = F.when(swap, F.col("n_b")).otherwise(F.col("n_a"))
-    n2 = F.when(swap, F.col("n_a")).otherwise(F.col("n_b"))
+    pairs = _fingerprint_group_pairs(e, "concept", max_group)
+    n1 = F.size(F.col("props1")).cast("string")
+    n2 = F.size(F.col("props2")).cast("string")
     return pairs.select(
         "concept",
-        F.least("src_a", "src_b").alias("dashboard1"),
-        F.concat(n1.cast("string"), F.lit(" properties")).alias("definition1"),
-        F.greatest("src_a", "src_b").alias("dashboard2"),
-        F.concat(n2.cast("string"), F.lit(" properties")).alias("definition2"),
+        F.col("src1").alias("dashboard1"),
+        F.concat(n1, F.lit(" properties")).alias("definition1"),
+        F.col("src2").alias("dashboard2"),
+        F.concat(n2, F.lit(" properties")).alias("definition2"),
         F.lit("MEDIUM").alias("severity"),
         F.concat(
             F.lit("Entity '"),
@@ -203,18 +210,15 @@ def entity_structure_conflicts(
     )
 
 
-def duplicate_logic(
-    measures: DataFrame, buckets: int = 16, max_exemplars: int = 10_000
-) -> DataFrame:
+def duplicate_logic(measures: DataFrame) -> DataFrame:
     """Group by normalized formula; >1 occurrence ⇒ duplication
     (analyzer.py:154-200).
 
-    Hot-key shape: a formula shared by 10⁶ dashboards would funnel one
-    reducer and build a 10⁶-element array — so the collect is salted
-    two-phase (partial lists per (norm, salt), flatten-merge), the
-    merged exemplar arrays are capped at ``max_exemplars`` (sorted →
-    deterministic), and the exact group size is carried separately as
-    ``n_dashboards`` so counts never depend on the cap.
+    Hot-key shape: a formula shared by 10⁶ dashboards is one group, so
+    the src, name and formula lists are capped_collect-ed (salted
+    two-phase, sorted, capped); ``n_dashboards`` is the exact group
+    size, so counts never depend on the cap, and ``dax_formula`` is the
+    least formula of the group.
     """
     m = _with_src(measures).select(
         "src",
@@ -222,31 +226,13 @@ def duplicate_logic(
         F.col("dax_formula").alias("formula"),
         normalize_formula(F.col("dax_formula")).alias("norm"),
     )
-    partial = (
-        with_salt(m, ["src", "name"], buckets)
-        .groupBy("norm", "_salt")
-        .agg(
-            F.collect_list("src").alias("_srcs"),
-            F.collect_list("name").alias("_names"),
-            F.min("formula").alias("_formula"),
-            F.count("*").alias("_n"),
-        )
-    )
     g = (
-        partial.groupBy("norm")
-        .agg(
-            F.slice(
-                F.array_sort(F.flatten(F.collect_list("_srcs"))),
-                1,
-                max_exemplars,
-            ).alias("dashboards"),
-            F.slice(
-                F.array_sort(F.flatten(F.collect_list("_names"))),
-                1,
-                max_exemplars,
-            ).alias("names"),
-            F.min("_formula").alias("dax_formula"),
-            F.sum("_n").cast("bigint").alias("n_dashboards"),
+        capped_collect(m, ["norm"], ["src", "name", "formula"])
+        .select(
+            F.col("src").alias("dashboards"),
+            F.col("name").alias("names"),
+            F.try_element_at("formula", F.lit(1)).alias("dax_formula"),
+            F.col("n").alias("n_dashboards"),
         )
         .where(F.col("n_dashboards") > 1)
     )
@@ -289,6 +275,9 @@ def canonical_definitions(measures: DataFrame) -> DataFrame:
     """Per multiply-defined measure name: the *mode* of the normalized
     formula is the suggested canonical; confidence = mode_count / total
     (analyzer.py:240-295).  mode-per-group = count → row_number window.
+    ``dashboards_using`` and ``alternative_sources`` are sorted and
+    capped at salt.CAP (capped_collect), so neither depends on
+    partitioning.
     """
     m = _with_src(measures).select(
         F.lower(F.col("measure")).alias("name"),
@@ -296,21 +285,10 @@ def canonical_definitions(measures: DataFrame) -> DataFrame:
         F.col("dax_formula").alias("formula"),
         normalize_formula(F.col("dax_formula")).alias("norm"),
     )
-    # salted two-phase collect: a KPI name used by 10⁶ dashboards must
-    # not funnel one reducer; exemplar srcs capped, exact cnt carried
-    partial = (
-        with_salt(m, ["src"], 16)
-        .groupBy("name", "norm", "_salt")
-        .agg(
-            F.count("*").alias("_n"),
-            F.collect_list("src").alias("_srcs"),
-        )
-    )
-    counts = partial.groupBy("name", "norm").agg(
-        F.sum("_n").alias("cnt"),
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("_srcs"))), 1, 10_000
-        ).alias("srcs"),
+    # a KPI name used by 10⁶ dashboards must not funnel one reducer:
+    # exemplar srcs capped, exact cnt carried
+    counts = capped_collect(m, ["name", "norm"], ["src"]).select(
+        "name", "norm", F.col("n").alias("cnt"), F.col("src").alias("srcs")
     )
     # totals derived from the aggregated frame — no second scan of m
     totals = (
@@ -330,11 +308,11 @@ def canonical_definitions(measures: DataFrame) -> DataFrame:
         F.col("srcs").alias("dashboards_using"),
         (F.col("cnt") / F.col("total")).alias("confidence"),
     )
-    alternatives = (
-        ranked.where(F.col("rk") > 1)
-        .groupBy("name")
-        .agg(F.flatten(F.collect_list("srcs")).alias("alternative_sources"))
-    )
+    alternatives = capped_collect(
+        ranked.where(F.col("rk") > 1).select("name", F.explode("srcs").alias("src")),
+        ["name"],
+        ["src"],
+    ).select("name", F.col("src").alias("alternative_sources"))
     return winners.join(alternatives, "name", "left").withColumn(
         "alternative_sources",
         F.coalesce(F.col("alternative_sources"), F.array()),
@@ -375,7 +353,7 @@ def semantic_debt(conflicts: DataFrame, duplications: DataFrame) -> DataFrame:
 
 
 def entity_conflicts_debt(
-    properties: DataFrame, max_group: int = 10_000
+    properties: DataFrame, max_group: int = CAP
 ) -> DataFrame:
     """Same entity name (exact), different property *sets*; severity by
     overlap ratio |∩|/|∪| (<0.5 CRITICAL, <0.8 WARNING, else INFO)
@@ -387,49 +365,18 @@ def entity_conflicts_debt(
     src) rows.  An entity named "Date" defined identically in 10⁵
     dashboards — the expected hot key at corpus scale — collapses to
     ONE group and emits zero pairs instead of 10¹⁰ joined-then-filtered
-    rows; distinct definitions per name are few.  Src exemplars per
-    group are collected salted two-phase and capped at ``max_group``
-    (sorted → deterministic; pair output is inherently |g1|×|g2| per
-    group pair — the cap is the same surfaced policy as
-    measure_conflicts').  Equivalent to the old (src < src) self-join:
-    cross-group src pairs are re-oriented so src1 < src2, and
-    same-group pairs are exactly the ones the old only_in filter
-    dropped."""
+    rows; distinct definitions per name are few
+    (_fingerprint_group_pairs; src exemplars per group capped at
+    ``max_group``).  Equivalent to a (src < src) self-join filtered on
+    a non-empty only_in: same-group pairs are exactly the ones that
+    filter drops."""
     e = (
         _with_src(properties)
         .groupBy(F.col("entity").alias("name"), "src")
         .agg(F.array_sort(F.collect_set("property")).alias("props"))
     )
-    partial = (
-        with_salt(e, ["src"], 16)
-        .groupBy("name", "props", "_salt")
-        .agg(F.slice(F.array_sort(F.collect_list("src")), 1, max_group).alias("_srcs"))
-    )
-    groups = partial.groupBy("name", "props").agg(
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("_srcs"))), 1, max_group
-        ).alias("srcs")
-    )
-    a, b = groups.alias("a"), groups.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.name") == F.col("b.name"))
-        & (F.col("a.props") < F.col("b.props")),
-    ).select(
-        F.col("a.name").alias("name"),
-        F.col("a.props").alias("props_a"),
-        F.col("b.props").alias("props_b"),
-        F.explode(F.col("a.srcs")).alias("src_a"),
-        F.col("b.srcs").alias("srcs_b"),
-    ).select(
-        "name", "props_a", "props_b", "src_a",
-        F.explode(F.col("srcs_b")).alias("src_b"),
-    )
-    # re-orient each src pair so src1 < src2 (the old join's order);
-    # the only_in legs swap with it
-    swap = F.col("src_a") > F.col("src_b")
-    p1 = F.when(swap, F.col("props_b")).otherwise(F.col("props_a"))
-    p2 = F.when(swap, F.col("props_a")).otherwise(F.col("props_b"))
+    pairs = _fingerprint_group_pairs(e, "name", max_group)
+    p1, p2 = F.col("props1"), F.col("props2")
     only1 = F.array_sort(F.array_except(p1, p2))
     only2 = F.array_sort(F.array_except(p2, p1))
     common = F.size(F.array_intersect(p1, p2))
@@ -447,9 +394,7 @@ def entity_conflicts_debt(
             F.lit("entity_conflict").alias("conflict_type"),
             severity.alias("severity"),
             "name",
-            F.array(
-                F.least("src_a", "src_b"), F.greatest("src_a", "src_b")
-            ).alias("sources"),
+            F.array("src1", "src2").alias("sources"),
             only1.alias("only_in_1"),
             only2.alias("only_in_2"),
             ratio.alias("overlap_ratio"),
@@ -521,36 +466,18 @@ def rule_conflicts(
     (semantic_debt.py:462-504).  Exact similarity only runs *inside*
     name groups — the group-by is the blocking step.
 
-    The collect_sets are salted two-phase (hot rule names spread over
-    16 reducers, distinct-merge after) and capped at 10k exemplars
-    post-sort — the severity probe only reads the first two sorted
-    conditions, which the cap never disturbs."""
-    r = _with_src(business_rules)
-    partial = (
-        with_salt(r, ["src", "condition"], 16)
-        .groupBy("name", "_salt")
-        .agg(
-            F.collect_set("condition").alias("_conds"),
-            F.collect_set("src").alias("_srcs"),
-        )
-    )
+    The distinct conditions and sources of a hot rule name are
+    capped_collect-ed (salted two-phase, sorted, capped) — the severity
+    probe only reads the first two sorted conditions, which the cap
+    never disturbs."""
     g = (
-        partial.groupBy("name")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("_conds")))
-                ),
-                1,
-                10_000,
-            ).alias("conditions"),
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("_srcs")))
-                ),
-                1,
-                10_000,
-            ).alias("sources"),
+        capped_collect(
+            _with_src(business_rules), ["name"], ["condition", "src"], distinct=True
+        )
+        .select(
+            "name",
+            F.col("condition").alias("conditions"),
+            F.col("src").alias("sources"),
         )
         .where(F.size("conditions") > 1)
     )

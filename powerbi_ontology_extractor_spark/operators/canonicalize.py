@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, LongType
 from pyspark.sql.window import Window
 
+from powerbi_ontology_extractor_spark.functions.salt import capped_collect
+
 _MERSENNE = (1 << 61) - 1
 
 
@@ -101,39 +103,27 @@ def capped_bucket_pairs(
     bucket_cols: Sequence[str],
     payload: F.Column,
     max_bucket: int = 200,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """In-bucket candidate pairs with a fully memory-bounded cap.
 
     ``banded`` carries one row per (item, bucket); ``payload`` is a
     struct whose FIRST field is the orderable item id (extra fields ride
     along so callers need no join-back).  Per bucket the payload list is
-    collected in TWO salted phases — per-(bucket, salt) sorted slice,
-    then merge + final slice — so no aggregation buffer ever holds more
-    than max(|bucket|/salt_buckets, salt_buckets × max_bucket) items
-    even on a degenerate bucket (every empty doc hashing to one key).
-    The two-phase slice is EXACTLY the single-phase result: each of the
-    global ``max_bucket`` smallest ids is among the smallest in its own
-    salt, so it survives phase 1, and the merge slice re-derives the
-    global prefix.  Pair explosion is JVM-side; sortedness gives
-    p1.id < p2.id for free.  Returns (p1, p2) struct columns; callers
-    dropDuplicates on ids (an item pair can share several buckets).
+    the ``max_bucket`` smallest payloads, collected by
+    :func:`~powerbi_ontology_extractor_spark.functions.salt.capped_collect`
+    (salted two-phase, exactly the single-phase prefix), so even a
+    degenerate bucket (every empty doc hashing to one key) never
+    funnels one aggregation buffer.  Pair explosion is JVM-side;
+    sortedness gives p1.id < p2.id for free.  Returns (p1, p2) struct
+    columns; callers dropDuplicates on ids (an item pair can share
+    several buckets).
     """
-    salt = F.pmod(F.xxhash64(payload), F.lit(salt_buckets))
-    phase1 = (
-        banded.select(*bucket_cols, payload.alias("_p"), salt.alias("_salt"))
-        .groupBy(*bucket_cols, "_salt")
-        .agg(F.slice(F.array_sort(F.collect_list("_p")), 1, max_bucket).alias("_ps"))
-    )
-    buckets = (
-        phase1.groupBy(*bucket_cols)
-        .agg(
-            F.slice(
-                F.array_sort(F.flatten(F.collect_list("_ps"))), 1, max_bucket
-            ).alias("items")
-        )
-        .where(F.size("items") > 1)
-    )
+    buckets = capped_collect(
+        banded.select(*bucket_cols, payload.alias("items")),
+        bucket_cols,
+        ["items"],
+        max_bucket,
+    ).where(F.size("items") > 1)
     items = F.col("items")
     pair_structs = F.flatten(
         F.transform(

@@ -75,21 +75,6 @@ SIDECAR_SCHEMA = StructType(
     ]
 )
 
-PROPERTY_CONSTRAINT_COLS = [
-    "repo",
-    "dataset",
-    "entity",
-    "property",
-    "constraint_type",
-    "pattern",
-    "min_value",
-    "max_value",
-    "enum_values",
-    "reference",
-    "message",
-]
-
-
 def _sidecar_entities(corpus: DataFrame) -> DataFrame:
     return (
         corpus.where(F.col("lang") == "ontology_json")

@@ -3,7 +3,7 @@
 Strategies over a documents table (id + text) or an embeddings table
 (id + vector):
 
-- exact:      hash-groupBy on md5(text) — one shuffle, JVM-side
+- exact:      salted two-phase groupBy on md5(text), JVM-side
 - MinHash-LSH: shingle → minhash signature (numpy Arrow UDF) → band →
                bucket-join → exact-Jaccard verify inside buckets
 - SimHash:    Hamming-≤k pairs of token-hash fingerprints (the 32-bit
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from powerbi_ontology_extractor_spark.functions.salt import capped_collect
 from powerbi_ontology_extractor_spark.operators.canonicalize import (
     capped_bucket_pairs,
     lsh_candidate_pairs,
@@ -37,17 +38,15 @@ def exact_duplicate_groups(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Groups of byte-identical documents: (content_hash, n_docs,
-    doc_ids).  One hash aggregation; md5 chosen for cross-engine
-    comparability."""
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.array_sort(F.collect_list("doc_id")).alias("doc_ids"),
-        )
-        .where(F.col("n_docs") > 1)
+    doc_ids).  md5 chosen for cross-engine comparability.  A
+    mega-duplicate document is a hot key: ``n_docs`` is its exact copy
+    count, ``doc_ids`` the salt.CAP smallest ids (capped_collect)."""
+    d = docs.select(
+        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("content_hash")
     )
+    return capped_collect(d, ["content_hash"], ["doc_id"]).select(
+        "content_hash", F.col("n").alias("n_docs"), F.col("doc_id").alias("doc_ids")
+    ).where(F.col("n_docs") > 1)
 
 
 def word_ngrams(c: F.Column, n: int = 3) -> F.Column:
@@ -142,14 +141,12 @@ def hamming_pairs(
     sigs: DataFrame,
     max_hamming: int = 3,
     max_bucket: int = 200,
-    bits: int = 64,
 ) -> DataFrame:
     """Pairs within Hamming distance ≤ k via the pigeonhole principle:
-    split the ``bits``-wide signature into k+1 chunks; any pair at
-    distance ≤k agrees exactly on ≥1 chunk → groupBy chunk value finds
-    all of them.  ``sigs`` carries (id, sig) — any orderable id type,
-    sig a long (use bits=32 for 32-bit signatures such as
-    text.simhash32_signatures).
+    split the 32-bit signature into k+1 chunks; any pair at distance ≤k
+    agrees exactly on ≥1 chunk → groupBy chunk value finds all of them.
+    ``sigs`` carries (id, sig) — any orderable id type, sig a long
+    holding a 32-bit signature (text.simhash32_signatures).
 
     Candidate generation is the capped groupBy-and-explode shape
     (capped_bucket_pairs), NOT a key-equality self-join: every
@@ -159,15 +156,13 @@ def hamming_pairs(
     members (id-sorted, deterministic); the sig rides in the payload
     struct so no join-back is needed.  Output: (id1, id2, hamming)."""
     chunks = max_hamming + 1
-    width = bits // chunks
+    width = 32 // chunks
     # chunk count is a plain Python int → unroll (shift amounts must be
-    # literals for shiftrightunsigned); width=64 needs no mask (and
-    # (1<<64)-1 doesn't fit a long literal)
+    # literals for shiftrightunsigned)
     def chunk_val(ci: int) -> F.Column:
-        shifted = F.shiftrightunsigned(F.col("sig"), ci * width)
-        if width < 64:
-            shifted = shifted.bitwiseAND(F.lit((1 << width) - 1))
-        return shifted
+        return F.shiftrightunsigned(F.col("sig"), ci * width).bitwiseAND(
+            F.lit((1 << width) - 1)
+        )
 
     chunk_structs = F.array(
         *[

@@ -151,7 +151,7 @@ def parse_models(corpus: DataFrame) -> DataFrame:
             F.from_json(model_str, PARSE_SCHEMA, _PARSE_OPTS).alias("parsed"),
         )
         # per-artifact failure isolation: unparseable JSON → corrupt-record
-        # column set → row dropped here, surfaced via parse_errors() (the
+        # column set → row dropped here, never a failed task (the
         # reference isolates failures per file, cli.py:276-281)
         .where(
             F.col("parsed").isNotNull()
@@ -164,23 +164,6 @@ def parse_models(corpus: DataFrame) -> DataFrame:
             F.col("parsed").dropFields("_corrupt_record").alias("model"),
         )
         .withColumn("dataset", _nz(F.col("model.name"), "Unknown"))
-    )
-
-
-def parse_errors(corpus: DataFrame) -> DataFrame:
-    """Corpus rows whose model JSON failed to parse (error-column
-    pattern: never throw a task, report per-row)."""
-    model_str = F.coalesce(
-        F.get_json_object(F.col("content"), "$.model"), F.col("content")
-    )
-    return (
-        corpus.where(F.col("lang") == "model_json")
-        .withColumn("parsed", F.from_json(model_str, PARSE_SCHEMA, _PARSE_OPTS))
-        .where(
-            F.col("parsed").isNull()
-            | F.col("parsed._corrupt_record").isNotNull()
-        )
-        .select("repo", "path", "commit", F.lit("model_json_parse_error").alias("error"))
     )
 
 

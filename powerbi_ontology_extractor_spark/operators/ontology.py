@@ -7,9 +7,10 @@ Reference semantics: /root/reference/powerbi_ontology/ontology_generator.py
 - relationship-type heuristics (:376-398);
 - measures → business rules through the DAX parser (:166-171,236-256).
 
-Spark shape: the degree count (G6) and measure count (G7) are the only
-shuffles — small hash aggregations on (repo, dataset, entity) — joined
-back broadcast-style onto entities.  Everything else is projection.
+Spark shape: entity typing needs no shuffle — it reads every signal
+(relationship degree, measure count, date-like columns) from the
+parsed model row's own arrays; the other outputs are projections or
+explodes of one input frame.
 """
 
 from __future__ import annotations
@@ -20,137 +21,9 @@ from pyspark.sql import functions as F
 from powerbi_ontology_extractor_spark.functions.dax import parse_measures
 
 
-def _degree_df(relationships: DataFrame) -> DataFrame:
-    """Per-entity relationship degree.  A relationship contributes 1 to
-    each *distinct* endpoint (a self-loop counts once —
-    ontology_generator.py:287-290 counts rows with an OR predicate)."""
-    return (
-        relationships.select(
-            "repo",
-            "dataset",
-            F.explode(
-                F.array_distinct(
-                    F.array(F.col("from_entity"), F.col("to_entity"))
-                )
-            ).alias("entity"),
-        )
-        .groupBy("repo", "dataset", "entity")
-        .agg(F.count("*").alias("degree"))
-    )
-
-
-def _measure_count_df(measures: DataFrame) -> DataFrame:
-    return (
-        measures.where(F.col("dataset") != "Standalone")
-        .groupBy("repo", "dataset", F.col("table").alias("entity"))
-        .agg(F.count("*").alias("measure_count"))
-    )
-
-
-def _has_date_columns(properties: DataFrame) -> DataFrame:
-    """Entities having any property whose name contains a date keyword
-    (ontology_generator.py:271-278)."""
-    date_kw = F.lit(False)
-    p = F.lower(F.col("property"))
-    for kw in ["year", "month", "day", "quarter", "week"]:
-        date_kw = date_kw | p.contains(kw)
-    return (
-        properties.groupBy("repo", "dataset", "entity")
-        .agg(F.max(date_kw).alias("has_date_columns"))
-    )
-
-
 def _name_is_datey(entity: Column) -> Column:
     lc = F.lower(entity)
     return lc.contains("date") | lc.contains("calendar") | lc.contains("time")
-
-
-def detect_patterns(
-    entities: DataFrame,
-    properties: DataFrame,
-    relationships: DataFrame,
-    measures: DataFrame,
-) -> DataFrame:
-    """One row per (entity, pattern_type) with confidence — the
-    reference's Pattern list (:258-312).  Broadcast-friendly: all
-    aggregates are per-dataset-tiny."""
-    enriched = (
-        entities.join(_degree_df(relationships), ["repo", "dataset", "entity"], "left")
-        .join(_measure_count_df(measures), ["repo", "dataset", "entity"], "left")
-        .join(_has_date_columns(properties), ["repo", "dataset", "entity"], "left")
-        .fillna({"degree": 0, "measure_count": 0, "has_date_columns": False})
-    )
-    date_p = enriched.where(
-        _name_is_datey(F.col("entity")) & F.col("has_date_columns")
-    ).select(
-        "repo",
-        "dataset",
-        "entity",
-        F.lit("date_table").alias("pattern_type"),
-        F.lit(0.9).alias("confidence"),
-    )
-    dim_p = enriched.where(
-        (F.col("degree") >= 3) & (F.col("n_properties") < 20)
-    ).select(
-        "repo",
-        "dataset",
-        "entity",
-        F.lit("dimension").alias("pattern_type"),
-        F.lit(0.7).alias("confidence"),
-    )
-    fact_p = enriched.where(
-        (F.col("measure_count") > 0) & (F.col("degree") <= 3)
-    ).select(
-        "repo",
-        "dataset",
-        "entity",
-        F.lit("fact").alias("pattern_type"),
-        F.lit(0.8).alias("confidence"),
-    )
-    return date_p.unionByName(dim_p).unionByName(fact_p)
-
-
-def ontology_entities_df(
-    entities: DataFrame,
-    properties: DataFrame,
-    relationships: DataFrame,
-    measures: DataFrame,
-    patterns: DataFrame | None = None,
-) -> DataFrame:
-    """Entities + final entity_type.
-
-    The reference appends patterns in order date_table, dimension, fact
-    per entity and then overwrites entity_type sequentially
-    (:400-406) — so when several fire, the LAST wins:
-    fact > dimension > date_table; with none, the base classification
-    ('date' if the name is datey, else 'standard', :368-374).
-    """
-    if patterns is None:
-        patterns = detect_patterns(entities, properties, relationships, measures)
-    pivoted = (
-        patterns
-        .groupBy("repo", "dataset", "entity")
-        .agg(F.collect_set("pattern_type").alias("patterns"))
-    )
-    joined = entities.join(pivoted, ["repo", "dataset", "entity"], "left")
-    has = lambda p: F.array_contains(F.coalesce(F.col("patterns"), F.array()), p)
-    entity_type = (
-        F.when(has("fact"), "fact")
-        .when(has("dimension"), "dimension")
-        .when(has("date_table"), "date_table")
-        .when(_name_is_datey(F.col("entity")), "date")
-        .otherwise("standard")
-    )
-    return joined.select(
-        "repo",
-        "dataset",
-        "entity",
-        "description",
-        "source_table",
-        "primary_key",
-        "n_properties",
-        entity_type.alias("entity_type"),
-    )
 
 
 def ontology_entities_from_models(models: DataFrame) -> DataFrame:
@@ -168,9 +41,6 @@ def ontology_entities_from_models(models: DataFrame) -> DataFrame:
       the LAST-fired pattern across ALL instances (patterns append
       date_table→dimension→fact per instance, in table order) and the
       later instances keep the base classification (:368-374).
-    The join-based :func:`ontology_entities_df` keeps the simpler
-    precedence semantics for callers with only flat frames (identical
-    whenever table names are unique within a model).
     """
     tables_arr = F.coalesce(F.col("model.tables"), F.array())
     t = models.select(
@@ -396,23 +266,7 @@ def generate_ontology(
     # UDF-produced array<struct> column is pathologically slow (~20×);
     # the checkpoint materializes once and cuts the lineage
     parsed = parse_measures(model_dfs["measures"])
-    patterns = detect_patterns(
-        model_dfs["entities"],
-        model_dfs["properties"],
-        model_dfs["relationships"],
-        model_dfs["measures"],
-    )
-    if "models" in model_dfs:
-        # shuffle-free narrow path (same semantics, zero exchanges)
-        onto_entities = ontology_entities_from_models(model_dfs["models"])
-    else:
-        onto_entities = ontology_entities_df(
-            model_dfs["entities"],
-            model_dfs["properties"],
-            model_dfs["relationships"],
-            model_dfs["measures"],
-            patterns=patterns,
-        )
+    onto_entities = ontology_entities_from_models(model_dfs["models"])
     if materialize:
         # one concurrent barrier round: the UDF-produced parsed_measures
         # (3 downstream consumers) and the flat entity frame (entity +
@@ -433,5 +287,4 @@ def generate_ontology(
         ),
         "business_rules": business_rules_df(parsed),
         "enhancements": suggest_enhancements(model_dfs["properties"]),
-        "patterns": patterns,
     }

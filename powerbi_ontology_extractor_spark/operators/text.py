@@ -1,21 +1,15 @@
 """Text analysis for training-data pipelines: language ID, quality
 scoring, token counting, document fingerprinting.
 
-Everything except the crc32 winnowing fingerprint is pure Spark
-expressions (whole-stage codegen); that fingerprint is a numpy Arrow
-UDF, and cross-engine (DuckDB-oracled) polynomial-hash variants of
-both SimHash and the winnow grammar live at the bottom of this module.
+Everything is pure Spark expressions (whole-stage codegen, no Python
+UDF).  SimHash and the winnow fingerprint hash with a polynomial char
+hash that DuckDB mirrors exactly (bottom of this module).
 """
 
 from __future__ import annotations
 
-import zlib
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 # Tiny per-language stopword profiles (n-gram heuristic seeds).  The
 # point is the *operator shape* (per-language hit-rate scoring + argmax),
@@ -105,61 +99,15 @@ def quality_features(
     )
 
 
-def make_winnow_udf(k: int = 5, window: int = 4):
-    """Winnowing fingerprints (Schleimer et al.): k-gram rolling hashes,
-    min per sliding window, dedup — numpy Arrow UDF, one vectorized pass
-    per document."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def winnow(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            t = (t or "").lower()
-            if len(t) < k:
-                out.append([zlib.crc32(t.encode())] if t else [])
-                continue
-            hashes = np.fromiter(
-                (zlib.crc32(t[i : i + k].encode()) for i in range(len(t) - k + 1)),
-                dtype=np.int64,
-            )
-            if len(hashes) <= window:
-                out.append([int(hashes.min())])
-                continue
-            strides = np.lib.stride_tricks.sliding_window_view(hashes, window)
-            mins = strides.min(axis=1)
-            out.append(sorted(set(int(x) for x in mins)))
-        return pd.Series(out)
-
-    return winnow
-
-
-def fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
-    """(doc_id, fingerprints array<long>) — winnowed rolling-hash set;
-    overlap of fingerprint sets ≈ shared content (plagiarism/leak
-    detection at corpus scale via explode + groupBy on hash)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        make_winnow_udf(k, window)(F.col(text_col)).alias("fingerprints"),
-    )
-
-
-# --- engine-native (cross-engine) hashing variants ---------------------------
+# --- engine-native (cross-engine) hashing ------------------------------------
 #
-# The default SimHash / winnow operators hash with zlib.crc32 (fast,
-# battle-tested) inside Arrow UDFs — but crc32 has no DuckDB analogue,
-# so those surfaces can only be pytest-pinned.  The variants below use
-# a 31-based polynomial char hash mod 2^32 whose fold is expressible
-# IDENTICALLY in Spark SQL and DuckDB SQL, which puts the whole
-# signature grammar on the hard value-compared oracle path (and keeps
-# the hashing JVM-side / whole-stage-codegen — no Python at all).  The
-# DuckDB strings are RENDERED from the same templates: edit the
-# template, both engines follow.
+# SimHash and winnowing hash with a 31-based polynomial char hash mod
+# 2^32 whose fold is expressible IDENTICALLY in Spark SQL and DuckDB
+# SQL, which puts the whole signature grammar on the hard
+# value-compared oracle path (and keeps the hashing JVM-side /
+# whole-stage-codegen — no Python at all).  The DuckDB strings are
+# RENDERED from the same templates: edit the template, both engines
+# follow.
 #
 # DuckDB rendering rules (hard-won): stage each list-valued step as a
 # real subquery column — a lateral alias or re-inlined expression is
@@ -268,8 +216,8 @@ def engine_native_fingerprints(
     window: int = 12,
 ) -> DataFrame:
     """(doc_id, fingerprints): winnowing over the polynomial char hash
-    as pure Spark SQL expressions — the cross-engine variant of
-    ``fingerprints`` (same winnow shape, different k-gram hash).  Grams
+    as pure Spark SQL expressions (Schleimer et al.: k-gram hashes, min
+    per sliding window, dedup), mirrored by winnow_duck_sql.  Grams
     are staged as a real column so the window-min pass is O(n·w).
 
     The result is lazily localCheckpoint-ed: Catalyst's

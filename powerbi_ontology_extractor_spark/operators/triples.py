@@ -300,8 +300,8 @@ GRAMMAR: dict[str, Frame] = {
         ],
     ),
     # owl.py:264-299 (T7) property constraints as annotations; the enum
-    # predicate itself is indexed (owl.py:292).  Input frame:
-    # constraints_io.PROPERTY_CONSTRAINT_COLS
+    # predicate itself is indexed (owl.py:292).  Input frame: the union
+    # of constraints_io's enhancement and sidecar property constraints
     "property_constraints": Frame(
         {"_prop": _iri("entity", "property")},
         [

@@ -58,6 +58,9 @@ def test_results_independent_of_shuffle_partitions(spark, docs):
     shuffles are partitioned (every cap slices by sorted id).  AQE
     coalescing is off so the two settings really run different
     partition counts."""
+    from powerbi_ontology_extractor_spark.operators.analytics import (
+        canonical_definitions,
+    )
     from powerbi_ontology_extractor_spark.operators.canonicalize import (
         entity_canonical_mapping,
     )
@@ -69,6 +72,15 @@ def test_results_independent_of_shuffle_partitions(spark, docs):
 
     md = extract_all(corpus_df(spark, n_repos=4), materialize=True)
     od = generate_ontology(md, materialize=True)
+    # measure 'KPI': one winning formula in three dashboards and two
+    # single-dashboard alternatives whose rank order (formula 'a…' from
+    # dashboard z, then 'b…' from dashboard a) is not source order
+    kpi = [("w", "D", "T", "KPI", "SUM(x)", "", "", []) for w in "pqr"]
+    kpi += [("z", "D", "T", "KPI", "a(x)", "", "", []),
+            ("a", "D", "T", "KPI", "b(x)", "", "", [])]
+    measures = md["measures"].unionByName(
+        spark.createDataFrame(kpi, md["measures"].schema)
+    )
     # the documents have no byte-identical pairs: re-insert every 10th
     # under a shifted id so the exact groups are non-empty
     text = docs.select("doc_id", "text")
@@ -85,6 +97,8 @@ def test_results_independent_of_shuffle_partitions(spark, docs):
                 DD.exact_duplicate_groups(dup_docs),
                 DD.minhash_near_duplicates(docs, jaccard_threshold=0.5),
                 entity_canonical_mapping(od["ontology_entities"], md["properties"]),
+                # alternative_sources as emitted, not re-sorted
+                canonical_definitions(measures),
             )
         ]
 
@@ -101,6 +115,9 @@ def test_results_independent_of_shuffle_partitions(spark, docs):
             spark.conf.set(k, v)
     assert all(out[0])  # each operator produced rows
     assert out[0] == out[1]
+    alternatives = {r[0]: r[4] for r in out[0][3]}
+    assert alternatives["kpi"] == ["a/D", "z/D"]
+    assert all(a == sorted(a) for a in alternatives.values())
 
 
 def test_simhash_near_duplicates(spark):
@@ -116,22 +133,41 @@ def test_simhash_near_duplicates(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = DD.hamming_pairs(
-        TX.simhash32_signatures(d), max_hamming=3, bits=32
-    ).collect()
+    pairs = DD.hamming_pairs(TX.simhash32_signatures(d), max_hamming=3).collect()
     assert {(r["id1"], r["id2"]): r["hamming"] for r in pairs} == {
         (1, 2): 0,
         (4, 5): 1,
     }
 
 
+def test_hamming_pairs_default_width_is_32_bits(spark):
+    # 250 random 32-bit signatures plus a pair 2 bits apart, one bit in
+    # each 16-bit half: with no width argument every chunk must cover
+    # real signature bits, or the pair drowns in an all-zero chunk
+    # bucket and is capped away
+    import random
+
+    rng = random.Random(11)
+    sigs = [(i, rng.getrandbits(32)) for i in range(250)]
+    base = rng.getrandbits(32)
+    sigs += [(1000, base), (1001, base ^ (1 << 3) ^ (1 << 20))]
+    got = DD.hamming_pairs(
+        spark.createDataFrame(sigs, "id long, sig long"), max_hamming=3
+    ).collect()
+    truth = {
+        (a, b): bin(x ^ y).count("1")
+        for a, x in sigs for b, y in sigs
+        if a < b and bin(x ^ y).count("1") <= 3
+    }
+    assert {(r["id1"], r["id2"]): r["hamming"] for r in got} == truth
+    assert truth[(1000, 1001)] == 2
+
+
 def test_simhash_identical_is_zero(spark):
     d = spark.createDataFrame(
         [(1, "same words here"), (2, "same words here")], "doc_id long, text string"
     )
-    pairs = DD.hamming_pairs(
-        TX.simhash32_signatures(d), max_hamming=0, bits=32
-    ).collect()
+    pairs = DD.hamming_pairs(TX.simhash32_signatures(d), max_hamming=0).collect()
     assert len(pairs) == 1 and pairs[0]["hamming"] == 0
 
 
@@ -208,7 +244,7 @@ def test_fingerprints_and_matches(spark):
         ],
         "doc_id long, text string",
     )
-    fp = TX.fingerprints(d)
+    fp = TX.engine_native_fingerprints(d, k=10, window=4)
     matches = TX.fingerprint_matches(fp, min_shared=3).collect()
     assert {(r["id1"], r["id2"]) for r in matches} == {(1, 2)}
 

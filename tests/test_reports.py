@@ -95,34 +95,6 @@ def test_html_debt_report():
     assert "Conflicts Detected (1)" in html
 
 
-def test_graph_figure_spec_and_png_gate(tmp_path):
-    from powerbi_ontology_extractor_spark.functions.reports import (
-        graph_figure_spec,
-        render_png,
-    )
-    import pytest as _pytest
-
-    nodes = [
-        {"node": "ont:A", "node_type": "owl:Class"},
-        {"node": "ont:B", "node_type": None},
-        {"node": "ont:C", "node_type": "owl:ObjectProperty"},
-    ]
-    edges = [
-        {"src": "ont:A", "rel": "ont:has", "dst": "ont:B"},
-        {"src": "ont:A", "rel": "rdf:type", "dst": "ont:Z"},  # Z pruned
-    ]
-    spec = graph_figure_spec(nodes, edges, max_nodes=2)
-    assert spec["truncated"] and spec["n_nodes_total"] == 3
-    assert [n["id"] for n in spec["nodes"]] == ["ont:A", "ont:B"]
-    assert spec["nodes"][0]["color"] == "#4CAF50"
-    assert spec["edges"] == [
-        {"source": "ont:A", "target": "ont:B", "label": "has"}
-    ]
-    # deterministic layout
-    assert spec == graph_figure_spec(nodes, edges, max_nodes=2)
-    with _pytest.raises(NotImplementedError):
-        render_png(spec, str(tmp_path / "g.png"))
-
 # ---------------------------------------------------------------------------
 # Distributed render twins (functions/report_lines.py): the frame
 # renderers must produce byte-identical lines to the driver functions.

@@ -12,6 +12,7 @@ the pair fan-out by policy instead of data luck.
 import pytest
 from pyspark.sql import functions as F
 
+from powerbi_ontology_extractor_spark.functions.salt import capped_collect
 from powerbi_ontology_extractor_spark.operators import analytics as A
 from powerbi_ontology_extractor_spark.operators import dedup as DD
 from powerbi_ontology_extractor_spark.operators.canonicalize import (
@@ -38,6 +39,36 @@ def test_capped_bucket_pairs_two_phase_is_exact_prefix(spark):
     seen = {r["id1"] for r in rows} | {r["id2"] for r in rows}
     assert seen == {f"id{i:04d}" for i in range(100)}
     assert all(r["id1"] < r["id2"] for r in rows)
+    # the helper underneath, on one hot key (2,000 rows, 300 distinct
+    # values, nulls mixed in) and one small key: each item's two-phase
+    # prefix equals the single-phase sorted prefix, n the exact count
+    rows = [(0, f"v{i * 7919 % 300:03d}", None if i % 50 == 0 else i % 170)
+            for i in range(2000)]
+    rows += [(1, "b", 2), (1, "a", 2), (1, "a", 1)]
+    df = spark.createDataFrame(rows, "k int, v string, w int")
+    for distinct in (False, True):
+        got = {r["k"]: r for r in capped_collect(
+            df, ["k"], ["v", "w"], 100, distinct=distinct).collect()}
+        for k in (0, 1):
+            kept = [r for r in rows if r[0] == k]
+            assert got[k]["n"] == len(kept)
+            for i, c in ((1, "v"), (2, "w")):
+                vals = [r[i] for r in kept if r[i] is not None]
+                if distinct:
+                    vals = set(vals)
+                assert got[k][c] == sorted(vals)[:100]
+
+
+def test_exact_duplicate_groups_mega_duplicate_bounded(spark):
+    # 12,000 copies of one text: the exact copy count survives, the id
+    # list is the CAP smallest ids
+    n = 12_000
+    d = spark.range(n).selectExpr(
+        "CAST((id * 7) % 12000 AS BIGINT) AS doc_id", "'same text' AS text"
+    )
+    (g,) = DD.exact_duplicate_groups(d).collect()
+    assert g["n_docs"] == n
+    assert g["doc_ids"] == list(range(10_000))
 
 
 def test_simhash_empty_docs_bounded(spark):
@@ -49,7 +80,7 @@ def test_simhash_empty_docs_bounded(spark):
     rows += [(N_HOT + 2, "the quick brown fox jumps over the lazy hog")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = DD.hamming_pairs(
-        simhash32_signatures(d), max_hamming=3, max_bucket=200, bits=32
+        simhash32_signatures(d), max_hamming=3, max_bucket=200
     )
     cap_pairs = 200 * 199 // 2
     assert 0 < pairs.count() <= cap_pairs + 1
@@ -92,7 +123,8 @@ def test_fingerprint_matches_boilerplate_bounded(spark):
     rows += [(N_HOT + 2, f"beta preamble. {boiler} beta tail.")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     got = TX.fingerprint_matches(
-        TX.fingerprints(d), min_shared=3, max_bucket=200
+        TX.engine_native_fingerprints(d, k=10, window=4), min_shared=3,
+        max_bucket=200,
     ).collect()
     cap_pairs = 200 * 199 // 2
     assert 0 < len(got) <= cap_pairs + 2 * 200 + 1
