@@ -10,6 +10,7 @@ Usage:
     python bench_extra.py kg        # stage breakdown of kg_build_triples
     python bench_extra.py rel       # the relational headline queries
     python bench_extra.py dag       # driver DAG build of the emission families
+    python bench_extra.py canon     # entity_canonical_mapping: wall, jobs, split
 """
 
 from __future__ import annotations
@@ -173,6 +174,82 @@ def main() -> None:
                 build().schema  # forces analysis, not execution
                 walls.append(time.perf_counter() - t0)
             timings[name] = [round(min(walls), 3)]
+
+    elif which == "canon":
+        # entity_canonical_mapping over corpus_df(16)'s checkpointed
+        # frames: warm min-of-7 wall and Spark jobs of one call, then the
+        # call's parts (each warm, min of 7): LSH candidates, scoring,
+        # and the star iterations with their count
+        import inspect
+
+        from powerbi_ontology_extractor_spark.operators import canonicalize as C
+        from powerbi_ontology_extractor_spark.operators.extract import extract_all
+        from powerbi_ontology_extractor_spark.operators.ontology import (
+            generate_ontology,
+        )
+        from powerbi_ontology_extractor_spark.sources.corpus import corpus_df
+
+        md = extract_all(corpus_df(spark, n_repos=16), materialize=True)
+        od = generate_ontology(md, materialize=True)
+        entities, properties = od["ontology_entities"], md["properties"]
+        params = inspect.signature(C.entity_canonical_mapping).parameters
+        bands, hashes, min_jaccard = (
+            params[k].default for k in ("name_bands", "num_hashes", "min_prop_jaccard")
+        )
+
+        def warm_min(name, fn):
+            fn()
+            walls = []
+            for _ in range(7):
+                t0 = time.perf_counter()
+                fn()
+                walls.append(time.perf_counter() - t0)
+            timings[name] = [round(min(walls), 3)]
+
+        def job_names(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jsc = sc._jsc.sc()
+            jsc.listenerBus().waitUntilEmpty()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            return [jsc.statusStore().job(j).name() for j in jobs]
+
+        def mapping():
+            return C.entity_canonical_mapping(entities, properties).collect()
+
+        warm_min("mapping_s", mapping)
+        timings["mapping_jobs"] = [len(job_names("mapping", mapping))]
+
+        ents = C._entity_rows(entities, properties).localCheckpoint(eager=True)
+
+        def candidates():
+            return C.lsh_candidate_pairs(
+                ents, "id", "blocking_text", num_hashes=hashes, bands=bands
+            ).localCheckpoint(eager=True)
+
+        warm_min("candidates_s", candidates)
+        cands = candidates()
+
+        def scoring():
+            accepted = C._accepted_pairs(ents, cands, min_jaccard)
+            return accepted.localCheckpoint(eager=True)
+
+        warm_min("scoring_s", scoring)
+        accepted = scoring()
+
+        def stars():
+            return C.connected_components(accepted, "id1", "id2").collect()
+
+        warm_min("star_iterations_s", stars)
+        # one eager localCheckpoint job for the input, one per iteration
+        names = job_names("stars", stars)
+        timings["star_iterations"] = [
+            sum(n.startswith("localCheckpoint") for n in names) - 1
+        ]
+        timings["_counts"] = [ents.count(), cands.count(), accepted.count()]
 
     elif which == "rel":
         import __spark_entry__ as entry

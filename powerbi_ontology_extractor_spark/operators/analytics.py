@@ -290,17 +290,16 @@ def canonical_definitions(measures: DataFrame) -> DataFrame:
     counts = capped_collect(m, ["name", "norm"], ["src"]).select(
         "name", "norm", F.col("n").alias("cnt"), F.col("src").alias("srcs")
     )
-    # totals derived from the aggregated frame — no second scan of m
-    totals = (
-        counts.groupBy("name")
-        .agg(F.sum("cnt").alias("total"))
+    # the windows run over (name, norm) AGGREGATES (distinct formulas
+    # per name), not raw rows — cardinality-bounded, not a skew risk;
+    # both partition by name, so the total shares the rank's exchange
+    by_name = Window.partitionBy("name")
+    ranked = (
+        counts.withColumn("total", F.sum("cnt").over(by_name))
         .where(F.col("total") > 1)
-    )
-    # the window runs over (name, norm) AGGREGATES (distinct formulas
-    # per name), not raw rows — cardinality-bounded, not a skew risk
-    w = Window.partitionBy("name").orderBy(F.desc("cnt"), "norm")
-    ranked = counts.join(totals, "name").withColumn(
-        "rk", F.row_number().over(w)
+        .withColumn(
+            "rk", F.row_number().over(by_name.orderBy(F.desc("cnt"), "norm"))
+        )
     )
     winners = ranked.where(F.col("rk") == 1).select(
         "name",

@@ -15,12 +15,13 @@ O(n²) — so this module:
    a band hash are ever paired; bucket size capped against
    pathological skew);
 3. scores candidate pairs with the reference's own similarity
-   heuristics (containment / common-char ratio) in a
-   batched UDF — exact scoring only *inside* blocks;
+   heuristics (containment / common-char ratio) as one SQL expression
+   — exact scoring only *inside* blocks, no Python UDF;
 4. contracts the accepted-pair graph to components with the
    large-star/small-star iterative DataFrame algorithm (Kiveris et al.,
-   "Connected Components in MapReduce and Beyond", SOCC'14), local-
-   checkpointing every iteration to cut lineage;
+   "Connected Components in MapReduce and Beyond", SOCC'14), each star
+   step one window min; every iteration is one eager local checkpoint,
+   whose job also fills the convergence fingerprint (an Observation);
 5. assigns each component the lexicographically-least member IRI as its
    canonical IRI and rewrites triples through the mapping (two hash
    joins).
@@ -33,9 +34,9 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, LongType
+from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
 from powerbi_ontology_extractor_spark.functions.salt import capped_collect
@@ -191,60 +192,55 @@ def lsh_candidate_pairs(
     return out.dropDuplicates() if dedup else out
 
 
-@F.pandas_udf(BooleanType())
-def similar_names_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """The reference's rename heuristic (schema_mapper.py:353-369):
-    containment OR (len-diff ≤3 AND common-char ratio >0.7), batched."""
-
-    def sim(x: str, y: str) -> bool:
-        x = (x or "").lower().replace("_", "").replace("-", "")
-        y = (y or "").lower().replace("_", "").replace("-", "")
-        if not x or not y:
-            return False
-        if x in y or y in x:
-            return True
-        if abs(len(x) - len(y)) <= 3:
-            common = sum(1 for ch in x if ch in y)
-            return common / max(len(x), len(y)) > 0.7
-        return False
-
-    return pd.Series([sim(x, y) for x, y in zip(a, b)])
-
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    return edges.select("u", "v").unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+def similar_names_sql(a: str, b: str) -> F.Column:
+    """The reference's rename heuristic (schema_mapper.py:353-369) on
+    columns ``a`` and ``b``, as one SQL expression: after lower-casing
+    and stripping ``_``/``-``, an empty or null name is never similar;
+    otherwise containment, or a length difference ≤3 with more than 70%
+    of the first name's characters (code points) found in the second,
+    over the longer length."""
+    x, y = (f"replace(replace(lower(`{c}`), '_', ''), '-', '')" for c in (a, b))
+    return F.expr(
+        f"""CASE
+        WHEN coalesce({x}, '') = '' OR coalesce({y}, '') = '' THEN false
+        WHEN instr({y}, {x}) > 0 OR instr({x}, {y}) > 0 THEN true
+        WHEN abs(char_length({x}) - char_length({y})) <= 3 THEN
+            size(filter(sequence(1, char_length({x})),
+                        _pos -> instr({y}, substring({x}, _pos, 1)) > 0))
+            / greatest(char_length({x}), char_length({y})) > 0.7
+        ELSE false END"""
     )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every neighbor strictly larger than u to
-    min(Γ(u) ∪ {u})."""
-    sym = _symmetrize(edges)
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    mins = mins.select("u", F.least("mv", F.col("u")).alias("m"))
+    m(u) = min(Γ(u) ∪ {u}); m(u) ≤ u < v, so no self-loop is emitted."""
+    sym = edges.select("u", "v").unionByName(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
     return (
-        sym.join(mins, "u")
+        sym.select("u", "v", m.alias("m"))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .dropDuplicates()
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges large→small, then connect every smaller-or-equal
-    neighbor (and u itself) to min(Γ(u) ∪ {u})."""
+    """Orient edges large→small, then connect every smaller neighbor
+    (and u itself) to m(u) = min(Γ(u) ∪ {u}): one window, and per edge
+    the pair (v, m) and (u, m)."""
     oriented = edges.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     ).where(F.col("u") != F.col("v"))
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    nbrs = oriented.join(mins, "u").select(
-        F.col("v").alias("u"), F.col("m").alias("v")
+    m = F.min("v").over(Window.partitionBy("u")).alias("m")
+    pairs = F.array(
+        F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+        F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
     )
-    selfs = mins.select(F.col("u"), F.col("m").alias("v"))
     return (
-        nbrs.unionByName(selfs)
+        oriented.select("u", "v", m)
+        .select(F.inline(pairs))
         .where(F.col("u") != F.col("v"))
         .dropDuplicates()
     )
@@ -255,49 +251,99 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for the undirected graph given by ``edges``.
 
-    Alternates large-star / small-star until the edge multiset is
-    stable.  Per iteration: localCheckpoint (cuts the quadratic lineage
-    that kills iterative DataFrame jobs) and an O(1)-row convergence
-    aggregate (count + order-insensitive xxhash64 sum), not a join.
-    Singleton inputs are the caller's concern: nodes with no accepted
-    edge simply stay their own canonical.
+    Alternates large-star / small-star until two iterations in a row
+    have the same edge count and order-insensitive xxhash64 sum.  Each
+    iteration is one eager localCheckpoint (cuts the quadratic lineage
+    of iterative DataFrame jobs), whose job also fills the fingerprint
+    as an ``Observation``: convergence runs no job of its own.  Nodes
+    come from the checkpointed input, so the caller's plan runs once;
+    an entity with no accepted edge is the caller's to keep canonical.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col("u") != F.col("v")
+    e = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=True)
     )
-    all_nodes = e.select("u").unionByName(e.select(F.col("v").alias("u"))).dropDuplicates()
-    e = e.localCheckpoint(eager=True)
+    # every node as a self-edge: a component's min has no out-edge
+    nodes = e.select("u", F.col("u").alias("v")).unionByName(
+        e.select(F.col("v").alias("u"), "v")
+    )
 
-    def fingerprint(df: DataFrame) -> tuple[int, int]:
-        row = df.agg(
-            F.count("*").alias("n"),
-            # decimal sum: overflow-safe under ANSI mode
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    prev = (-1, -1)
+    prev = None
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        cur = fingerprint(e)
+        fp = Observation()
+        e = (
+            _small_star(_large_star(e))
+            .observe(
+                fp,
+                F.count("*").alias("n"),
+                # decimal sum: overflow-safe under ANSI mode
+                F.coalesce(
+                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+                    F.lit(0).cast("decimal(38,0)"),
+                ).alias("h"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        cur = fp.get
         if cur == prev:
             break
         prev = cur
 
-    # post-state: every edge points node → component-min; close the map
-    comp = e.groupBy("u").agg(F.min("v").alias("component")).select(
-        F.col("u").alias("node"), "component"
-    )
-    # component representatives map to themselves; isolated nodes too
+    # post-state: every edge points node → component-min (v < u)
     return (
-        all_nodes.join(comp, all_nodes["u"] == comp["node"], "left")
+        e.unionByName(nodes)
+        .groupBy(F.col("u").alias("node"))
+        .agg(F.min("v").alias("component"))
+    )
+
+
+def _entity_rows(entities: DataFrame, properties: DataFrame) -> DataFrame:
+    """(id, repo, dataset, entity, blocking_text, props) per entity:
+    ``props`` its sorted property names, ``blocking_text`` the LSH
+    input ``lower(entity) || prop names``."""
+    props = properties.groupBy("repo", "dataset", "entity").agg(
+        F.array_sort(F.collect_set("property")).alias("props")
+    )
+    return (
+        entities.join(props, ["repo", "dataset", "entity"], "left")
+        .withColumn("props", F.coalesce(F.col("props"), F.array()))
         .select(
-            F.col("u").alias("node"),
-            F.coalesce(F.col("component"), F.col("u")).alias("component"),
+            F.concat_ws(
+                "||", F.col("repo"), F.col("dataset"), F.col("entity")
+            ).alias("id"),
+            "repo",
+            "dataset",
+            "entity",
+            F.concat(
+                F.lower(F.col("entity")),
+                F.lit(" "),
+                F.lower(F.array_join("props", " ")),
+            ).alias("blocking_text"),
+            "props",
         )
+    )
+
+
+def _accepted_pairs(
+    ents: DataFrame, cands: DataFrame, min_prop_jaccard: float
+) -> DataFrame:
+    """The (id1, id2) candidate pairs that pass the reference's name
+    heuristic and have property-set Jaccard ≥ ``min_prop_jaccard``."""
+    a, b = (
+        ents.select(*(F.col(c).alias(f"{c}{i}") for c in ("id", "entity", "props")))
+        for i in (1, 2)
+    )
+    union = F.array_union("props1", "props2")
+    prop_jaccard = F.when(F.size(union) == 0, F.lit(1.0)).otherwise(
+        F.size(F.array_intersect("props1", "props2")) / F.size(union)
+    )
+    return (
+        cands.join(a, "id1")
+        .join(b, "id2")
+        .where(similar_names_sql("entity1", "entity2"))
+        .where(prop_jaccard >= min_prop_jaccard)
+        .select("id1", "id2")
     )
 
 
@@ -326,58 +372,13 @@ def entity_canonical_mapping(
     The extra bands only widen candidate generation; acceptance
     filtering is unchanged.
     """
-    props = properties.groupBy("repo", "dataset", "entity").agg(
-        F.array_sort(F.collect_set("property")).alias("props")
-    )
-    ents = (
-        entities.join(props, ["repo", "dataset", "entity"], "left")
-        .withColumn("props", F.coalesce(F.col("props"), F.array()))
-        .select(
-            F.concat_ws(
-                "||", F.col("repo"), F.col("dataset"), F.col("entity")
-            ).alias("id"),
-            "repo",
-            "dataset",
-            "entity",
-            F.concat(
-                F.lower(F.col("entity")),
-                F.lit(" "),
-                F.lower(F.array_join("props", " ")),
-            ).alias("blocking_text"),
-            "props",
-        )
-    )
+    ents = _entity_rows(entities, properties)
     cands = lsh_candidate_pairs(
         ents, "id", "blocking_text", num_hashes=num_hashes, bands=name_bands
     )
-    a = ents.select(
-        F.col("id").alias("id1"),
-        F.col("entity").alias("name1"),
-        F.col("props").alias("props1"),
+    comp = connected_components(
+        _accepted_pairs(ents, cands, min_prop_jaccard), "id1", "id2"
     )
-    b = ents.select(
-        F.col("id").alias("id2"),
-        F.col("entity").alias("name2"),
-        F.col("props").alias("props2"),
-    )
-    scored = (
-        cands.join(a, "id1")
-        .join(b, "id2")
-        .withColumn(
-            "prop_jaccard",
-            F.when(
-                F.size(F.array_union("props1", "props2")) == 0, F.lit(1.0)
-            ).otherwise(
-                F.size(F.array_intersect("props1", "props2"))
-                / F.size(F.array_union("props1", "props2"))
-            ),
-        )
-        .withColumn("name_ok", similar_names_udf(F.col("name1"), F.col("name2")))
-    )
-    accepted = scored.where(
-        F.col("name_ok") & (F.col("prop_jaccard") >= min_prop_jaccard)
-    ).select("id1", "id2")
-    comp = connected_components(accepted, "id1", "id2")
     mapping = ents.join(comp, ents["id"] == comp["node"], "left").select(
         "repo",
         "dataset",

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from powerbi_ontology_extractor_spark.functions.naming import snake_case
 from powerbi_ontology_extractor_spark.operators.canonicalize import (
-    similar_names_udf,
+    similar_names_sql,
 )
 
 
@@ -123,7 +123,7 @@ def detect_drift(
             new.select(*keys, "entity", F.col("column").alias("new_col")),
             [*keys, "entity"],
         )
-        .where(similar_names_udf(F.col("missing_col"), F.col("new_col")))
+        .where(similar_names_sql("missing_col", "new_col"))
     )
     w_m = Window.partitionBy(*keys, "entity", "missing_col").orderBy("new_col")
     w_n = Window.partitionBy(*keys, "entity", "new_col").orderBy("missing_col")

@@ -104,6 +104,24 @@ def test_canonical_definitions(spark):
     assert c["alternative_sources"] == ["r3/D3"]
 
 
+def test_canonical_definitions_scans_measures_once(spark):
+    """The per-name total is a window over the (name, norm) counts, so
+    the executed plan holds one capped_collect pipeline over the
+    measures scan (a groupBy total pruned the src collect and planned a
+    second one).  Non-null columns, as extract_all's measures have."""
+    m = spark.createDataFrame(
+        [("r1", "D1", "KPI", "SUM(A[X])"), ("r2", "D2", "KPI", "SUM(A[X])"),
+         ("r3", "D3", "KPI", "COUNT(A[X])")],
+        "repo string not null, dataset string not null, "
+        "measure string not null, dax_formula string not null",
+    ).localCheckpoint()
+    df = A.canonical_definitions(m)
+    assert len(df.collect()) == 1
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("Scan ExistingRDD") == 1, final
+
+
 def test_semantic_debt(dfs):
     conflicts = A.measure_conflicts(dfs["measures"]).unionByName(
         A.entity_structure_conflicts(dfs["properties"]),

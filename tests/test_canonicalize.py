@@ -1,5 +1,6 @@
 """Canonicalization: connected components vs a union-find oracle,
-MinHash-LSH blocking behavior, end-to-end entity linking + rewrite."""
+MinHash-LSH blocking behavior, the rename heuristic vs its Python
+reference, end-to-end entity linking + rewrite."""
 
 import random
 
@@ -7,12 +8,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from powerbi_ontology_extractor_spark.operators.canonicalize import (
+    _large_star,
+    _small_star,
     connected_components,
     entity_canonical_mapping,
     lsh_candidate_pairs,
     rewrite_triples_canonical,
-    similar_names_udf,
+    similar_names_sql,
 )
+from powerbi_ontology_extractor_spark.operators.extract import extract_all
+from powerbi_ontology_extractor_spark.operators.ontology import generate_ontology
+from powerbi_ontology_extractor_spark.sources.corpus import corpus_df
+from tests.test_streaming_manifest import _jobs
 
 
 def _union_find_components(edges, nodes):
@@ -73,6 +80,58 @@ def test_cc_random_vs_union_find(spark, seed):
     assert actual == expected
 
 
+def _hard_graph(kind):
+    if kind == "empty":
+        return []
+    if kind == "star":  # the hub is neither the smallest nor the largest
+        return [("n050", f"n{i:03d}") for i in range(100) if i != 50]
+    # a 256-node path with shuffled labels, fed in shuffled order and
+    # direction: large-star/small-star needs several iterations
+    rng = random.Random(3)
+    nodes = [f"n{i:03d}" for i in range(256)]
+    rng.shuffle(nodes)
+    edges = [
+        (a, b) if rng.random() < 0.5 else (b, a) for a, b in zip(nodes, nodes[1:])
+    ]
+    rng.shuffle(edges)
+    return edges
+
+
+@pytest.mark.parametrize("kind", ["empty", "star", "path"])
+def test_cc_hard_graphs_vs_union_find(spark, kind):
+    edges = _hard_graph(kind)
+    expected = _union_find_components(edges, {n for e in edges for n in e})
+    actual, result = _spark_components(spark, edges)
+    assert actual == expected
+    comp_of = {r["node"]: r["component"] for r in result}
+    assert all(comp_of[n] == min(g) for g in actual for n in g)
+
+
+def test_star_step_plans_no_join(spark):
+    """A large-star + small-star step is windows over the edges: no join."""
+    e = spark.createDataFrame([("b", "a"), ("c", "b")], "u string, v string")
+    plan = _small_star(_large_star(e))._jdf.queryExecution().optimizedPlan()
+    assert "Join" not in plan.toString()
+
+
+# measured on corpus_df(4) at local[8]: 8 jobs checkpoint the scored
+# edges, each of the 2 star iterations 4, the mapping's collect 6
+# (42 with the input plan re-run and a convergence job per iteration)
+JOBS_PER_MAPPING = 22
+
+
+def test_entity_mapping_job_count(spark):
+    """One entity_canonical_mapping call runs the LSH and scoring plan
+    once (nodes come from the checkpointed edges) and no convergence job
+    of its own (the fingerprint rides on each iteration's eager
+    checkpoint as an Observation)."""
+    md = extract_all(corpus_df(spark, n_repos=4), materialize=True)
+    od = generate_ontology(md, materialize=True)
+    jobs = _jobs(spark, "canon", lambda: entity_canonical_mapping(
+        od["ontology_entities"], md["properties"]).collect())
+    assert len(jobs) <= JOBS_PER_MAPPING, jobs
+
+
 def test_lsh_blocks_near_duplicates(spark):
     docs = [
         ("a", "the quick brown fox jumps over the lazy dog"),
@@ -88,15 +147,71 @@ def test_lsh_blocks_near_duplicates(spark):
     assert ("a", "c") not in pairs and ("b", "c") not in pairs
 
 
+def _similar_names_ref(x, y):
+    """The reference's rename heuristic (schema_mapper.py:353-369) in
+    Python: containment OR (len-diff ≤3 AND common-char ratio >0.7)."""
+    x = (x or "").lower().replace("_", "").replace("-", "")
+    y = (y or "").lower().replace("_", "").replace("-", "")
+    if not x or not y:
+        return False
+    if x in y or y in x:
+        return True
+    if abs(len(x) - len(y)) <= 3:
+        common = sum(1 for ch in x if ch in y)
+        return common / max(len(x), len(y)) > 0.7
+    return False
+
+
+def _name_pairs(n, seed=7):
+    """The three canonical cases, a few fixed edge cases and ``n`` seeded
+    name pairs around the heuristic's edges: case, ``_``/``-``,
+    length differences of exactly 3 and 4, common ratios of exactly 0.7,
+    empty strings, nulls and non-ASCII letters."""
+    rng = random.Random(seed)
+    alphabet = "abcdeABCDE_-éÜñßж"
+
+    def word(k):
+        return "".join(rng.choice(alphabet) for _ in range(k))
+
+    pairs = [("Customer", "Customers"), ("warehouse_location", "warehouselocation"),
+             ("Revenue", "Profit"), ("", "x"), (None, "x"), ("x", None),
+             (None, None), ("__", "a"), ("abcdefghij", "abcdefgxyz"),
+             ("abcdefg", "abcdefgxyz")]
+    for _ in range(n):
+        x = word(rng.randint(0, 12))
+        kind = rng.randrange(6)
+        if kind == 0:
+            y = word(rng.randint(0, 12))
+        elif kind == 1:  # length difference of exactly 3 or 4
+            y = "".join(rng.sample(x, len(x))) + word(rng.choice([3, 4]))
+        elif kind == 2:  # 7 of 10 characters shared: ratio exactly 0.7
+            x = "abcdefghij"
+            y = "".join(rng.sample("abcdefg", 7)) + "xyz"
+        elif kind == 3:  # case and separator noise
+            y = "".join(c.swapcase() if rng.random() < 0.5 else c for c in x)
+            y = y.replace("_", rng.choice(["", "-", "__"]))
+        elif kind == 4:  # substitutions
+            y = "".join(rng.choice(alphabet) if rng.random() < 0.3 else c for c in x)
+        else:
+            y = rng.choice(["", None, "_-"])
+        pairs.append((x, y) if rng.random() < 0.5 else (y, x))
+    return pairs
+
+
 def test_similar_names_heuristic(spark):
-    rows = [
-        ("Customer", "Customers"),       # containment
-        ("warehouse_location", "warehouselocation"),  # containment after strip
-        ("Revenue", "Profit"),           # not similar
-    ]
-    df = spark.createDataFrame(rows, "a string, b string")
-    res = [r["s"] for r in df.select(similar_names_udf("a", "b").alias("s")).collect()]
-    assert res == [True, True, False]
+    """similar_names_sql equals the Python reference on the three
+    canonical cases and 500 seeded random pairs."""
+    pairs = _name_pairs(500)
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "i int, a string, b string"
+    )
+    got = dict(df.select("i", similar_names_sql("a", "b").alias("s")).collect())
+    expected = {i: _similar_names_ref(a, b) for i, (a, b) in enumerate(pairs)}
+    assert [got[i] for i in range(3)] == [True, True, False]
+    assert got == expected
+    # the seeded pairs reach both outcomes and the ratio's boundary
+    assert 50 < sum(expected.values()) < len(pairs) - 50
+    assert ("abcdefghij", "abcdefgxyz") in pairs
 
 
 @pytest.fixture(scope="module")
