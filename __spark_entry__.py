@@ -1239,20 +1239,23 @@ def _q_docs_lang_distribution(spark, sf_dir):
 
 def _q_docs_ngram_jaccard_adjacent(spark, sf_dir):
     """Exact word-trigram Jaccard between consecutive docs (the
-    verification metric of the MinHash dedup path) — pure JVM arrays."""
-    from powerbi_ontology_extractor_spark.operators.dedup import ngram_jaccard
+    verification metric of the MinHash dedup path) — pure JVM arrays,
+    grams built once per document before the join."""
+    from powerbi_ontology_extractor_spark.operators.dedup import (
+        ngram_jaccard,
+        word_ngrams,
+    )
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    a = d.select(F.col("doc_id").alias("id1"), F.col("text").alias("t1"))
-    b = d.select(F.col("doc_id").alias("id2"), F.col("text").alias("t2"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    g = word_ngrams(docs, "text", 3)
+    a = g.select(F.col("doc_id").alias("id1"), F.col("text").alias("g1"))
+    b = g.select(F.col("doc_id").alias("id2"), F.col("text").alias("g2"))
     return (
         a.join(b, F.col("id2") == F.col("id1") + 1)
         .select(
             "id1",
             "id2",
-            F.round(ngram_jaccard(F.col("t1"), F.col("t2"), 3), 6).alias(
-                "jaccard"
-            ),
+            F.round(ngram_jaccard(F.col("g1"), F.col("g2")), 6).alias("jaccard"),
         )
         .orderBy("id1")
     )

@@ -6,7 +6,8 @@ optimization work can attribute wall-clock to pipeline stages.  Reads
 the same $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS contract.
 
 Usage:
-    python bench_extra.py minhash   # stage breakdown of minhash_dedup_docs
+    python bench_extra.py minhash   # stage breakdown of minhash_dedup_docs,
+                                    # candidate and verify-input row counts
     python bench_extra.py kg        # stage breakdown of kg_build_triples
     python bench_extra.py rel       # the relational headline queries
     python bench_extra.py dag       # driver DAG build of the emission families
@@ -57,7 +58,9 @@ def main() -> None:
         )
         from powerbi_ontology_extractor_spark.operators.dedup import (
             minhash_near_duplicates,
+            word_ngrams,
         )
+        from plan_audit import join_output_rows
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         docs.count()  # warm scan
@@ -78,16 +81,21 @@ def main() -> None:
             ).count()
 
         timed("B_candidates", _b)
-        # C: full path
-        full_count = {}
+        # D: the verify side's per-document gram arrays only
+        timed("D_grams", lambda: _noop(word_ngrams(d, "text", 3)))
+        # C: full path; the first gram join's output is the verify's
+        # candidate input (one gram row per id)
+        full = {}
 
         def _c():
-            full_count["n"] = minhash_near_duplicates(
-                docs, jaccard_threshold=0.7
-            ).count()
+            df = minhash_near_duplicates(docs, jaccard_threshold=0.7)
+            full["n"] = len(df.collect())
+            full["verify_in"] = join_output_rows(df)[-1]
 
         timed("C_full", _c)
-        timings["_counts"] = [cand_count["n"], full_count["n"]]
+        timings["candidates"] = [cand_count["n"]]
+        timings["verify_input_rows"] = [full["verify_in"]]
+        timings["pairs"] = [full["n"]]
 
     elif which == "kg":
         from powerbi_ontology_extractor_spark.operators.extract import parse_models

@@ -38,6 +38,32 @@ def audit(plan: str) -> list[str]:
     return lines
 
 
+def plan_nodes(node):
+    """Every node of a JVM physical plan, descending through AQE's
+    adaptive root and query stages."""
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        yield from plan_nodes(node.executedPlan())
+        return
+    yield node
+    if kind.endswith("QueryStageExec"):
+        yield from plan_nodes(node.plan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from plan_nodes(children.apply(i))
+
+
+def join_output_rows(df) -> list[int]:
+    """``numOutputRows`` of each join in ``df``'s executed plan, root
+    first; read after an action on ``df`` itself (``collect``, not
+    ``count``, which plans a new query)."""
+    return [
+        n.metrics().apply("numOutputRows").value()
+        for n in plan_nodes(df._jdf.queryExecution().executedPlan())
+        if "Join" in n.getClass().getSimpleName()
+    ]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

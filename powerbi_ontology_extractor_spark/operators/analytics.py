@@ -277,7 +277,7 @@ def canonical_definitions(measures: DataFrame) -> DataFrame:
     (analyzer.py:240-295).  mode-per-group = count → row_number window.
     ``dashboards_using`` and ``alternative_sources`` are sorted and
     capped at salt.CAP (capped_collect), so neither depends on
-    partitioning.
+    partitioning.  A null measure name is one group like any other.
     """
     m = _with_src(measures).select(
         F.lower(F.col("measure")).alias("name"),
@@ -311,10 +311,15 @@ def canonical_definitions(measures: DataFrame) -> DataFrame:
         ranked.where(F.col("rk") > 1).select("name", F.explode("srcs").alias("src")),
         ["name"],
         ["src"],
-    ).select("name", F.col("src").alias("alternative_sources"))
-    return winners.join(alternatives, "name", "left").withColumn(
-        "alternative_sources",
-        F.coalesce(F.col("alternative_sources"), F.array()),
+    ).select(F.col("name").alias("alt_name"), F.col("src").alias("alt_srcs"))
+    # null-safe: a plain key join infers isnotnull(name) on the
+    # alternatives side only, and that filter, pushed down to the scan,
+    # makes the two capped_collect subtrees differ (planned twice)
+    return winners.join(
+        alternatives, F.col("name").eqNullSafe(F.col("alt_name")), "left"
+    ).select(
+        *winners.columns,
+        F.coalesce(F.col("alt_srcs"), F.array()).alias("alternative_sources"),
     )
 
 

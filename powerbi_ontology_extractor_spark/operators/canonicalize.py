@@ -151,18 +151,15 @@ def lsh_candidate_pairs(
     max_bucket: int = 200,
     unit: str = "char",
     shingle_k: int = 4,
-    dedup: bool = True,
 ) -> DataFrame:
     """(id1, id2) candidate pairs sharing ≥1 LSH band bucket.
 
     Buckets larger than ``max_bucket`` are truncated (skew guard — a
     bucket of B items emits B² pairs); the capped collect is salted
     two-phase (capped_bucket_pairs) so even a degenerate bucket never
-    funnels one aggregation buffer.  Pair dedup across bands via
-    dropDuplicates; ``dedup=False`` lets a caller with a cheap,
-    deterministic per-pair verify defer the dedup exchange until after
-    filtering (same final pair set — a pair colliding in k bands
-    passes or fails the verify identically k times).
+    funnels one aggregation buffer.  A pair colliding in k bands is
+    emitted once (dropDuplicates): ids must be unique, and every caller
+    verifies or links each distinct pair once.
     """
     rows_per_band = num_hashes // bands
     minhash = make_minhash_udf(num_hashes, shingle_k=shingle_k, unit=unit)
@@ -186,10 +183,9 @@ def lsh_candidate_pairs(
         F.struct(F.col("id")),
         max_bucket=max_bucket,
     )
-    out = pairs.select(
+    return pairs.select(
         F.col("p1.id").alias("id1"), F.col("p2.id").alias("id2")
-    )
-    return out.dropDuplicates() if dedup else out
+    ).dropDuplicates()
 
 
 def similar_names_sql(a: str, b: str) -> F.Column:

@@ -108,18 +108,28 @@ def test_canonical_definitions_scans_measures_once(spark):
     """The per-name total is a window over the (name, norm) counts, so
     the executed plan holds one capped_collect pipeline over the
     measures scan (a groupBy total pruned the src collect and planned a
-    second one).  Non-null columns, as extract_all's measures have."""
-    m = spark.createDataFrame(
-        [("r1", "D1", "KPI", "SUM(A[X])"), ("r2", "D2", "KPI", "SUM(A[X])"),
-         ("r3", "D3", "KPI", "COUNT(A[X])")],
-        "repo string not null, dataset string not null, "
-        "measure string not null, dax_formula string not null",
-    ).localCheckpoint()
-    df = A.canonical_definitions(m)
-    assert len(df.collect()) == 1
-    final = df._jdf.queryExecution().executedPlan().toString()
-    final = final.split("== Initial Plan ==")[0]
-    assert final.count("Scan ExistingRDD") == 1, final
+    second one).  With non-null columns, as extract_all's measures
+    have, and with nullable ones: the winners/alternatives join is
+    null-safe, so no isnotnull(name) is pushed into one subtree only,
+    and a null-named group gets its alternatives like any other."""
+    rows = [("r1", "D1", "KPI", "SUM(A[X])"), ("r2", "D2", "KPI", "SUM(A[X])"),
+            ("r3", "D3", "KPI", "COUNT(A[X])")]
+    for nn, data in ((" not null", rows),
+                     ("", rows + [(r, d, None, f) for r, d, _, f in rows])):
+        m = spark.createDataFrame(
+            data,
+            f"repo string{nn}, dataset string{nn}, "
+            f"measure string{nn}, dax_formula string{nn}",
+        ).localCheckpoint()
+        df = A.canonical_definitions(m)
+        got = {r["name"]: r for r in df.collect()}
+        assert set(got) == ({"kpi"} if nn else {"kpi", None})
+        for r in got.values():
+            assert r["dashboards_using"] == ["r1/D1", "r2/D2"]
+            assert r["alternative_sources"] == ["r3/D3"]
+        final = df._jdf.queryExecution().executedPlan().toString()
+        final = final.split("== Initial Plan ==")[0]
+        assert final.count("Scan ExistingRDD") == 1, final
 
 
 def test_semantic_debt(dfs):

@@ -2,6 +2,9 @@
 and text analysis — over the generated documents test table plus
 synthetic edge cases."""
 
+import itertools
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,15 +31,94 @@ def test_ngram_jaccard_values(spark):
         [("a b c d", "a b c d"), ("a b c d", "x y z w"), ("a b c d e", "a b c d f")],
         "t1 string, t2 string",
     )
-    vals = [
-        round(r["j"], 4)
-        for r in d.select(DD.ngram_jaccard(F.col("t1"), F.col("t2"), 2).alias("j")).collect()
-    ]
+    g = DD.word_ngrams(DD.word_ngrams(d, "t1", 2), "t2", 2)
+    j = DD.ngram_jaccard(F.col("t1"), F.col("t2")).alias("j")
+    vals = [round(r["j"], 4) for r in g.select(j).collect()]
     assert vals[0] == 1.0
     assert vals[1] == 0.0
     # bigrams of 'a b c d e' = {ab,bc,cd,de}; of 'a b c d f' = {ab,bc,cd,df}
     # intersection 3, union 5 → 0.6
     assert vals[2] == 0.6
+
+
+def _py_ngrams(text: str, n: int) -> list[str]:
+    """Python twin of word_ngrams: Spark's trim strips only spaces, Java's
+    \\s is ASCII whitespace, split keeps leading/trailing empty tokens,
+    array_distinct keeps first occurrences."""
+    toks = re.split(r"\s+", text.lower().strip(" "), flags=re.ASCII)
+    grams = [" ".join(toks[i:i + n]) for i in range(max(len(toks) - n, 0) + 1)]
+    return list(dict.fromkeys(grams))
+
+
+def _py_jaccard(a: list[str], b: list[str]) -> float:
+    union = set(a) | set(b)
+    return len(set(a) & set(b)) / len(union) if union else 1.0
+
+
+GRAM_CASES = [
+    "",
+    "two words",
+    "\tfoo bar baz",
+    "\nfoo bar baz qux",
+    "foo bar baz\n",
+    "  Foo   BAR baz  ",
+    "a b c a b c a b c",
+    "a b c a b c d",
+    "Größe Straße ÉCOLE naïve café",
+    "größe straße école naïve",
+    "non\u00a0breaking space here",
+    "日本語 の テキスト です",
+]
+
+
+@pytest.mark.parametrize("n", [1, 3])
+def test_word_ngrams_match_python_twin(spark, n):
+    """word_ngrams / ngram_jaccard against their Python twins on the
+    edge cases: empty text, fewer than n tokens, leading tab/newline,
+    repeated grams, non-ASCII words."""
+    d = spark.createDataFrame(list(enumerate(GRAM_CASES)), "id int, text string")
+    g = DD.word_ngrams(d, "text", n)
+    grams = {r["id"]: r["text"] for r in g.collect()}
+    assert grams == {i: _py_ngrams(t, n) for i, t in enumerate(GRAM_CASES)}
+    pairs = g.alias("a").crossJoin(g.alias("b")).select(
+        F.col("a.id").alias("i"), F.col("b.id").alias("j"),
+        DD.ngram_jaccard(F.col("a.text"), F.col("b.text")).alias("jac"),
+    )
+    got = {(r["i"], r["j"]): r["jac"] for r in pairs.collect()}
+    want = {
+        (i, j): _py_jaccard(grams[i], grams[j])
+        for i, j in itertools.product(grams, repeat=2)
+    }
+    assert got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+
+
+def _lambda_bodies(plan: str):
+    """The argument text of every lambdafunction(...) in a plan string."""
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        yield plan[m.end():i - 1]
+
+
+def test_tokenizer_runs_once_per_document(spark, sf_dir):
+    """The gram lambda reads a projected token column: no split( inside
+    any lambdafunction of the optimized plans of the MinHash verify and
+    the adjacent-doc n-gram Jaccard query (a computed token expression
+    there re-tokenizes the text once per gram)."""
+    import __spark_entry__ as entry
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for df in (
+        DD.minhash_near_duplicates(docs),
+        entry.queries()["q_docs_ngram_jaccard_adjacent"](spark, sf_dir),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = list(_lambda_bodies(plan))
+        assert any("concat_ws" in b for b in bodies), plan  # the gram lambda
+        assert not any("split(" in b for b in bodies), plan
 
 
 def test_minhash_near_duplicates(spark):

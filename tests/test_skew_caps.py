@@ -172,3 +172,40 @@ def test_entity_structure_conflicts_hot_name_bounded(hot_props):
     assert r["definition1"] == "2 properties"
     assert r["definition2"] == "2 properties"
     assert r["dashboard1"] < r["dashboard2"]
+
+
+def test_minhash_identical_docs_verify_distinct_pairs(spark):
+    """500 identical documents collide in all 32 bands; each band's
+    bucket is capped to the 200 smallest (string) ids.  The gram joins
+    receive each of the C(200,2) = 19,900 candidate pairs once (the
+    per-band pairs, 32 × 19,900 = 636,800 rows, are deduplicated before
+    them), every join's output equals its candidate input (one gram row
+    per id), and the rows do not depend on the shuffle partitioning."""
+    from plan_audit import join_output_rows
+
+    text = "the quick brown fox jumps over the lazy dog near the river bank " * 4
+    d = spark.createDataFrame(
+        [(i, text) for i in range(500)], "doc_id long, text string"
+    )
+    smallest = sorted(str(i) for i in range(500))[:200]
+    expected = {(a, b) for a in smallest for b in smallest if a < b}
+    assert len(expected) == 19_900
+
+    keys = ["spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    out = []
+    try:
+        for parts in ("3", "17"):
+            spark.conf.set(keys[0], parts)
+            spark.conf.set(keys[1], "false")
+            df = DD.minhash_near_duplicates(d)
+            rows = sorted(map(tuple, df.collect()))
+            assert join_output_rows(df) == [19_900, 19_900]
+            out.append(rows)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert {(a, b) for a, b, _ in out[0]} == expected
+    assert all(j == 1.0 for _, _, j in out[0])
+    assert out[0] == out[1]
