@@ -98,6 +98,118 @@ def test_diff_full(spark, pair):
     assert by_path["metadata:k3"][0]["change_type"] == "added"
 
 
+@pytest.fixture(scope="module")
+def every_cell(spark):
+    """A pair whose diff reaches every (family, change_type, field)
+    cell of the Change grammar, incl. a null description (details ''),
+    a boolean flipped to NULL and the properties of an added/removed
+    entity (never reported)."""
+    src = _onto(
+        spark,
+        entities=[("A", "a", "standard", 2), ("B", "b", "fact", 1),
+                  ("D", None, "standard", 1)],
+        props=[
+            ("A", "x", "String", True, False, ""),
+            ("A", "y", "Integer", False, False, ""),
+            ("A", "u", "String", False, False, ""),
+            ("A", "gone", "String", False, False, "old"),
+            ("D", "p", "String", True, False, ""),
+            ("B", "z", "String", False, False, ""),
+        ],
+        rels=[("A", "B", "has", "one-to-many", "r"),
+              ("A", "D", "has", "many-to-one", ""),
+              ("D", "A", "uses", "one-to-one", "gone")],
+        rules=[("r1", "x > 1", "filter", "", ""),
+               ("r2", "a = 1", "flag", "PII", ""),
+               ("r3", "b = 2", "alert", "", "bye")],
+        meta=[("k1", "v1"), ("k2", "v2"), ("k4", "v4")],
+    )
+    tgt = _onto(
+        spark,
+        entities=[("A", "a2", "dimension", 2), ("C", None, "standard", 1),
+                  ("D", None, "standard", 1)],
+        props=[
+            ("A", "x", "Decimal", True, False, ""),
+            ("A", "y", "Integer", True, False, ""),
+            ("A", "u", "String", False, True, ""),
+            ("A", "new", "Boolean", False, False, "fresh"),
+            ("D", "p", "String", None, False, ""),
+            ("C", "w", "String", False, False, ""),
+        ],
+        rels=[("A", "B", "has", "many-to-many", "r"),
+              ("A", "D", "refers", "many-to-one", ""),
+              ("C", "A", "has", "one-to-many", "new")],
+        rules=[("r1", "x > 5", "filter", "", ""),
+               ("r2", "a = 1", "block", "Confidential", ""),
+               ("r4", "c = 3", "", "", "hi")],
+        meta=[("k1", "v1"), ("k3", "v3"), ("k4", "v5")],
+    )
+    return src, tgt
+
+
+EVERY_CELL_CHANGES = [
+    ("added", "entity", "C", "C", None, "type=standard, properties=1", ""),
+    ("added", "metadata", "k3", "metadata:k3", None, "v3", ""),
+    ("added", "property", "new", "A.new", None,
+     "type=Boolean, required=False", "fresh"),
+    ("added", "relationship", "C→A", "C→A", None,
+     "type=has, cardinality=one-to-many", "new"),
+    ("added", "rule", "r4", "rule:r4", None, "condition=c = 3, action=", "hi"),
+    ("modified", "entity", "A", "A.description", "a", "a2",
+     "Description updated"),
+    ("modified", "entity", "A", "A.entity_type", "standard", "dimension",
+     "Entity type changed"),
+    ("modified", "metadata", "k4", "metadata:k4", "v4", "v5", ""),
+    ("modified", "property", "p", "D.p.required", "True", None,
+     "Required flag changed"),
+    ("modified", "property", "u", "A.u.unique", "False", "True",
+     "Unique flag changed"),
+    ("modified", "property", "x", "A.x.data_type", "String", "Decimal",
+     "Data type changed"),
+    ("modified", "property", "y", "A.y.required", "False", "True",
+     "Required flag changed"),
+    ("modified", "relationship", "A→B", "A→B.cardinality", "one-to-many",
+     "many-to-many", "Cardinality changed"),
+    ("modified", "relationship", "A→D", "A→D.type", "has", "refers",
+     "Relationship type changed"),
+    ("modified", "rule", "r1", "rule:r1.condition", "x > 1", "x > 5",
+     "Condition changed"),
+    ("modified", "rule", "r2", "rule:r2.action", "flag", "block",
+     "Action changed"),
+    ("modified", "rule", "r2", "rule:r2.classification", "PII",
+     "Confidential", "Classification changed"),
+    ("removed", "entity", "B", "B", "type=fact, properties=1", None, "b"),
+    ("removed", "metadata", "k2", "metadata:k2", "v2", None, ""),
+    ("removed", "property", "gone", "A.gone", "type=String, required=False",
+     None, "old"),
+    ("removed", "relationship", "D→A", "D→A",
+     "type=uses, cardinality=one-to-one", None, "gone"),
+    ("removed", "rule", "r3", "rule:r3", "condition=b = 2, action=alert",
+     None, "bye"),
+]
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=str)
+
+
+def test_diff_every_cell_exact_rows(spark, every_cell):
+    """The exact Change rows, unkeyed and keyed (diff_all_pairs)."""
+    src, tgt = every_cell
+    changes = D.diff_ontologies(src, tgt)
+    assert changes.columns == D.CHANGE_COLS
+    assert _rows(changes) == sorted(EVERY_CELL_CHANGES, key=str)
+    fams = {
+        k: _with_repo(src[k], "r1").unionByName(_with_repo(tgt[k], "r2"))
+        for k in src
+    }
+    keyed = D.diff_all_pairs(fams)
+    assert keyed.columns == ["src_repo", "tgt_repo", *D.CHANGE_COLS]
+    assert _rows(keyed) == sorted(
+        (("r1", "r2", *c) for c in EVERY_CELL_CHANGES), key=str
+    )
+
+
 def test_diff_summary(spark, pair):
     src, tgt = pair
     changes = D.diff_ontologies(src, tgt)
@@ -159,6 +271,70 @@ def test_three_way_merge(spark):
     # metadata precedence base < theirs < ours
     meta = {r["key"]: r["value"] for r in merged["metadata"].collect()}
     assert meta["k"] == "ours" and meta["extra"] == "t" and meta["only_base"] == "b"
+
+
+def test_three_way_merge_exact_rows(spark):
+    """Every merged family and the conflict paths, row for row:
+    entities/relationships/rules adopt theirs-added, non-conflicting
+    elements (never theirs' modifications); properties follow their
+    entities (theirs' new property of a kept entity is not adopted);
+    metadata keeps base < theirs < ours."""
+    base = _onto(
+        spark,
+        entities=[("A", "", "standard", 1)],
+        props=[("A", "x", "String", False, False, "")],
+        rels=[("A", "X", "has", "one-to-many", "")],
+        rules=[("r1", "x > 1", "filter", "", "")],
+        meta=[("k", "base"), ("only_base", "b")],
+    )
+    ours = _onto(
+        spark,
+        entities=[("A", "", "standard", 1), ("B", "", "standard", 1)],
+        props=[("A", "x", "String", False, False, ""),
+               ("B", "y", "String", False, False, "")],
+        rels=[("A", "X", "has", "one-to-many", ""),
+              ("A", "B", "has", "one-to-one", "")],
+        rules=[("r1", "x > 1", "filter", "", ""),
+               ("r5", "q = 1", "flag", "", "")],
+        meta=[("k", "ours"), ("only_base", "b")],
+    )
+    theirs = _onto(
+        spark,
+        entities=[("A", "", "fact", 1), ("B", "", "fact", 2),
+                  ("C", "", "standard", 1)],
+        props=[
+            ("A", "x", "String", False, False, ""),
+            ("A", "x2", "String", False, False, ""),
+            ("B", "y", "String", False, False, ""),
+            ("B", "y2", "String", False, False, ""),
+            ("C", "z", "String", False, False, ""),
+        ],
+        rels=[("A", "X", "has", "one-to-many", ""),
+              ("A", "B", "has", "many-to-many", ""),
+              ("A", "C", "owns", "one-to-many", "")],
+        rules=[("r1", "x > 9", "filter", "", ""), ("r3", "z = 1", "", "", "")],
+        meta=[("k", "theirs"), ("extra", "t")],
+    )
+    merged, conflicts = D.merge_ontologies(base, ours, theirs)
+    assert {k: _rows(df) for k, df in merged.items()} == {
+        "entities": [("A", "", "standard", 1), ("B", "", "standard", 1),
+                     ("C", "", "standard", 1)],
+        "properties": [("A", "x", "String", False, False, ""),
+                       ("B", "y", "String", False, False, ""),
+                       ("C", "z", "String", False, False, "")],
+        "relationships": [("A", "B", "has", "one-to-one", ""),
+                          ("A", "C", "owns", "one-to-many", ""),
+                          ("A", "X", "has", "one-to-many", "")],
+        "business_rules": [("r1", "x > 1", "filter", "", ""),
+                           ("r3", "z = 1", "", "", ""),
+                           ("r5", "q = 1", "flag", "", "")],
+        "metadata": [("extra", "t"), ("k", "ours"), ("only_base", "b")],
+    }
+    assert merged["relationships"].columns == ours["relationships"].columns
+    assert conflicts.columns == ["path", "element_type"]
+    assert _rows(conflicts) == [
+        ("A→B", "relationship"), ("B", "entity"), ("metadata:k", "metadata")
+    ]
 
 
 def test_drift_rename_scenario(spark):
