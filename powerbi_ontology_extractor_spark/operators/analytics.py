@@ -9,11 +9,12 @@ family is a hash self-join or group-by.
 Dashboard identity ("source") = ``repo || '/' || dataset``.
 
 Scale notes:
-- conflict self-joins shuffle on ``lower(name)``; a hot measure name
-  (thousands of dashboards defining "Total Sales") explodes pairs —
-  AQE skew-join splits the partitions, and `max_group` caps pathological
-  groups (pair output is inherently quadratic per group; the cap is a
-  policy choice surfaced to the caller, logged via the `capped` column).
+- a hot name (thousands of dashboards defining "Total Sales") would
+  explode a self-join, so the pairwise conflict families join distinct
+  (name, fingerprint) groups (`_fingerprint_group_pairs`) and
+  `max_group` caps each group's members (pair output is inherently
+  quadratic per group pair; the cap is a policy choice surfaced to the
+  caller).
 - group-by families (duplicates, canonical, debt counts) are
   partial-aggregated map-side by Catalyst.
 - SequenceMatcher similarity (rule conflicts) runs in an Arrow-batched
@@ -47,47 +48,49 @@ def _with_src(df: DataFrame) -> DataFrame:
     return df.where(F.col("dataset") != "Standalone").withColumn("src", _src())
 
 
-def _fingerprint_group_pairs(e: DataFrame, key: str, max_group: int) -> DataFrame:
-    """(key, src1, props1, src2, props2) over ``e``'s (key, src, props)
-    rows: one row per src pair of the same key with DIFFERENT props,
-    oriented src1 < src2.
+def _fingerprint_group_pairs(
+    e: DataFrame, key: str, max_group: int, fp: str = "props", item: str = "src"
+) -> DataFrame:
+    """(key, item1, fp1, item2, fp2) over ``e``'s (key, item, fp)
+    rows: one row per item pair of the same key with DIFFERENT
+    fingerprints ``fp``, oriented item1 <= item2.
 
-    The join pairs distinct (key, props) FINGERPRINT GROUPS, never raw
-    src rows, so a hot key with one dominant structure emits zero
-    pairs instead of a quadratic self-join.  Each group's srcs are the
+    The join pairs distinct (key, fp) FINGERPRINT GROUPS, never raw
+    item rows, so a hot key with one dominant structure emits zero
+    pairs instead of a quadratic self-join.  Each group's items are the
     ``max_group`` smallest (capped_collect); pair output is inherently
     |g1|×|g2| per group pair, so the cap is the surfaced policy."""
-    groups = capped_collect(e, [key, "props"], ["src"], max_group)
+    groups = capped_collect(e, [key, fp], [item], max_group)
     a, b = groups.alias("a"), groups.alias("b")
     pairs = (
         a.join(
             b,
             (F.col(f"a.{key}") == F.col(f"b.{key}"))
-            & (F.col("a.props") < F.col("b.props")),
+            & (F.col(f"a.{fp}") < F.col(f"b.{fp}")),
         )
         .select(
             F.col(f"a.{key}").alias(key),
-            F.col("a.props").alias("props_a"),
-            F.col("b.props").alias("props_b"),
-            F.explode(F.col("a.src")).alias("src_a"),
-            F.col("b.src").alias("srcs_b"),
+            F.col(f"a.{fp}").alias("fp_a"),
+            F.col(f"b.{fp}").alias("fp_b"),
+            F.explode(F.col(f"a.{item}")).alias("item_a"),
+            F.col(f"b.{item}").alias("items_b"),
         )
         .select(
-            key, "props_a", "props_b", "src_a",
-            F.explode(F.col("srcs_b")).alias("src_b"),
+            key, "fp_a", "fp_b", "item_a",
+            F.explode(F.col("items_b")).alias("item_b"),
         )
     )
-    swap = F.col("src_a") > F.col("src_b")
+    swap = F.col("item_a") > F.col("item_b")
     return pairs.select(
         key,
-        F.least("src_a", "src_b").alias("src1"),
-        F.when(swap, F.col("props_b")).otherwise(F.col("props_a")).alias("props1"),
-        F.greatest("src_a", "src_b").alias("src2"),
-        F.when(swap, F.col("props_a")).otherwise(F.col("props_b")).alias("props2"),
+        F.least("item_a", "item_b").alias(f"{item}1"),
+        F.when(swap, F.col("fp_b")).otherwise(F.col("fp_a")).alias(f"{fp}1"),
+        F.greatest("item_a", "item_b").alias(f"{item}2"),
+        F.when(swap, F.col("fp_a")).otherwise(F.col("fp_b")).alias(f"{fp}2"),
     )
 
 
-def measure_conflicts(measures: DataFrame, max_group: int = 1000) -> DataFrame:
+def measure_conflicts(measures: DataFrame, max_group: int = CAP) -> DataFrame:
     """Same measure name (case-insensitive), different formulas — one
     row per conflicting *pair* (analyzer.py:79-121).
 
@@ -95,54 +98,21 @@ def measure_conflicts(measures: DataFrame, max_group: int = 1000) -> DataFrame:
     LOW; both have '>' and first extracted integer thresholds differ by
     >20 → HIGH; else MEDIUM.
 
-    ``max_group`` guard: hot concepts (pair output is quadratic per
-    group) are down-sampled to ~``max_group`` members with a
-    deterministic hash-sample — NO window.  A row_number window would
-    shuffle the entire hot group onto one task before truncating, i.e.
-    the cap itself would be the skew bottleneck at cluster scale; the
-    hash-sample needs only a per-concept count (map-side combinable)
-    joined back.  Truncation is observable via the ``capped`` flag.
-    Pair orientation uses the (src, name) tuple order directly
-    (equivalent to the old rank order, minus degenerate identical
-    (src, name) duplicates).
+    Pairs come from the (concept, formula) fingerprint groups
+    (_fingerprint_group_pairs, items ``struct(src, name)``): a hot
+    concept with one dominant formula emits no pairs, and each group's
+    items are its ``max_group`` smallest.  A pair is oriented by its
+    (src, name) order; two rows of one (src, name) never pair.
     """
     m = _with_src(measures).select(
         F.lower(F.col("measure")).alias("concept"),
-        F.col("measure").alias("name"),
-        "src",
+        F.struct("src", F.col("measure").alias("name")).alias("member"),
         F.col("dax_formula").alias("formula"),
     )
-    # per-concept counts: tiny per key after map-side combine; plain
-    # shuffle join back (concept cardinality can be huge — never
-    # broadcast; AQE splits the skewed probe side)
-    counts = m.groupBy("concept").agg(F.count("*").alias("_n"))
-    m = m.join(counts, "concept").withColumn(
-        "capped", F.col("_n") > max_group
-    )
-    keep_prob = F.least(
-        F.lit(1.0), F.lit(float(max_group)) / F.col("_n")
-    )
-    sampled = m.where(
-        ~F.col("capped")
-        | (
-            F.pmod(F.xxhash64("src", "name"), F.lit(1_000_000))
-            < (keep_prob * 1_000_000).cast("long")
-        )
-    )
-    a, b = sampled.alias("a"), sampled.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.concept") == F.col("b.concept"))
-        & (
-            (F.col("a.src") < F.col("b.src"))
-            | (
-                (F.col("a.src") == F.col("b.src"))
-                & (F.col("a.name") < F.col("b.name"))
-            )
-        ),
-    ).where(F.col("a.formula") != F.col("b.formula"))
-
-    f1, f2 = F.col("a.formula"), F.col("b.formula")
+    pairs = _fingerprint_group_pairs(
+        m, "concept", max_group, fp="formula", item="member"
+    ).where(F.col("member1") != F.col("member2"))
+    f1, f2 = F.col("formula1"), F.col("formula2")
     th1 = F.regexp_extract(f1, r"[><=]+\s*(\d+)", 1)
     th2 = F.regexp_extract(f2, r"[><=]+\s*(\d+)", 1)
     severity = (
@@ -158,19 +128,19 @@ def measure_conflicts(measures: DataFrame, max_group: int = 1000) -> DataFrame:
         .otherwise("MEDIUM")
     )
     return pairs.select(
-        F.col("a.concept").alias("concept"),
-        F.col("a.src").alias("dashboard1"),
+        "concept",
+        F.col("member1.src").alias("dashboard1"),
         f1.alias("definition1"),
-        F.col("b.src").alias("dashboard2"),
+        F.col("member2.src").alias("dashboard2"),
         f2.alias("definition2"),
         severity.alias("severity"),
         F.concat(
             F.lit("'"),
-            F.col("a.concept"),
+            F.col("concept"),
             F.lit("' defined differently in "),
-            F.col("a.src"),
+            F.col("member1.src"),
             F.lit(" vs "),
-            F.col("b.src"),
+            F.col("member2.src"),
         ).alias("description"),
     )
 

@@ -3,9 +3,10 @@ DataFrames.
 
 Reference semantics: /root/reference/powerbi_ontology/ontology_diff.py
 — dict-keyed add/remove/modify walks (:240-574) and an
-added-from-theirs three-way merge (:601-720).  Here each family is one
-full-outer join; the whole corpus (every (repo, dataset) pair) diffs in
-a single job instead of one Python process per ontology pair.
+added-from-theirs three-way merge (:601-720).  Here ``FAMILIES``
+describes every element family once and each family is one full-outer
+join; the whole corpus (every (repo, dataset) pair) diffs in a single
+job instead of one Python process per ontology pair.
 
 Change row: keys… + (change_type, element_type, element_name, path,
 old_value, new_value, details) — field-for-field the reference's
@@ -13,16 +14,19 @@ old_value, new_value, details) — field-for-field the reference's
 
 Scale notes: joins shuffle on (keys, element-key); properties are
 semi-joined to common entities first (the reference never reports
-properties of added/removed entities).  ``stack``-style explosion of
-per-field modifications happens after the join (narrow).
+properties of added/removed entities).  A family's Change rows come
+out of one ``inline`` projection after the join (narrow).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType
 
 CHANGE_COLS = [
     "change_type",
@@ -35,271 +39,122 @@ CHANGE_COLS = [
 ]
 
 
-def _fmt(*parts: Column | str) -> Column:
-    return F.concat(*[F.lit(p) if isinstance(p, str) else p for p in parts])
+class Family(NamedTuple):
+    """One element family of the Change grammar.  SQL texts run over
+    the joined row: the coalesced key columns under their plain names,
+    each side's other columns prefixed ``s_`` / ``t_`` (``{s}`` in
+    ``summary`` is that prefix)."""
+
+    element_type: str
+    key: dict[str, str]  # join column → its SQL over a side; last = element
+    path: str
+    summary: str  # old/new value of a removed/added element
+    fields: tuple[tuple[str, str, str], ...]  # modified: column, path suffix, detail
+    details: str | None  # side column behind added/removed details
 
 
-def _outer(
-    src: DataFrame, tgt: DataFrame, keys: Sequence[str], on: Sequence[str]
+#: The Change grammar (ontology_diff.py:240-574): family-dict key → spec,
+#: in diff order.
+FAMILIES = {
+    "entities": Family(
+        "entity", {"entity": "entity"}, "entity",
+        "concat('type=', {s}entity_type, ', properties=', "
+        "CAST({s}n_properties AS STRING))",
+        (("entity_type", ".entity_type", "Entity type changed"),
+         ("description", ".description", "Description updated")),
+        "description",
+    ),
+    "properties": Family(
+        "property", {"entity": "entity", "property": "property"},
+        "concat(entity, '.', property)",
+        "concat('type=', {s}data_type, ', required=', {s}required)",
+        (("data_type", ".data_type", "Data type changed"),
+         ("required", ".required", "Required flag changed"),
+         ("unique", ".unique", "Unique flag changed")),
+        "description",
+    ),
+    "relationships": Family(
+        "relationship",
+        {"rel_key": "concat_ws('→', from_entity, to_entity)"}, "rel_key",
+        "concat('type=', {s}relationship_type, ', cardinality=', {s}cardinality)",
+        (("relationship_type", ".type", "Relationship type changed"),
+         ("cardinality", ".cardinality", "Cardinality changed")),
+        "description",
+    ),
+    "business_rules": Family(
+        "rule", {"name": "name"}, "concat('rule:', name)",
+        "concat('condition=', {s}condition, ', action=', {s}action)",
+        (("condition", ".condition", "Condition changed"),
+         ("action", ".action", "Action changed"),
+         ("classification", ".classification", "Classification changed")),
+        "description",
+    ),
+    "metadata": Family(
+        "metadata", {"key": "key"}, "concat('metadata:', key)",
+        "{s}value", (("value", "", ""),), None,
+    ),
+}
+
+
+def _side(df: DataFrame, fam: Family, keys: Sequence[str], p: str) -> DataFrame:
+    """``df`` with the family's key columns and every other column
+    prefixed ``p``; booleans render as 'True'/'False' (the reference's
+    str(bool))."""
+    cols = {k: F.col(k) for k in keys}
+    cols.update({k: F.expr(sql) for k, sql in fam.key.items()})
+    for f in df.schema.fields:
+        if f.name not in cols:
+            c = F.col(f.name)
+            if isinstance(f.dataType, BooleanType):
+                c = F.initcap(c.cast("string"))
+            cols[f.name] = c
+    return df.select([c.alias(p + n) for n, c in cols.items()])
+
+
+def _diff_family(
+    fam: Family, src: DataFrame, tgt: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
-    """Full-outer join with side-prefixed columns (s_*, t_*) plus the
-    coalesced join keys under their plain names."""
-    a = src.select([F.col(c).alias(f"s_{c}") for c in src.columns])
-    b = tgt.select([F.col(c).alias(f"t_{c}") for c in tgt.columns])
-    cond = [
-        F.col(f"s_{k}").eqNullSafe(F.col(f"t_{k}")) for k in [*keys, *on]
-    ]
-    joined = a.join(b, cond, "full_outer")
-    merged = [
-        F.coalesce(F.col(f"s_{k}"), F.col(f"t_{k}")).alias(k)
-        for k in [*keys, *on]
-    ]
-    return joined.select(*merged, *[c for c in joined.columns])
-
-
-def _emit(
-    df: DataFrame,
-    keys: Sequence[str],
-    specs: list[tuple[Column, str, Column, Column, Column, Column, Column]],
-) -> DataFrame:
-    structs = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    cond,
-                    F.struct(
-                        F.lit(ctype).alias("change_type"),
-                        etype.alias("element_type"),
-                        name.alias("element_name"),
-                        path.alias("path"),
-                        old.alias("old_value"),
-                        new.alias("new_value"),
-                        F.coalesce(details, F.lit("")).alias("details"),
-                    ),
-                )
-                for (cond, ctype, etype, name, path, old, new, details) in specs
-            ]
-        )
+    """One full-outer join on (keys…, family key) and one projection
+    that emits every Change row of the family."""
+    on = [*keys, *fam.key]
+    j = _side(src, fam, keys, "s_").join(
+        _side(tgt, fam, keys, "t_"),
+        [F.col(f"s_{k}").eqNullSafe(F.col(f"t_{k}")) for k in on],
+        "full_outer",
     )
-    return df.select(*keys, F.explode(structs).alias("c")).select(*keys, "c.*")
-
-
-def diff_entities(
-    src_entities: DataFrame,
-    tgt_entities: DataFrame,
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """Entity add/remove + entity_type/description modifications
-    (ontology_diff.py:240-321)."""
-    j = _outer(src_entities, tgt_entities, keys, ["entity"])
-    s, t = F.col("s_entity"), F.col("t_entity")
-    lit_e = F.lit("entity")
-
-    def summary(side: str) -> Column:
-        return _fmt(
-            "type=",
-            F.col(f"{side}_entity_type"),
-            ", properties=",
-            F.col(f"{side}_n_properties").cast("string"),
-        )
-
-    return _emit(
-        j,
-        keys,
-        [
-            (s.isNull(), "added", lit_e, t, t, F.lit(None), summary("t"),
-             F.col("t_description")),
-            (t.isNull(), "removed", lit_e, s, s, summary("s"), F.lit(None),
-             F.col("s_description")),
-            (
-                s.isNotNull() & t.isNotNull()
-                & ~F.col("s_entity_type").eqNullSafe(F.col("t_entity_type")),
-                "modified", lit_e, s, _fmt(s, ".entity_type"),
-                F.col("s_entity_type"), F.col("t_entity_type"),
-                F.lit("Entity type changed"),
-            ),
-            (
-                s.isNotNull() & t.isNotNull()
-                & ~F.col("s_description").eqNullSafe(F.col("t_description")),
-                "modified", lit_e, s, _fmt(s, ".description"),
-                F.col("s_description"), F.col("t_description"),
-                F.lit("Description updated"),
-            ),
-        ],
+    j = j.select(
+        *[F.coalesce(F.col(f"s_{k}"), F.col(f"t_{k}")).alias(k) for k in on],
+        *j.columns,
     )
+    el = list(fam.key)[-1]
 
-
-def diff_properties(
-    src_props: DataFrame,
-    tgt_props: DataFrame,
-    src_entities: DataFrame,
-    tgt_entities: DataFrame,
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """Property add/remove/modify within entities common to both sides
-    (ontology_diff.py:304-391)."""
-    common = src_entities.select(*keys, "entity").join(
-        tgt_entities.select(*keys, "entity"), [*keys, "entity"], "inner"
-    )
-    sp = src_props.join(common, [*keys, "entity"], "left_semi")
-    tp = tgt_props.join(common, [*keys, "entity"], "left_semi")
-    j = _outer(sp, tp, keys, ["entity", "property"])
-    s, t = F.col("s_property"), F.col("t_property")
-    lit_p = F.lit("property")
-    path = _fmt(F.col("entity"), ".", F.col("property"))
-
-    def summary(side: str) -> Column:
-        return _fmt(
-            "type=",
-            F.col(f"{side}_data_type"),
-            ", required=",
-            F.initcap(F.col(f"{side}_required").cast("string")),
-        )
-
-    def field_change(field: str, detail: str, as_str=lambda c: c):
-        sc, tc = F.col(f"s_{field}"), F.col(f"t_{field}")
+    def change(when: str, ctype: str, path: str, old: str, new: str, det: str):
         return (
-            s.isNotNull() & t.isNotNull() & ~sc.eqNullSafe(tc),
-            "modified", lit_p, F.col("property"), _fmt(path, f".{field}"),
-            as_str(sc), as_str(tc), F.lit(detail),
+            f"CASE WHEN {when} THEN named_struct('change_type', '{ctype}', "
+            f"'element_type', '{fam.element_type}', 'element_name', {el}, "
+            f"'path', {path}, 'old_value', {old}, 'new_value', {new}, "
+            f"'details', {det}) END"
         )
 
-    as_bool_str = lambda c: F.initcap(c.cast("string"))
-    return _emit(
-        j,
-        keys,
-        [
-            (s.isNull(), "added", lit_p, t, path, F.lit(None), summary("t"),
-             F.col("t_description")),
-            (t.isNull(), "removed", lit_p, s, path, summary("s"), F.lit(None),
-             F.col("s_description")),
-            field_change("data_type", "Data type changed"),
-            field_change("required", "Required flag changed", as_bool_str),
-            field_change("unique", "Unique flag changed", as_bool_str),
+    def details(p: str) -> str:
+        return f"coalesce({p}{fam.details}, '')" if fam.details else "''"
+
+    both = f"s_{el} IS NOT NULL AND t_{el} IS NOT NULL"
+    none = "CAST(NULL AS STRING)"
+    changes = [
+        change(f"s_{el} IS NULL", "added", fam.path, none,
+               fam.summary.format(s="t_"), details("t_")),
+        change(f"t_{el} IS NULL", "removed", fam.path,
+               fam.summary.format(s="s_"), none, details("s_")),
+        *[
+            change(f"{both} AND NOT (s_{c} <=> t_{c})", "modified",
+                   f"concat({fam.path}, '{suffix}')", f"s_{c}", f"t_{c}",
+                   f"'{detail}'")
+            for c, suffix, detail in fam.fields
         ],
-    )
-
-
-def diff_relationships(
-    src_rels: DataFrame, tgt_rels: DataFrame, keys: Sequence[str] = ()
-) -> DataFrame:
-    """Relationship add/remove/modify keyed on from→to
-    (ontology_diff.py:393-461)."""
-    key = F.concat_ws("→", "from_entity", "to_entity")
-    sp = src_rels.withColumn("rel_key", key)
-    tp = tgt_rels.withColumn("rel_key", key)
-    j = _outer(sp, tp, keys, ["rel_key"])
-    s, t = F.col("s_rel_key"), F.col("t_rel_key")
-    lit_r = F.lit("relationship")
-
-    def summary(side: str) -> Column:
-        return _fmt(
-            "type=",
-            F.col(f"{side}_relationship_type"),
-            ", cardinality=",
-            F.col(f"{side}_cardinality"),
-        )
-
-    return _emit(
-        j,
-        keys,
-        [
-            (s.isNull(), "added", lit_r, t, t, F.lit(None), summary("t"),
-             F.col("t_description")),
-            (t.isNull(), "removed", lit_r, s, s, summary("s"), F.lit(None),
-             F.col("s_description")),
-            (
-                s.isNotNull() & t.isNotNull()
-                & ~F.col("s_relationship_type").eqNullSafe(
-                    F.col("t_relationship_type")
-                ),
-                "modified", lit_r, F.col("rel_key"),
-                _fmt(F.col("rel_key"), ".type"),
-                F.col("s_relationship_type"), F.col("t_relationship_type"),
-                F.lit("Relationship type changed"),
-            ),
-            (
-                s.isNotNull() & t.isNotNull()
-                & ~F.col("s_cardinality").eqNullSafe(F.col("t_cardinality")),
-                "modified", lit_r, F.col("rel_key"),
-                _fmt(F.col("rel_key"), ".cardinality"),
-                F.col("s_cardinality"), F.col("t_cardinality"),
-                F.lit("Cardinality changed"),
-            ),
-        ],
-    )
-
-
-def diff_rules(
-    src_rules: DataFrame, tgt_rules: DataFrame, keys: Sequence[str] = ()
-) -> DataFrame:
-    """Business-rule add/remove/modify keyed on name
-    (ontology_diff.py:463-534)."""
-    j = _outer(
-        src_rules.select(*keys, "name", "condition", "action",
-                         "classification", "description"),
-        tgt_rules.select(*keys, "name", "condition", "action",
-                         "classification", "description"),
-        keys,
-        ["name"],
-    )
-    s, t = F.col("s_name"), F.col("t_name")
-    lit_r = F.lit("rule")
-    path = _fmt("rule:", F.col("name"))
-
-    def summary(side: str) -> Column:
-        return _fmt(
-            "condition=", F.col(f"{side}_condition"),
-            ", action=", F.col(f"{side}_action"),
-        )
-
-    def field_change(field: str, detail: str):
-        sc, tc = F.col(f"s_{field}"), F.col(f"t_{field}")
-        return (
-            s.isNotNull() & t.isNotNull() & ~sc.eqNullSafe(tc),
-            "modified", lit_r, F.col("name"), _fmt(path, f".{field}"),
-            sc, tc, F.lit(detail),
-        )
-
-    return _emit(
-        j,
-        keys,
-        [
-            (s.isNull(), "added", lit_r, t, path, F.lit(None), summary("t"),
-             F.col("t_description")),
-            (t.isNull(), "removed", lit_r, s, path, summary("s"), F.lit(None),
-             F.col("s_description")),
-            field_change("condition", "Condition changed"),
-            field_change("action", "Action changed"),
-            field_change("classification", "Classification changed"),
-        ],
-    )
-
-
-def diff_metadata(
-    src_meta: DataFrame, tgt_meta: DataFrame, keys: Sequence[str] = ()
-) -> DataFrame:
-    """Metadata key/value diff (ontology_diff.py:536-574).
-    Inputs: (keys…, key, value)."""
-    j = _outer(src_meta, tgt_meta, keys, ["key"])
-    s, t = F.col("s_key"), F.col("t_key")
-    lit_m = F.lit("metadata")
-    path = _fmt("metadata:", F.col("key"))
-    return _emit(
-        j,
-        keys,
-        [
-            (s.isNull(), "added", lit_m, t, path, F.lit(None),
-             F.col("t_value"), F.lit("")),
-            (t.isNull(), "removed", lit_m, s, path, F.col("s_value"),
-             F.lit(None), F.lit("")),
-            (
-                s.isNotNull() & t.isNotNull()
-                & ~F.col("s_value").eqNullSafe(F.col("t_value")),
-                "modified", lit_m, F.col("key"), path,
-                F.col("s_value"), F.col("t_value"), F.lit(""),
-            ),
-        ],
+    ]
+    return j.select(
+        *keys, F.expr(f"inline(array_compact(array({', '.join(changes)})))")
     )
 
 
@@ -308,27 +163,24 @@ def diff_ontologies(
     tgt: dict[str, DataFrame],
     keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Full diff (ontology_diff.py:217-238): entities → properties →
-    relationships → rules → metadata, unioned into one changes DF."""
-    changes = diff_entities(src["entities"], tgt["entities"], keys)
-    changes = changes.unionByName(
-        diff_properties(
-            src["properties"], tgt["properties"],
-            src["entities"], tgt["entities"], keys,
-        )
-    )
-    changes = changes.unionByName(
-        diff_relationships(src["relationships"], tgt["relationships"], keys)
-    )
-    if "business_rules" in src and "business_rules" in tgt:
-        changes = changes.unionByName(
-            diff_rules(src["business_rules"], tgt["business_rules"], keys)
-        )
-    if "metadata" in src and "metadata" in tgt:
-        changes = changes.unionByName(
-            diff_metadata(src["metadata"], tgt["metadata"], keys)
-        )
-    return changes
+    """Full diff (ontology_diff.py:217-238) of every family whose frame
+    both sides carry, in FAMILIES order, unioned into one changes DF.
+    Properties are diffed within the entities common to both sides
+    (the reference never reports properties of added/removed
+    entities)."""
+    parts = []
+    for frame, fam in FAMILIES.items():
+        if frame not in src or frame not in tgt:
+            continue
+        s, t = src[frame], tgt[frame]
+        if frame == "properties":
+            on = [*keys, "entity"]
+            common = src["entities"].select(*on).join(
+                tgt["entities"].select(*on), on, "inner"
+            )
+            s, t = s.join(common, on, "left_semi"), t.join(common, on, "left_semi")
+        parts.append(_diff_family(fam, s, t, keys))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def diff_summary(changes: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
@@ -408,27 +260,23 @@ def merge_element_family(
     theirs: DataFrame,
     their_changes: DataFrame,
     conflicts: DataFrame,
-    element_type: str,
-    element_key: Sequence[str],
+    family: str,
     keys: Sequence[str] = (),
 ) -> DataFrame:
     """ours ∪ (theirs-ADDED elements whose path isn't conflicting) —
-    the reference merge strategy for every family
-    (ontology_diff.py:642-720, ours-priority)."""
+    the reference merge strategy (ontology_diff.py:642-720,
+    ours-priority) for the ``FAMILIES[family]`` element frames."""
+    fam = FAMILIES[family]
     added = (
         their_changes.where(
-            (F.col("element_type") == element_type)
+            (F.col("element_type") == fam.element_type)
             & (F.col("change_type") == "added")
         )
         .select(*keys, F.col("element_name"), "path")
         .join(conflicts.select(*keys, "path"), [*keys, "path"], "left_anti")
         .select(*keys, "element_name")
     )
-    key_expr = (
-        F.concat_ws("→", *[F.col(c) for c in element_key])
-        if len(element_key) > 1
-        else F.col(element_key[0])
-    )
+    key_expr = F.expr(list(fam.key.values())[-1])
     theirs_new = theirs.withColumn("_ek", key_expr).join(
         added.withColumnRenamed("element_name", "_ek"), [*keys, "_ek"], "left_semi"
     ).drop("_ek")
@@ -449,18 +297,10 @@ def merge_ontologies(
     conflicts = merge_conflicts(our_changes, their_changes, keys)
 
     merged = {
-        "entities": merge_element_family(
-            ours["entities"], theirs["entities"], their_changes, conflicts,
-            "entity", ["entity"], keys,
-        ),
-        "relationships": merge_element_family(
-            ours["relationships"], theirs["relationships"], their_changes,
-            conflicts, "relationship", ["from_entity", "to_entity"], keys,
-        ),
-        "business_rules": merge_element_family(
-            ours["business_rules"], theirs["business_rules"], their_changes,
-            conflicts, "rule", ["name"], keys,
-        ),
+        f: merge_element_family(
+            ours[f], theirs[f], their_changes, conflicts, f, keys
+        )
+        for f in ("entities", "relationships", "business_rules")
     }
     # properties follow their merged entities: ours' props + props of
     # entities newly adopted from theirs

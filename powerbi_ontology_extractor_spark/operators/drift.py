@@ -47,16 +47,6 @@ def create_bindings(
     return b
 
 
-def detect_source_type(physical_table: F.Column) -> F.Column:
-    """Source-type heuristic (schema_mapper.py:344-351)."""
-    lc = F.lower(physical_table)
-    return (
-        F.when(lc.contains("azure") | lc.contains("sql"), "azure_sql")
-        .when(lc.contains("fabric") | lc.contains("onelake"), "fabric")
-        .otherwise("sql")
-    )
-
-
 def validate_bindings(
     bindings: DataFrame, properties: DataFrame, keys: Sequence[str] = ()
 ) -> DataFrame:

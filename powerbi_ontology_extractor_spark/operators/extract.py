@@ -403,26 +403,22 @@ def extract_all(
 ) -> dict[str, DataFrame]:
     """Run the whole extraction stage; returns the model DataFrames.
 
-    ``models`` is persisted because five families derive from it
-    (the reference memoizes the parsed model the same way,
-    pbix_reader.py:118-127).
+    ``models`` is parsed once into an eager localCheckpoint because
+    every family derives from it (the reference memoizes the parsed
+    model the same way, pbix_reader.py:118-127); nothing is left cached.
 
     ``materialize=True`` additionally localCheckpoints every family —
     the stage-boundary pattern the full pipeline uses: the downstream
     triple-emission union fans out into ~40 branches, and without a
-    barrier each branch would re-scan the parsed-model cache (dozens of
+    barrier each branch would re-scan the parsed models (dozens of
     extra stages; at cluster scale this boundary is an Iceberg write,
     see plans/manifest).
     """
-    models = parse_models(corpus)
-    if materialize:
-        # materialize models BEFORE the family fan-out: the families
-        # checkpoint concurrently, and an unmaterialized cache gets
-        # stampeded — every concurrent job re-parses all model JSON
-        # (measured: 30-40 parses per artifact, anti-scaling)
-        models = models.localCheckpoint(eager=True)
-    else:
-        models = models.persist()
+    # materialized BEFORE the family fan-out: with materialize=True the
+    # families checkpoint concurrently, and a lazy cache gets stampeded
+    # — every concurrent job re-parses all model JSON (measured: 30-40
+    # parses per artifact, anti-scaling)
+    models = parse_models(corpus).localCheckpoint(eager=True)
     out = {
         "models": models,
         "entities": entities_df(models),
@@ -457,12 +453,10 @@ def extract_all(
 
 def ckpt_coalesce_target(df: DataFrame) -> int:
     """Partition target for stage-boundary checkpoints: ~core count,
-    PBI_KG_CKPT_PARTS overrides (A/B'd at 8/16/32 — no reliable win,
-    host noise dominates; keep the formula)."""
-    import os
-
+    clamped to [4, 64] (an A/B of fixed 8/16/32 showed no reliable win;
+    host noise dominates)."""
     cores = df.sparkSession.sparkContext.defaultParallelism
-    return int(os.environ.get("PBI_KG_CKPT_PARTS", str(max(min(cores, 64), 4))))
+    return max(min(cores, 64), 4)
 
 
 def checkpoint_one(d: DataFrame, target: int) -> DataFrame:

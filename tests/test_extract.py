@@ -153,6 +153,18 @@ def test_full_corpus_extraction_counts(spark):
     assert date_h["levels"] == ["Year", "Month", "Day"]
 
 
+def test_extract_all_leaves_models_uncached(spark):
+    """Models are parsed into an eager localCheckpoint in both modes:
+    the default mode leaves no cache behind that nothing unpersists."""
+    from pyspark import StorageLevel
+
+    c = corpus_df(spark, n_repos=2)
+    for materialize in (False, True):
+        dfs = extract_all(c, materialize=materialize)
+        assert dfs["models"].storageLevel == StorageLevel.NONE
+        assert dfs["entities"].count() == 12
+
+
 def test_corpus_determinism():
     from powerbi_ontology_extractor_spark.sources.corpus import synth_corpus_rows
 

@@ -22,7 +22,6 @@ ALLOWED = {
     ("operators.evaluation", "match_entities"),
     ("operators.evaluation", "match_relationships"),
     ("operators.evaluation", "match_triples"),
-    ("operators.drift", "detect_source_type"),
     ("operators.drift", "validate_bindings"),
     ("operators.drift", "drift_severity"),
     ("operators.ontology_io", "doc_datasets"),

@@ -174,6 +174,31 @@ def test_entity_structure_conflicts_hot_name_bounded(hot_props):
     assert r["dashboard1"] < r["dashboard2"]
 
 
+def test_measure_conflicts_hot_concept_capped(spark):
+    """One concept defined by two formulas in 3,000 dashboards each:
+    max_group=50 gives exactly the 50×50 pairs of each formula group's
+    50 smallest dashboards (a per-group prefix, not a hash sample)."""
+    n = 3000
+    rows = [
+        (f"{p}{i:05d}", "D", "T", "Total Sales", formula, "", "")
+        for p, formula in (("a", "SUM(T[x])"), ("b", "SUM(T[y])"))
+        for i in range(n)
+    ]
+    m = spark.createDataFrame(
+        rows,
+        "repo string, dataset string, table string, measure string, "
+        "dax_formula string, description string, folder string",
+    )
+    got = A.measure_conflicts(m, max_group=50).collect()
+    assert len(got) == 50 * 50
+    assert {(r["dashboard1"], r["dashboard2"]) for r in got} == {
+        (f"a{i:05d}/D", f"b{j:05d}/D") for i in range(50) for j in range(50)
+    }
+    assert {(r["definition1"], r["definition2"]) for r in got} == {
+        ("SUM(T[x])", "SUM(T[y])")
+    }
+
+
 def test_minhash_identical_docs_verify_distinct_pairs(spark):
     """500 identical documents collide in all 32 bands; each band's
     bucket is capped to the 200 smallest (string) ids.  The gram joins
